@@ -1,6 +1,6 @@
 """Benchmark harness (driver contract).
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
+Runs every registered query at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
@@ -37,7 +37,7 @@ def main() -> None:
     # the plan, not classloading.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
 
-    headline = [name for name in sorted(QUERIES) if name in HEADLINE] or sorted(QUERIES)
+    headline = sorted(QUERIES)
 
     # Per-query warmup at the smallest SF: compiles every plan's
     # whole-stage-codegen classes and JITs the hot paths so the
@@ -126,395 +126,6 @@ def main() -> None:
         pass  # a read-only checkout must not sink the bench
     spark.stop()
 
-
-# Headline set: one per operator family (SURVEY.md §2); grows as
-# batches land.  Unknown names are ignored so this list can lead the
-# implementation.
-HEADLINE = {
-    # round-8: completed to the FULL registry (369) so the per-round
-    # bench records every query, including the never-driver-verified
-    # window names; earlier rounds' 290-name totals compare via the
-    # matched per-query subset, not the grand total.
-    "q_anti",
-    "q_approx_distinct",
-    "q_argmin",
-    "q_asof_tolerance",
-    "q_cast",
-    "q_circular_mean",
-    "q_clip",
-    "q_collect_traj",
-    "q_concat_id",
-    "q_cond_agg",
-    "q_cube",
-    "q_cumcount",
-    "q_cumsum",
-    "q_diff",
-    "q_diff2",
-    "q_distinct",
-    "q_doc_fingerprint",
-    "q_dropna",
-    "q_dummy_encode",
-    "q_embed_centroid",
-    "q_embed_kmeans",
-    "q_embed_lsh_bucket",
-    "q_embed_norm",
-    "q_embed_quantize",
-    "q_except",
-    "q_fill",
-    "q_filter_finite",
-    "q_filter_range",
-    "q_fold_assign",
-    "q_group_mean_impute",
-    "q_grouping_sets",
-    "q_image_resize",
-    "q_intersect",
-    "q_json",
-    "q_lang_id",
-    "q_last_n",
-    "q_last_per_group",
-    "q_lead",
-    "q_ngram_jaccard",
-    "q_norm_by_max",
-    "q_pairwise_kernel",
-    "q_physics_baseline",
-    "q_pivot",
-    "q_project",
-    "q_quality_score",
-    "q_quantile_approx",
-    "q_rank_fns",
-    "q_repetition_score",
-    "q_rolling_time",
-    "q_salted_distinct",
-    "q_salted_join",
-    "q_scan_csv",
-    "q_scan_json",
-    "q_scan_orc",
-    "q_scan_parquet",
-    "q_scan_xml",
-    "q_self_join",
-    "q_semi",
-    "q_seq_prep",
-    "q_simhash",
-    "q_softmax_group",
-    "q_sort",
-    "q_str_parse",
-    "q_stream_dedup",
-    "q_stream_ewm",
-    "q_stream_join",
-    "q_stream_join_left",
-    "q_stream_mv_rollup",
-    "q_stream_python_source",
-    "q_stream_running_stats",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_static_join",
-    "q_stream_tumbling",
-    "q_team_stats",
-    "q_token_count",
-    "q_transform_sum",
-    "q_udtf_sentences",
-    "q_union_all",
-    "q_groupby_multi",
-    "q_join_inner",
-    "q_join_left",
-    "q_rmse",
-    "q_topn_global",
-    "q_distinct_agg",
-    "q_rollup",
-    "q_lag",
-    "q_rolling",
-    "q_ewm",
-    "q_ewm_multi",
-    "q_hypertable_rollup",
-    "q_topk_per_group",
-    "q_asof",
-    "q_asof_join",
-    "q_range_join",
-    "q_gnn_lite",
-    "q_ensemble_features",
-    "q_pairwise",
-    "q_dedup_exact",
-    "q_minhash_lsh",
-    "q_embed_cosine_topk",
-    "q_embed_ivf_topk",
-    "q_star_join",
-    "q_sessionize",
-    "q_quantile",
-    "q_stratified_sample",
-    "q_dedup_components",
-    "q_embed_neardup",
-    "q_multimodal_decode",
-    "q_frame_sample",
-    "q_vocab_topn",
-    "q_bigram_topn",
-    "q_tfidf_topk",
-    "q_decontaminate",
-    "q_zscore_outliers",
-    "q_winsorize",
-    "q_seq_pack",
-    "q_corpus_curate",
-    "q_corpus_mix",
-    "q_histogram",
-    "q_regex_scan",
-    "q_unpivot",
-    # re-admitted after bucketing the cogroup key (64 users per kernel
-    # call, merge_asof by=user_id inside): ~9 s → ~1 s at sf0.1, at
-    # parity with its relational twin q_asof_join.
-    "q_cogroup_asof",
-    "q_arrow_map",
-    # round-2 additions
-    "q_join_full",
-    "q_mode",
-    "q_map_ops",
-    "q_array_hof",
-    "q_split_assign",
-    "q_doc_chunk",
-    "q_redact",
-    "q_edit_distance",
-    "q_sketch_bounds",
-    "q_text_normalize",
-    "q_unigram_logprob",
-    "q_embed_project",
-    "q_scan_partitioned",
-    "q_merge_upsert",
-    "q_sql_text",
-    "q_ffill",
-    "q_resample",
-    "q_bucketed_join",
-    "q_group_corr",
-    "q_range_frame",
-    "q_explode_outer",
-    "q_asof_forward",
-    "q_dedup_apply",
-    "q_date_parts",
-    "q_char_entropy",
-    "q_funnel",
-    "q_retention",
-    "q_mad_outliers",
-    "q_scd2",
-    "q_cdc_apply",
-    "q_rolling_dau",
-    "q_gaps_islands",
-    "q_triangle_count",
-    "q_pagerank",
-    "q_gopher_rules",
-    "q_line_dedup",
-    "q_sample_exact_n",
-    "q_attribution",
-    "q_join_nullsafe",
-    "q_correlated_subquery",
-    "q_variant",
-    "q_recursive_cte",
-    "q_udaf_weighted_median",
-    "q_arrow_grouped",
-    "q_python_datasource",
-    "q_skew_audit",
-    "q_cdc_asof",
-    "q_seq_pattern",
-    "q_ship_priority",
-    "q_promo_share",
-    "q_unshipped_revenue",
-    "q_big_spenders",
-    "q_trade_volume",
-    "q_fuzzy_join",
-    "q_bm25",
-    "q_session_window",
-    "q_dpp_join",
-    "q_cluster_quality",
-    "q_crosstab",
-    "q_ab_test",
-    "q_interpolate",
-    "q_auc",
-    "q_calibration",
-    "q_psi",
-    "q_ndcg",
-    "q_mrr",
-    "q_ks_stat",
-    "q_confusion",
-    "q_revenue_by_nation",
-    "q_returned_customers",
-    "q_top_supplier",
-    "q_ohlc",
-    "q_data_profile",
-    "q_markov_transition",
-    "q_wow_growth",
-    "q_skyline",
-    "q_bitmap_distinct",
-    "q_setsim_join",
-    # decision-support completion (remaining TPC-H shapes)
-    "q_min_cost_supp",
-    "q_pending_priority",
-    "q_forecast_revenue",
-    "q_market_share",
-    "q_product_profit",
-    "q_top_value_parts",
-    "q_cust_order_dist",
-    "q_supplier_audit",
-    "q_small_qty_revenue",
-    "q_or_pushdown",
-    "q_late_supplier",
-    "q_idle_customers",
-    # ML-eval + distributed statistics (round 2)
-    "q_brier",
-    "q_logloss",
-    "q_pr_auc",
-    "q_lift",
-    "q_welch_ttest",
-    "q_ols_by_group",
-    "q_autocorr",
-    "q_cusum",
-    "q_degree_dist",
-    "q_link_predict",
-    "q_snapshot_diff",
-    "q_ttr",
-    "q_dataset_card",
-    "q_kmeans_step",
-    "q_ridge_fit",
-    "q_nth_value",
-    "q_path_topn",
-    "q_bfs_levels",
-    "q_stream_cdc_upsert",
-    "q_group_entropy",
-    "q_mutual_info",
-    "q_pandas_scalar",
-    "q_bpe_pairs",
-    "q_expanding",
-    "q_spearman",
-    "q_listagg",
-    "q_decimal_agg",
-    "q_interval_arith",
-    "q_geo_track",
-    "q_geo_join",
-    "q_observe",
-    "q_sql_param",
-    "q_schema_evolution",
-    "q_rfm",
-    "q_gini",
-    "q_pivot_multi",
-    "q_assoc_rules",
-    "q_benford",
-    "q_traj_similarity",
-    "q_dq_rules",
-    "q_logit_irls",
-    "q_survival",
-    "q_sql_udf",
-    "q_did",
-    "q_cohort_ltv",
-    "q_holt",
-    "q_seasonal_anomaly",
-    "q_max_drawdown",
-    "q_peak_concurrency",
-    "q_vwap",
-    "q_regex_tokens",
-    "q_interval_merge",
-    "q_shuffle_hash_join",
-    "q_equi_depth_hist",
-    "q_moments",
-    "q_dedup_stats",
-    # round-3 additions
-    "q_bigram_logprob",
-    "q_audio_features",
-    "q_image_decode",
-    "q_png_decode",
-    "q_ann_recall",
-    "q_stl_lite",
-    "q_pq_quantize",
-    "q_pq_search",
-    "q_zorder_cells",
-    "q_skipgram_pairs",
-    "q_percentiles_by_group",
-    "q_try_cast",
-    "q_sql_pipe",
-    "q_lateral_topk",
-    "q_minhash_error",
-    "q_udtf_polymorphic",
-    "q_target_encode",
-    "q_feature_hash",
-    "q_dsir_weights",
-    "q_gumbel_topk_resample",
-    "q_bpe_train",
-    "q_bpe_vocab",
-    "q_bpe_encode",
-    "q_pmi_cooccur",
-    "q_keyword_extract",
-    "q_ngram_novelty",
-    "q_label_propagation",
-    "q_kcore",
-    "q_mannwhitney",
-    "q_mv_incremental",
-    "q_spectral_bins",
-    "q_cms_topk",
-    "q_hll_audit",
-    "q_bloom_audit",
-    "q_knn_classify",
-    "q_neardup_threshold_sweep",
-    "q_twap",
-    "q_label_horizon",
-    "q_entity_resolution",
-    "q_minhash_containment",
-    "q_histogram_2d",
-    "q_shard_assign",
-    "q_xcorr_lags",
-    "q_emd_drift",
-    "q_audience_overlap",
-    "q_item_similarity",
-    "q_perplexity_bucket",
-    "q_heaps_law",
-    "q_zipf_fit",
-    "q_chi_square",
-    "q_changepoint",
-    "q_rsi",
-    "q_macro_f1",
-    "q_cohens_kappa",
-    "q_modularity",
-    "q_pgm_decode",
-    "q_anova",
-    "q_kendall_tau",
-    "q_holt_winters",
-    "q_naive_bayes",
-    "q_power_iteration",
-    "q_zonemap_audit",
-    "q_substring_dup",
-    "q_dedup_canonical",
-    "q_semdedup_ivf",
-    "q_asof_nearest",
-    "q_winnowing_fingerprint",
-    "q_matryoshka_recall",
-    "q_qoi_decode",
-    "q_leakage_audit",
-    "q_token_budget_trim",
-    "q_contrastive_pairs",
-    "q_als_step",
-    "q_bootstrap_ci",
-    "q_window_funnel",
-    "q_code_detect",
-    "q_temporal_split",
-    "q_log_histogram",
-    "q_stream_funnel",
-    "q_stream_tumbling_late",
-    "q_stream_funnel_late",
-    "q_stream_funnel_ttl",
-    "q_scalar_native",
-    "q_kmeans_iter2",
-    "q_semdedup",
-    "q_stream_session_dynamic",
-    "q_python_datasink",
-    "q_percentile_rank",
-    "q_seasonal_index",
-    "q_scan_text",
-    "q_gif_decode",
-    "q_scan_binary",
-    "q_dp_count",
-    "q_ri_audit",
-    "q_table_checksum",
-    "q_compaction_plan",
-    "q_except_all",
-    "q_intersect_all",
-    "q_sort_nulls",
-    "q_paginate",
-    "q_union_drift",
-    "q_embed_components",
-}
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -2831,7 +2831,7 @@ def q_equi_depth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact-percentile agg COLLECTS every value into its buffer;
     # on a one-split scan both it and the bucketing pass ran on one
     # core (spread_scan: no-op at scale)
-    o = spread_scan(table(spark, sf_dir, "orders"), probe_key=f"{sf_dir}/orders.parquet")
+    o = spread_scan(table(spark, sf_dir, "orders"))
     b = o.agg(
         F.round(F.expr("percentile(o_totalprice, 0.25)"), 4).alias("q1"),
         F.round(F.expr("percentile(o_totalprice, 0.50)"), 4).alias("q2"),

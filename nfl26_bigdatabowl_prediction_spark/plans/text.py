@@ -454,7 +454,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-character hash folds dominate: spread the one-split scan
     # (sources.io.spread_scan; no-op at cluster scale) — round-11
     # interleaved A/B 2.16 s -> 0.75 s at sf0.1
-    d = spread_scan(table(spark, sf_dir, "documents"), probe_key=f"{sf_dir}/documents.parquet")
+    d = spread_scan(table(spark, sf_dir, "documents"))
     return d.select(
         "doc_id",
         F.expr(portable_hash_sql_spark("text")).alias("fp"),
@@ -495,7 +495,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spread_scan(table(spark, sf_dir, "documents"), probe_key=f"{sf_dir}/documents.parquet")
+    d = spread_scan(table(spark, sf_dir, "documents"))
     # Filter on the cheap words count, NOT on size(shingles): a filter
     # on the shingle column gets predicate-pushed below the words
     # projection with the whole shingle expression inlined — which
@@ -653,7 +653,7 @@ def _simhash_sql(h: str, engine: str) -> tuple[str, str]:
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-token hash folds run scan-side: spread the one-split scan
-    d = spread_scan(table(spark, sf_dir, "documents"), probe_key=f"{sf_dir}/documents.parquet")
+    d = spread_scan(table(spark, sf_dir, "documents"))
     toks = d.select("doc_id", F.explode(F.expr(_WORDS_SPARK)).alias("w"))
     hashed = toks.select("doc_id", F.expr(portable_hash_sql_spark("w")).alias("h"))
     votes_sql, recombine_sql = _simhash_sql("h", "spark")
@@ -801,7 +801,7 @@ _CC_CTES, _CC_FINAL, _CC_AUDIT = _minlabel_cc_sql()
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
-    d = spread_scan(table(spark, sf_dir, "documents"), probe_key=f"{sf_dir}/documents.parquet")
+    d = spread_scan(table(spark, sf_dir, "documents"))
     edges = QUERIES["q_minhash_lsh"](spark, sf_dir).select("doc_a", "doc_b")
     comp = connected_components(
         d.select("doc_id"), edges, node_col="doc_id", src="doc_a", dst="doc_b"
@@ -2759,7 +2759,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # per-character hash fold over every word of every doc — the
     # heavy-scan-side shape spread_scan exists for (no-op at scale)
-    d = spread_scan(table(spark, sf_dir, "documents"), probe_key=f"{sf_dir}/documents.parquet")
+    d = spread_scan(table(spark, sf_dir, "documents"))
     hash_wd = (
         "aggregate(transform(sequence(1, length(wd)), "
         "i -> cast(ascii(substr(wd, i, 1)) as bigint)), "
@@ -4331,7 +4331,7 @@ _WINNOW_B = 10000  # position bound inside the packed argmin key
 )
 def q_winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-word hash folds run scan-side: spread the one-split scan
-    d = spread_scan(table(spark, sf_dir, "documents"), probe_key=f"{sf_dir}/documents.parquet")
+    d = spread_scan(table(spark, sf_dir, "documents"))
     w = _with_words(d, "doc_id").filter(F.size("words") >= 3)
     wh = w.select(
         "doc_id", F.size("words").alias("n_words"),

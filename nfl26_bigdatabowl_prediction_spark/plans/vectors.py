@@ -97,17 +97,18 @@ def _dot_duck(a: str, b: str) -> str:
 
 
 def _assert_no_reserved(df: DataFrame, reserved: tuple[str, ...]) -> None:
-    """Guard the argmin helpers' fixed internal column names (round-11
-    ADVICE): an input that already carries one of them would be
-    silently overwritten or made ambiguous by the withColumn/join
-    plumbing instead of erroring.  Driver-side schema check only — no
-    job, no plan change; current call sites all pass clean schemas."""
+    """Guard the column names the argmin helpers write — their fixed
+    internal plumbing columns and the caller's ``out_col``: an input
+    that already carries one of them would be silently overwritten or
+    made ambiguous by the withColumn/join plumbing instead of
+    erroring.  Driver-side schema check only — no job, no plan change;
+    current call sites all pass clean schemas."""
     hit = [c for c in df.columns if c in reserved]
     if hit:
         raise ValueError(
             f"argmin helper input carries reserved internal column(s) {hit}; "
             "rename them before calling (_sid/_se/_dss/_dvv/_cands/_dist/_w "
-            "are claimed by plans.vectors argmin plumbing)"
+            "and out_col are written by plans.vectors argmin plumbing)"
         )
 
 
@@ -159,7 +160,7 @@ def _argmin_assign(
     ``cell_key`` set, the inner join already drops rows of empty
     cells — the two branches agree with the window form it replaced.
     """
-    _assert_no_reserved(df, ("_sid", "_se", "_dss", "_dvv", "_cands"))
+    _assert_no_reserved(df, ("_sid", "_se", "_dss", "_dvv", "_cands", out_col))
     _assert_no_reserved(cents, ("_sid", "_se", "_dss", "_dvv", "_cands"))
     packed = cents.select(
         F.col(sid_col).alias("_sid"),
@@ -227,7 +228,9 @@ def _argmin_assign_agg(
     (here that matches the old window form, but callers should not
     rely on divergent empty-set behavior between the two helpers).
     """
-    _assert_no_reserved(df, ("_sid", "_se", "_dss", "_dvv", "_dist", "_w"))
+    _assert_no_reserved(
+        df, ("_sid", "_se", "_dss", "_dvv", "_dist", "_w", out_col)
+    )
     _assert_no_reserved(cents, ("_sid", "_se", "_dss", "_dvv", "_dist", "_w"))
     payload = [c for c in df.columns if c != key_col]
     packed = cents.select(
@@ -1128,7 +1131,7 @@ _SEMDEDUP_K = 32  # clusters SCALE with the corpus (SemDeDup's own knob:
     """,
 )
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spread_scan(table(spark, sf_dir, "embeddings"), probe_key=f"{sf_dir}/embeddings.parquet")
+    e = spread_scan(table(spark, sf_dir, "embeddings"))
     seeds = e.filter(F.col("vec_id") < _SEMDEDUP_K).select(
         F.col("vec_id").alias("sid"), F.col("embedding").alias("se")
     )

@@ -16,8 +16,11 @@ loader here returns a *lazy* DataFrame and never caches eagerly.
 
 from __future__ import annotations
 
+import glob as _glob
 import os
 import shutil
+from collections.abc import Callable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,10 +50,9 @@ def normalize_ts(df: DataFrame) -> DataFrame:
 
 
 def _file_key(path: str) -> tuple:
-    """Identity of a parquet path's CURRENT bytes: (path, mtime, size).
-    A rewrite in place changes mtime/size and invalidates the memo; a
-    different sf_dir is a different path.  stat failure (e.g. a remote
-    URI) disables memoization for that path rather than guessing."""
+    """Identity of a path's CURRENT bytes: (path, mtime, size).  A
+    rewrite in place changes mtime/size; a different sf_dir is a
+    different path.  Empty when ``stat`` fails (e.g. a remote URI)."""
     try:
         st = os.stat(path)
         return (path, st.st_mtime_ns, st.st_size)
@@ -58,45 +60,104 @@ def _file_key(path: str) -> tuple:
         return ()
 
 
-_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
-_SCHEMA_MEMO_ENABLED = True
+def _local_path(uri: str) -> str:
+    """``file:`` URI (as ``DataFrame.inputFiles`` reports) → local path;
+    any other scheme passes through and fails ``stat``."""
+    parsed = urlparse(uri)
+    return unquote(parsed.path) if parsed.scheme == "file" else uri
+
+
+def _confs(spark: SparkSession, names: tuple[str, ...]) -> tuple:
+    return tuple(spark.conf.get(name, None) for name in names)
+
+
+_MEMO: dict[tuple, object] = {}
+
+
+def _memo(files: list[str], inputs: tuple, compute: Callable[[], object]):
+    """The one process-lifetime memo for driver-side metadata.
+
+    Caches ``compute()`` under the identity of the ``files`` the value
+    is derived from plus every other ``inputs`` that change it (a tag
+    naming the value, the session confs it depends on).  A rewritten
+    file or a changed conf is a different key, so a stale value is
+    never served.  When there are no files, or any ``stat`` fails, the
+    value is computed and nothing is stored.
+
+    Values are metadata only (schemas, split counts, scratch paths);
+    every query still lists, reads and computes from the data at
+    execution.
+    """
+    ids = tuple(_file_key(f) for f in files)
+    if not ids or not all(ids):
+        return compute()
+    key = (ids, inputs)
+    if key not in _MEMO:
+        _MEMO[key] = compute()
+    return _MEMO[key]
+
+
+# session confs that change what parquet schema inference returns
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def parquet_schema(
+    spark: SparkSession, path: str, glob: str | None = None
+) -> T.StructType:
+    """The schema ``spark`` infers for the parquet at ``path`` (only the
+    files matching ``glob`` under it, when given), memoized on those
+    files' identity and the session's inference confs.
+
+    A bare ``spark.read.parquet(path)`` pays a driver-side footer read
+    and schema inference on every DataFrame construction; reading with
+    the memoized schema skips both.  The schema is the one inference
+    over the same bytes under the same confs would return.
+    """
+    reader = spark.read
+    files = [path]
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+        files = sorted(_glob.glob(os.path.join(path, glob)))
+    return _memo(
+        files,
+        ("schema", path, glob, _confs(spark, _SCHEMA_CONFS)),
+        lambda: reader.parquet(path).schema,
+    )
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic test table.  ``events.ts`` is normalized to
     int64 epoch-micros (normalize_ts).
 
-    The table's schema is memoized per (path, mtime, size) for the
-    life of the process (round 12, guide §6 metadata cost): a bare
-    ``spark.read.parquet(path)`` pays a driver-side footer read +
-    schema inference on EVERY DataFrame construction — measured
-    55-92 ms per call on this host vs 7-12 ms with an explicit schema
-    — and the bench constructs ~440 table scans per pass, so the
-    footer tax was ~25 s of every 270 s wall.  This caches METADATA
-    only (the column names/types the file itself declares, the same
-    thing a catalog table pins); every query still lists, reads and
-    computes from the parquet bytes at execution.  The key's
-    mtime/size component invalidates on any rewrite, so a changed
-    file is re-inferred, and the schema used is always the one
-    inference over the same bytes would produce.
+    Reads with the memoized footer schema (``parquet_schema``): a
+    repeated scan of an unchanged file costs no footer read.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # must be set BEFORE schema inference: int64-nanos ts surfaces
         # as bigint only under this conf (normalize_ts contract).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = _file_key(path) if _SCHEMA_MEMO_ENABLED else ()
-    schema = _SCHEMA_MEMO.get(key) if key else None
-    if schema is None:
-        df = spark.read.parquet(path)
-        if key:
-            _SCHEMA_MEMO[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     return normalize_ts(df) if name == "events" else df
 
 
-def spread_scan(df: DataFrame, probe_key: str | None = None) -> DataFrame:
+# session confs that change how many splits a file scan plans
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+
+def spread_scan(df: DataFrame) -> DataFrame:
     """Spread a scan across the cluster before CPU-heavy per-row work.
 
     A parquet file with one row group yields exactly ONE scan split no
@@ -113,33 +174,21 @@ def spread_scan(df: DataFrame, probe_key: str | None = None) -> DataFrame:
     for the hash-fold queries it is now scoped to.
 
     The split-count probe (``df.rdd.getNumPartitions()``) compiles the
-    scan to an RDD — measured ~95 ms of pure driver work per call — so
-    it is memoized per (path bytes-identity, defaultParallelism) when
-    the caller passes ``probe_key`` (round 12): the count is a pure
-    function of the file's bytes and the session's split confs, both
-    captured by the key.  Callers with per-invocation scratch paths
-    just omit the key and pay the probe.
+    scan to an RDD (~30-50 ms of driver work), so the count is memoized
+    on everything it depends on: the identity of the scanned files
+    (``df.inputFiles()``, ~1 ms), the plan (``semanticHash``),
+    ``defaultParallelism`` and the session's file-split confs.
     """
-    if not _SPREAD_ENABLED:  # A/B toggle for interleaved measurement
-        return df
-    sc = df.sparkSession.sparkContext
-    memo_key: tuple = ()
-    if probe_key is not None and _SCHEMA_MEMO_ENABLED:
-        fk = _file_key(probe_key)
-        if fk:
-            memo_key = (*fk, sc.defaultParallelism)
-    n_parts = _SPLIT_MEMO.get(memo_key) if memo_key else None
-    if n_parts is None:
-        n_parts = df.rdd.getNumPartitions()
-        if memo_key:
-            _SPLIT_MEMO[memo_key] = n_parts
-    if n_parts < sc.defaultParallelism // 2:
-        return df.repartition(sc.defaultParallelism)
+    spark = df.sparkSession
+    parallelism = spark.sparkContext.defaultParallelism
+    n_parts = _memo(
+        [_local_path(f) for f in df.inputFiles()],
+        ("splits", df.semanticHash(), parallelism, _confs(spark, _SPLIT_CONFS)),
+        lambda: df.rdd.getNumPartitions(),
+    )
+    if n_parts < parallelism // 2:
+        return df.repartition(parallelism)
     return df
-
-
-_SPREAD_ENABLED = True
-_SPLIT_MEMO: dict[tuple, int] = {}
 
 
 def events_asof(spark: SparkSession, sf_dir: str, cutoff_us: int) -> DataFrame:
@@ -153,7 +202,8 @@ def events_asof(spark: SparkSession, sf_dir: str, cutoff_us: int) -> DataFrame:
     well, so the semantics hold for any physical layout.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    path = f"{sf_dir}/events.parquet"
+    raw = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     kind = dict(raw.dtypes).get("ts")
     if kind == "bigint":
         # int64 epoch-NANOS layout: ts div 1000 <= X  ⟺  ts <= X*1000+999

@@ -15,7 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nfl26_bigdatabowl_prediction_spark.sources.io import normalize_ts
+from nfl26_bigdatabowl_prediction_spark.sources.io import (
+    normalize_ts,
+    parquet_schema,
+)
 
 # Streaming state-store instance count is pinned to
 # spark.sql.shuffle.partitions at the stream's FIRST micro-batch and
@@ -46,11 +49,6 @@ import weakref
 _TWINS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, SparkSession]]" = (
     weakref.WeakKeyDictionary()
 )
-
-# (resolved_dir, glob) → StructType from the parquet footer probe.
-# Fixture/ingest dirs are schema-stable for the life of a process (see
-# the in-function comment); entries are tiny (schemas, not data).
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
 
 
 def stream_exec_session(
@@ -144,21 +142,11 @@ def events_stream(
     table_dir = os.path.join(sf_dir, glob)
     if os.path.isdir(table_dir) and "*" not in glob:
         sf_dir, glob = table_dir, "*.parquet"
-    # Footer-probe once per (dir, glob) per process: the probe is a
-    # full batch-read plan (~0.2 s), and the bench/driver create the
-    # same stream 4x per query — re-probing every call was ~3 s of
-    # pure fixed overhead across the family.  Correctness stance: a
-    # production ingest directory DECLARES its schema (exactly what
-    # this explicit-schema reader models); files appended mid-session
-    # must match it, which is also Spark's own assumption for a
-    # running stream (schema is fixed at query start).
-    key = (sf_dir, glob)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = (
-            spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
-        )
-        _SCHEMA_CACHE[key] = schema
+    # The footer probe is a full batch-read plan (~0.2 s) and the
+    # bench creates the same stream 4x per query, so it goes
+    # through the schema memo — keyed on the matched files and THIS
+    # twin's inference confs, so a rewritten directory re-probes.
+    schema = parquet_schema(spark, sf_dir, glob)
     # The file stream source requires a *directory*; pathGlobFilter
     # selects just the events table out of the shared sf_dir.
     reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)

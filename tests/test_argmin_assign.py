@@ -148,6 +148,13 @@ def test_reserved_internal_names_are_rejected(spark, corpus):
     bad_cents = cents.withColumn("_cands", F.lit(1))
     with pytest.raises(ValueError, match="reserved internal column"):
         _argmin_assign(df, "embedding", bad_cents, "sid", "se", "sid")
+    # an existing out_col would be silently replaced by withColumn
+    with pytest.raises(ValueError, match="reserved internal column"):
+        _argmin_assign(df, "embedding", cents, "sid", "se", "vec_id")
+    with pytest.raises(ValueError, match="reserved internal column"):
+        _argmin_assign_agg(
+            df, "vec_id", "embedding", cents, "sid", "se", "embedding"
+        )
 
 
 def test_both_forms_agree(spark, corpus):

@@ -110,18 +110,6 @@ def test_driver_window_rotation_front_loads_pending():
     assert set(E._DRIVER_GREEN) == set(E._GREEN_ROUND) | set(E._ROWS_ONLY)
 
 
-def test_bench_headline_names_are_registered():
-    """bench.py ignores unknown HEADLINE names by design (the list may
-    lead the implementation); now that the surface is built, any
-    unknown name is a typo silently shrinking the benchmark — catch
-    it."""
-    import bench
-
-    qs = E.queries()
-    unknown = sorted(bench.HEADLINE - set(qs))
-    assert not unknown, f"HEADLINE names not in registry: {unknown}"
-
-
 def test_scalar_native_matches_pandas_udf_twin(spark, sf_dir):
     # U1 JVM-side migration (SURVEY §2.9): the built-in F.sin/F.exp
     # twin must agree with the Arrow pandas_udf kernel row-for-row

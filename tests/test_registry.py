@@ -1,5 +1,5 @@
 """Registry invariants: the wiring contracts between the query
-registry, the driver entry, and the bench HEADLINE set."""
+registry and the driver entry."""
 
 from __future__ import annotations
 
@@ -18,12 +18,6 @@ def test_rows_only_queries_are_the_declared_four():
         "q_approx_distinct", "q_embed_kmeans", "q_image_resize",
         "q_quantile_approx",
     ], rows_only
-
-
-def test_bench_headline_names_exist():
-    import bench
-
-    assert [n for n in bench.HEADLINE if n not in QUERIES] == []
 
 
 def test_driver_entry_window_is_unverified_first():
