@@ -407,10 +407,12 @@ def q_gnn_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J4 + A11 + A13 — pairwise within-frame interaction features
 # (nn-mps.py:321-426, add.txt): all (i,j) pairs inside a frame group,
 # i≠j, masked mean/min/max distances + nearest-neighbor attributes.
-# Relational form (equi-join on the group key) — oracle-checkable,
-# unlike the applyInPandas variant (operators/pairwise.py) which is
-# its physical alternative.  Base rows left-join the aggregates so
-# singleton groups keep their NULL row (nn-mps.py:326-353 NaN path).
+# Relational form (equi-join on the group key); its physical
+# alternative is the Arrow kernel q_pairwise_kernel
+# (operators/pairwise.py), checked against the same oracle.  This form
+# also serves nullable input, which the kernel refuses.  Base rows
+# left-join the aggregates so singleton groups keep their NULL row
+# (nn-mps.py:326-353 NaN path).
 # --------------------------------------------------------------------------
 @q(
     "q_pairwise",
@@ -729,12 +731,13 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# q_pairwise's grouped-map physical alternative (SURVEY §2.9 U3),
+# q_pairwise's Arrow-kernel physical alternative (SURVEY §2.9 U3),
 # judged against the IDENTICAL oracle: the |group|² fanout stays
 # inside a numpy matrix per bucket instead of materializing as join
-# rows — ~2x faster at this group width (~139 rows/bucket), and the
-# honest port of the reference's per-frame kernel (nn-mps.py:321-426).
-# Bitwise-equal to the relational plan (tests/test_pairwise_kernel.py).
+# rows, with one mapInArrow kernel call per bucket-sorted partition
+# (not one per bucket) — the honest port of the reference's per-frame
+# kernel (nn-mps.py:321-426).  Bitwise-equal to the relational plan
+# for every Arrow batch size (tests/test_pairwise_kernel.py).
 # --------------------------------------------------------------------------
 def q_pairwise_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pairwise import pairwise_features_grouped

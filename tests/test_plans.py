@@ -119,6 +119,23 @@ def test_ewm_single_shuffle(spark):
     assert _ops(plan).count("Exchange") == 1, plan
 
 
+def test_pairwise_kernel_one_hash_exchange_one_arrow_map(spark):
+    # One hash repartition on the bucket, one sort within partitions and
+    # ONE Arrow kernel call per partition — not a per-group pandas call,
+    # and no rebalance exchange (AQE may split a skewed rebalance
+    # partition, cutting a bucket in two).  Checked on the final AQE
+    # plan after execution.
+    df = QUERIES["q_pairwise_kernel"](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning\(bucket", plan)) == 1, plan
+    assert plan.count("Exchange") == 1, plan
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    assert "REBALANCE" not in plan, plan
+
+
 def test_heavy_hitter_queries_never_fully_sort(spark):
     # vocab/bigram top-50: the global LIMIT must compile to
     # TakeOrderedAndProject (per-partition 50-heaps), and the token
