@@ -1,4 +1,4 @@
-"""Exact distributed global ranking — two-level range-partitioned
+"""Exact distributed global ranking — range-partitioned positional
 row numbering, the scale-correct replacement for an unpartitioned
 ``ROW_NUMBER()/NTILE()`` window.
 
@@ -7,20 +7,38 @@ relation to one partition (Spark's WindowExec warning); fine on a
 bounded grid, fatal on a fact- or user-grain table at corpus scale.
 The exact alternative used here:
 
-1. ``repartitionByRange`` on the order key (a distributed sort —
+1. ``repartitionByRange`` on the order key, then
+   ``sortWithinPartitions`` on the same key (a distributed sort —
    Spark's range partitioner samples boundaries, but with a total
    order key the resulting RANK is boundary-invariant);
-2. per-partition ``row_number`` (window PARTITIONED by the physical
-   partition id — parallel);
+2. ``monotonically_increasing_id`` on the sorted rows, in the same
+   stage as the sort: the id is ``(partition << 33) + position``, so
+   its high bits are the range partition and its low 33 bits the
+   0-based row number inside it — positional numbering, no window
+   and no second shuffle;
 3. a partition-count-sized offset table (one row per partition:
    how many rows sort before it), cumulated with a tiny window whose
    input is bounded by ``spark.sql.shuffle.partitions`` — the
    q_token_budget_trim two-level prefix-sum shape;
-4. global rank = offset + local row number.
+4. global rank = offset + local position + 1.
+
+Steps 3 and 4 both read the numbered rows, so they are materialized
+once with ``localCheckpoint``.  Unmaterialized, each consumer would
+re-run the range exchange, and nothing guarantees the two runs sample
+the same boundaries (the sampler is seeded per execution) or that AQE
+coalesces them identically — diverging partition assignments between
+the join sides would produce silently wrong ranks.  After the
+checkpoint the id is plain column data held in the block manager, so
+both branches see one assignment by construction, without a columnar
+write and re-read of the sorted relation.  A local checkpoint has no
+lineage to recompute from: if an executor holding a block is lost,
+the next read fails the job with Spark's "Checkpoint block ... not
+found" error instead of re-sampling boundaries and numbering a
+different partitioning.  The id layout caps a partition at 2^33 rows.
 
 The caller must pass a TOTAL order (append a unique tiebreak column)
-— equal keys across a partition boundary would otherwise make local
-numbering ambiguous.
+— equal keys would otherwise make the position, and so the rank,
+depend on the input order.
 
 ``ntile_from_rank`` reproduces SQL NTILE(k) exactly from (rank, n):
 the first ``n % k`` buckets take ``n//k + 1`` rows.  All-integer
@@ -34,6 +52,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+# monotonically_increasing_id's layout: partition index above bit 33
+_POS_BITS = 33
+# columns exact_global_rank writes next to the caller's
+_INTERNAL = ("_pos", "_pid", "_off")
+
 
 def exact_global_rank(
     df: DataFrame,
@@ -43,34 +66,34 @@ def exact_global_rank(
 ) -> DataFrame:
     """Append ``rank_col`` = 1-based global row number under
     ``order`` (which must be a total order) without ever moving the
-    relation to a single partition."""
+    relation to a single partition.
+
+    Raises ``ValueError`` when ``df`` already has ``rank_col`` or one
+    of the internal column names, which would otherwise be silently
+    overwritten or dropped."""
+    clash = [c for c in df.columns if c in (*_INTERNAL, rank_col)]
+    if clash:
+        raise ValueError(
+            f"exact_global_rank input already has column(s) {clash}; "
+            f"rename them before calling ({', '.join(_INTERNAL)} and "
+            "rank_col are written by the ranking)"
+        )
     parted = (
         df.repartitionByRange(partitions, *order)
         if partitions
         else df.repartitionByRange(*order)
-    ).withColumn("_pid", F.spark_partition_id())
-    # Materialize the range partitioning ONCE.  `local` and `offsets`
-    # both consume `parted`; unmaterialized, each consumer re-runs the
-    # range exchange, and nothing guarantees the two runs sample the
-    # same boundaries (the sampler is seeded per-execution) or that AQE
-    # coalesces the no-`partitions` path identically — diverging `_pid`
-    # assignments between the join sides would produce silently wrong
-    # ranks.  After the round-trip `_pid` is plain column data, so both
-    # branches see the identical assignment by construction.  At
-    # cluster scale this is one columnar staging pass of the already-
-    # shuffled relation — the same cost class as the sort shuffle
-    # itself, and the price of determinism for an exact global rank.
-    from ..scratch import checkpoint_parquet
-
-    parted = checkpoint_parquet(parted, "rank_parted_")
-    local = parted.withColumn(
-        "_rn", F.row_number().over(W.partitionBy("_pid").orderBy(*order))
+    )
+    numbered = (
+        parted.sortWithinPartitions(*order)
+        .withColumn("_pos", F.monotonically_increasing_id())
+        .localCheckpoint()
+        .withColumn("_pid", F.shiftright("_pos", _POS_BITS))
     )
     # one row per partition; the cumulative window input is bounded by
     # the shuffle-partition count (plan contract: bounded-domain
     # unpartitioned window, q_token_budget_trim precedent)
     offsets = (
-        parted.groupBy("_pid")
+        numbered.groupBy("_pid")
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .withColumn(
             "_off",
@@ -83,10 +106,11 @@ def exact_global_rank(
         )
         .select("_pid", "_off")
     )
+    local = F.col("_pos").bitwiseAND(F.lit((1 << _POS_BITS) - 1))
     return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(rank_col, (F.col("_off") + F.col("_rn")).cast("bigint"))
-        .drop("_pid", "_rn", "_off")
+        numbered.join(F.broadcast(offsets), "_pid")
+        .withColumn(rank_col, (F.col("_off") + local + 1).cast("bigint"))
+        .drop(*_INTERNAL)
     )
 
 

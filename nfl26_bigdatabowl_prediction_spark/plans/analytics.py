@@ -12,7 +12,7 @@ for its own keyed aggregation; no windows over the raw feed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.portable import (
@@ -1050,15 +1050,19 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RFM segmentation — recency / frequency / monetary quintile scores
 # per user, the classic CRM partitioning.  Round 6 removed the three
 # single-partition NTILE windows (the round-5 verdict's ONE
-# conditional allowlist entry): each score now rides
+# conditional allowlist entry): the scores ride
 # operators/ranking.exact_global_rank — a range-repartitioned
-# two-level row numbering whose only unpartitioned window is the
+# positional row numbering whose only unpartitioned window is the
 # partition-count-sized offset table — and ntile_from_rank, the
 # exact all-integer NTILE(5) reconstruction.  The DuckDB oracle still
 # says NTILE(5): the rewrite is plan-only, and the unchanged oracle
-# is the regression proof.  Scale: user-grain relation never
-# single-partitions; 3 range shuffles + user-keyed joins, all
-# user-grain; the 1-row user count broadcasts (allowlisted scalar).
+# is the regression proof.  The three keys are stacked into
+# (user_id, m, k) rows and ranked ONCE by (m, k DESC, user_id): each
+# metric has exactly n rows, so a metric-m row's rank within its own
+# metric is its global rank minus m·n.  Scale: user-grain relation
+# never single-partitions; one range shuffle (3n rows) + one
+# user-keyed pivot, all user-grain; the 1-row user count broadcasts
+# (allowlisted scalar).
 # --------------------------------------------------------------------------
 @q(
     "q_rfm",
@@ -1082,41 +1086,47 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import exact_global_rank, ntile_from_rank
-    from ..scratch import checkpoint_parquet
 
     ev = table(spark, sf_dir, "events")
     vc = F.round(F.col("value") * 100, 0).cast("bigint")
+    # k0 = recency (ts is int64 micros), k1 = frequency, k2 = monetary
     per_user = ev.groupBy("user_id").agg(
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).alias("freq"),
-        F.sum(vc).alias("monetary_c"),
+        F.max("ts").alias("k0"),
+        F.count(F.lit(1)).alias("k1"),
+        F.sum(vc).alias("k2"),
     )
-    # four consumers (three rankings + the output columns): checkpoint
-    # the user rollup once instead of re-scanning the fact table
-    per_user = checkpoint_parquet(per_user, "rfm_")
-
-    def score(order_col: str, name: str) -> DataFrame:
-        ranked = exact_global_rank(
-            per_user.select("user_id", order_col),
-            F.desc(order_col),
-            F.col("user_id"),
-            rank_col="_r",
-        )
-        return ranked.select("user_id", F.col("_r").alias(name))
-
-    n1 = per_user.agg(F.count(F.lit(1)).alias("_n"))
-    out = (
-        per_user.join(score("last_ts", "_rr"), "user_id")
-        .join(score("freq", "_fr"), "user_id")
-        .join(score("monetary_c", "_mr"), "user_id")
-        .crossJoin(F.broadcast(n1))
-    )
-    n = F.col("_n")
-    return out.select(
+    stacked = per_user.select(
         "user_id",
-        ntile_from_rank(F.col("_rr"), n, 5).alias("r_score"),
-        ntile_from_rank(F.col("_fr"), n, 5).alias("f_score"),
-        ntile_from_rank(F.col("_mr"), n, 5).alias("m_score"),
+        F.explode(
+            F.array(
+                *(F.struct(F.lit(m).alias("m"), F.col(f"k{m}").alias("k"))
+                  for m in range(3))
+            )
+        ).alias("_s"),
+    ).select("user_id", "_s.m", "_s.k")
+    ranked = exact_global_rank(
+        stacked, F.col("m"), F.desc("k"), F.col("user_id"), rank_col="_r"
+    )
+
+    def pick(m: int, col: str) -> Column:
+        return F.max(F.when(F.col("m") == m, F.col(col)))
+
+    wide = ranked.groupBy("user_id").agg(
+        pick(0, "_r").alias("_r0"),
+        pick(1, "_r").alias("_r1"),
+        pick(2, "_r").alias("_r2"),
+        pick(1, "k").alias("freq"),
+        pick(2, "k").alias("monetary_c"),
+    )
+    # n = the last recency rank; reading it off ``ranked`` reuses the
+    # ranking's broadcast offset table instead of re-aggregating users
+    n1 = ranked.where(F.col("m") == 0).agg(F.max("_r").alias("_n"))
+    n = F.col("_n")
+    return wide.crossJoin(F.broadcast(n1)).select(
+        "user_id",
+        ntile_from_rank(F.col("_r0"), n, 5).alias("r_score"),
+        ntile_from_rank(F.col("_r1") - n, n, 5).alias("f_score"),
+        ntile_from_rank(F.col("_r2") - 2 * n, n, 5).alias("m_score"),
         F.col("freq").cast("bigint").alias("freq"),
         (F.col("monetary_c").cast("bigint") / 100.0).alias("monetary"),
     )

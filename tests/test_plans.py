@@ -136,6 +136,44 @@ def test_pairwise_kernel_one_hash_exchange_one_arrow_map(spark):
     assert "REBALANCE" not in plan, plan
 
 
+def _executed_nodes(spark, run) -> list[str]:
+    """Node descriptions of the final (AQE) physical plans of every SQL
+    execution ``run()`` starts, read from the SQL status store — the
+    build-time jobs a query launches (checkpoints) included."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next().executionId()
+
+    before = set(executions())
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    out = []
+    for eid in executions():
+        if eid not in before:
+            nodes = store.planGraph(eid).allNodes().iterator()
+            while nodes.hasNext():
+                out.append(nodes.next().desc())
+    return out
+
+
+def test_rfm_ranks_with_one_range_shuffle(spark):
+    # q_rfm stacks its three keys and ranks them in ONE
+    # exact_global_rank: one range exchange over the whole run (build
+    # included), positional numbering instead of a row_number window
+    # over the partition id, and an in-memory checkpoint instead of a
+    # scratch-parquet round trip.
+    nodes = _executed_nodes(
+        spark, lambda: QUERIES["q_rfm"](spark, SF_DIR).collect()
+    )
+    text = "\n".join(nodes)
+    assert sum(d.startswith("Exchange rangepartitioning") for d in nodes) == 1, text
+    assert not re.search(r"windowspecdefinition\(_pid#\d+L?,", text), text
+    assert not re.search(r"/(rank_parted_|rfm_)\w*/", text), text
+
+
 def test_heavy_hitter_queries_never_fully_sort(spark):
     # vocab/bigram top-50: the global LIMIT must compile to
     # TakeOrderedAndProject (per-partition 50-heaps), and the token
@@ -298,11 +336,11 @@ def test_no_query_compiles_to_nested_loop_or_cartesian(spark):
 #   q_heaps_law/q_zipf_fit/q_unigram_logprob/q_naive_bayes
 #                           vocabulary-bounded rows
 #   q_perplexity_bucket     bucket-grid NTILE (documented swap)
-#   q_rfm                   partition-count-sized offset tables of the
-#                           three exact_global_rank calls (the former
+#   q_rfm                   partition-count-sized offset table of its
+#                           one exact_global_rank call (the former
 #                           conditional entry — round 6 replaced its
-#                           user-grain NTILE windows with two-level
-#                           range-partitioned ranking; what remains
+#                           user-grain NTILE windows with range-
+#                           partitioned positional ranking; what remains
 #                           unpartitioned is bounded by
 #                           spark.sql.shuffle.partitions)
 #   q_skyline               dominance-pruned candidate set
