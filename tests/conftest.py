@@ -2,8 +2,9 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
+
+from tools.driver_sim import oracle_db
 
 # Default to the DRIVER's verification scale (sf0.01): round 1's
 # q_except vacuity slipped through because the local differential ran
@@ -11,11 +12,6 @@ import pytest
 # SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.001 for a faster local
 # iteration loop.
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 @pytest.fixture(scope="session")
@@ -28,11 +24,7 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_db(SF_DIR)
     yield con
     con.close()
 

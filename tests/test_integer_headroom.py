@@ -4,8 +4,8 @@
 The round-8 8x full-registry differential exposed three honest
 boundaries of the integer-exact oracle strategy; each fix is pinned
 here ON THE REGISTERED QUERY by synthesizing a table that sits PAST
-the boundary at unit-test size, then running the driver's own
-DuckDB differential (tests/oracle_check.compare) against it:
+the boundary at unit-test size, then running the repo's one result
+comparator (tools/driver_sim.check) over a DuckDB oracle of it:
 
 - q_group_corr: power sums past int64 (sum of ~6e18 squares) must
   accumulate in DECIMAL(38,0) / int128.
@@ -18,28 +18,19 @@ DuckDB differential (tests/oracle_check.compare) against it:
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import __spark_entry__ as E
-from .oracle_check import compare
+from tools.driver_sim import check, oracle_db
 
 pytestmark = pytest.mark.usefixtures("spark")
 
 
-def _differential(spark, name: str, sf_dir: str, tables: list[str]) -> None:
+def _differential(spark, name: str, sf_dir: str) -> None:
     qs, osql = E.queries(), E.oracle_sql()
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet/*.parquet'"
-        )
-    problems = compare(
-        name,
-        qs[name](spark, sf_dir).toPandas(),
-        con.execute(osql[name]).fetchdf(),
-    )
-    assert problems == []
+    with oracle_db(sf_dir) as con:
+        ok, msg, _ = check(name, qs[name], osql[name], spark, con, sf_dir)
+    assert ok, f"{name}: {msg}"
 
 
 def test_group_corr_power_sums_survive_int64(spark, tmp_path):
@@ -57,7 +48,7 @@ def test_group_corr_power_sums_survive_int64(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_returnflag string, l_quantity double, l_extendedprice double"
     ).coalesce(1).write.parquet(f"{sf}/lineitem.parquet")
-    _differential(spark, "q_group_corr", sf, ["lineitem"])
+    _differential(spark, "q_group_corr", sf)
 
 
 def test_spearman_rank_products_survive_int32(spark, tmp_path):
@@ -87,7 +78,7 @@ def test_spearman_rank_products_survive_int32(spark, tmp_path):
     }
     assert out["click"]["n"] == n
     assert out["click"]["spearman_rho"] == 1.0
-    _differential(spark, "q_spearman", sf, ["events"])
+    _differential(spark, "q_spearman", sf)
 
 
 def test_ols_power_sums_survive_int64(spark, tmp_path):
@@ -111,8 +102,8 @@ def test_ols_power_sums_survive_int64(spark, tmp_path):
     spark.createDataFrame(pdf).coalesce(1).write.parquet(
         f"{tmp_path}/events.parquet"
     )
-    _differential(spark, "q_ols_by_group", str(tmp_path), ["events"])
-    _differential(spark, "q_welch_ttest", str(tmp_path), ["events"])
+    _differential(spark, "q_ols_by_group", str(tmp_path))
+    _differential(spark, "q_welch_ttest", str(tmp_path))
 
 
 def test_expanding_mean_rounds_half_away_on_exact_tie(spark, tmp_path):
@@ -144,4 +135,4 @@ def test_expanding_mean_rounds_half_away_on_exact_tie(spark, tmp_path):
     ]
     assert len(last) == 1
     assert last[0]["exp_mean"] == 0.020313
-    _differential(spark, "q_expanding", sf, ["events"])
+    _differential(spark, "q_expanding", sf)

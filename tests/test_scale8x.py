@@ -6,9 +6,9 @@ family: the Arrow chunk-split ordering bug (wrong funnel stages for
 INVISIBLE at driver scale and surfaced only in the 8x differential
 (MEASURED.md round-8).  This lane re-runs the ~20 scale-sensitive
 names — streaming state machines, component/dedup graphs, global
-ranking, exact integer statistics — against the 8x derivative with
-the driver-faithful canonicalization from tools/driver_sim, so a
-round close catches that bug class a round earlier.
+ranking, exact integer statistics — against the 8x derivative
+through the repo's one result comparator, tools/driver_sim.check, so
+a round close catches that bug class a round earlier.
 
 Setup (once per derivative rebuild, ~2 min each):
 
@@ -23,12 +23,12 @@ default suite (pytest.ini deselects the marker) never pays for this.
 
 from __future__ import annotations
 
-import importlib.util
 import os
-import sys
 
-import duckdb
 import pytest
+
+from nfl26_bigdatabowl_prediction_spark.plans.registry import ORACLES, QUERIES
+from tools.driver_sim import check, oracle_db
 
 pytestmark = pytest.mark.scale8x
 
@@ -84,55 +84,11 @@ HONEST_NAMES = (
     "q_semdedup_ivf",
 )
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _load_driver_sim():
-    spec = importlib.util.spec_from_file_location(
-        "driver_sim", os.path.join(_REPO, "tools", "driver_sim.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-@pytest.fixture(scope="module")
-def sim():
-    return _load_driver_sim()
-
-
-@pytest.fixture(scope="module")
-def registry():
-    sys.path.insert(0, _REPO)
-    import __spark_entry__ as entry
-
-    return entry.queries(), entry.oracle_sql()
-
-
-def _duck_for(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    con.execute("SET memory_limit='40GB'")
-    import tempfile
-
-    con.execute(
-        f"SET temp_directory='{tempfile.mkdtemp(prefix='duckdb_8x_spill_')}'"
-    )
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        path = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
-
-
 @pytest.fixture(scope="module")
 def duck_mirror():
     if not os.path.isdir(MIRROR):
         pytest.skip(f"{MIRROR} absent — run: python tools/make_8x.py")
-    con = _duck_for(MIRROR)
+    con = oracle_db(MIRROR)
     yield con
     con.close()
 
@@ -143,24 +99,22 @@ def duck_honest():
         pytest.skip(
             f"{HONEST} absent — run: python tools/make_8x_honest.py"
         )
-    con = _duck_for(HONEST)
+    con = oracle_db(HONEST)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("name", MIRROR_NAMES)
-def test_bitwise_at_8x(name, sim, registry, duck_mirror, spark):
-    queries, oracles = registry
-    ok, msg, _ = sim.check(
-        name, queries[name], oracles[name], spark, duck_mirror, MIRROR
+def test_bitwise_at_8x(name, duck_mirror, spark):
+    ok, msg, _ = check(
+        name, QUERIES[name], ORACLES[name], spark, duck_mirror, MIRROR
     )
     assert ok, f"{name} at 8x: {msg}"
 
 
 @pytest.mark.parametrize("name", HONEST_NAMES)
-def test_bitwise_at_8x_honest(name, sim, registry, duck_honest, spark):
-    queries, oracles = registry
-    ok, msg, _ = sim.check(
-        name, queries[name], oracles[name], spark, duck_honest, HONEST
+def test_bitwise_at_8x_honest(name, duck_honest, spark):
+    ok, msg, _ = check(
+        name, QUERIES[name], ORACLES[name], spark, duck_honest, HONEST
     )
     assert ok, f"{name} at 8x (ts-shifted honest derivative): {msg}"

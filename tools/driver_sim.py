@@ -1,46 +1,91 @@
-"""Simulate the driver's CORRECTNESS check more faithfully than the
-local bitwise differential.
+"""The one result comparator: does a Spark query equal its DuckDB oracle?
 
-The local check (`tests/oracle_check.py`) compares ``toPandas()``
-frames, where pandas collapses NULL doubles to NaN and erases the
-int-vs-float distinction inside object columns.  The driver instead
-hashes ``collect()`` rows, where a SQL NULL is ``None`` (never NaN)
-and a value's Python type rides along — so a Spark DOUBLE NULL vs a
-DuckDB NaN, or a DuckDB DECIMAL/HUGEINT vs a Spark BIGINT, diverge at
-the driver even when the local check passes (this is exactly how
-q_pivot/q_hypertable_rollup went driver-red in round 1).
+Every Spark-vs-DuckDB check in the repo goes through ``check`` here —
+the registry differential (``tests/test_oracle.py``), the integer
+head-room regressions, the opt-in 8x lane and the manual full sweep
+below.  It compares raw ``collect()`` / ``fetchall()`` rows, never
+pandas frames, because the driver hashes raw rows: a SQL NULL is
+``None`` (never NaN) and each value's Python type rides along.
 
-This tool re-runs any slice of the registry with a *type-tagged*
-canonical representation of raw collect()/fetchall() rows:
+Three things must match, in order:
 
-    int-family   -> ("i", value)           (int, numpy ints, HUGEINT)
-    float-family -> ("f", repr(float))     (NaN kept distinct from None)
-    Decimal      -> ("d", str)             (flags DECIMAL-typed oracles)
-    None         -> ("0",)
-    date/ts      -> ("t", isoformat)
-    list/array/map -> DriverIncompatibleType (the driver's pandas
-                   lexsort crashes on these — round-8 q_embed_quantize)
+1. column names (order-insensitive) and row count;
+2. the type family of every column, Spark schema against the oracle's
+   declared types (``_FAMILY``: int, float, decimal, bool, string,
+   binary, date/time).  HUGEINT, UBIGINT and every other unmapped type
+   is a family of its own, so it always mismatches, loudly: DuckDB's
+   ``sum(bigint)`` is a HUGEINT whose rows fetch as Python ints equal
+   to Spark's BIGINT, yet the driver's value hash tells the two apart
+   (round-1 q_pivot);
+3. the row multisets, after ``canon_rows`` sorts columns by name and
+   type-tags each cell with ``tag``:
 
-Usage:
+       int-family   -> ("i", value)           (int, numpy ints)
+       float-family -> ("f", repr(float))     (NaN kept distinct from None)
+       Decimal      -> ("d", str)
+       None         -> ("0",)
+       date/ts      -> ("t", isoformat)
+       list/array/map -> DriverIncompatibleType (the driver's pandas
+                      lexsort crashes on these — round-8 q_embed_quantize)
+
+   so floats must agree bitwise; one ulp apart is a failure.
+
+``oracle_db`` is the one DuckDB setup the checks run against.
+
+Usage (from the repository root, so Python workers import this
+checkout's package):
     python tools/driver_sim.py [--window N] [--sf DIR] [name ...]
 """
 
 from __future__ import annotations
 
 import argparse
+import atexit
 import datetime
 import decimal
 import math
+import os
+import shutil
 import sys
+import tempfile
 import time
 
 import duckdb
 import numpy as np
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+# Spark ``DataType.typeName()`` and DuckDB ``DuckDBPyType.id`` → family.
+# Where the two engines spell a type the same way they mean the same
+# family, so one table serves both sides.
+_FAMILY = {
+    **dict.fromkeys(
+        ("byte", "short", "integer", "long", "tinyint", "smallint", "bigint"),
+        "int",
+    ),
+    **dict.fromkeys(("float", "double"), "float"),
+    "decimal": "decimal",
+    "boolean": "bool",
+    **dict.fromkeys(("string", "varchar", "char"), "string"),
+    **dict.fromkeys(("binary", "blob"), "binary"),
+    **dict.fromkeys(
+        (
+            "date", "timestamp", "timestamp_ntz", "timestamp with time zone",
+            "timestamp_s", "timestamp_ms", "timestamp_ns",
+        ),
+        "datetime",
+    ),
+}
+
+
+def _family(engine, type_name):
+    # an unmapped type is tagged with its engine, so it matches nothing
+    return _FAMILY.get(type_name, f"{engine} {type_name}")
 
 
 class DriverIncompatibleType(Exception):
@@ -99,14 +144,26 @@ def check(name, qfn, sql, spark, duck, sf_dir):
     t0 = time.time()
     sdf = qfn(spark, sf_dir)
     s_cols = sdf.columns
+    s_types = {f.name: f.dataType for f in sdf.schema.fields}
     s_rows = [tuple(r) for r in sdf.collect()]
-    o_rows = duck.execute(sql).fetchall()
-    o_cols = [d[0] for d in duck.description]
+    rel = duck.sql(sql)
+    o_cols = rel.columns
+    o_types = dict(zip(o_cols, rel.types))
+    o_rows = rel.fetchall()
     wall = time.time() - t0
     if sorted(s_cols) != sorted(o_cols):
         return False, f"columns spark={sorted(s_cols)} oracle={sorted(o_cols)}", wall
     if len(s_rows) != len(o_rows):
         return False, f"rows spark={len(s_rows)} oracle={len(o_rows)}", wall
+    for c in sorted(s_cols):
+        st, ot = s_types[c], o_types[c]
+        if _family("spark", st.typeName()) != _family("duckdb", ot.id):
+            return (
+                False,
+                f"col {c}: type family spark={st.simpleString()} oracle={ot} "
+                "(the driver's value hash is type-sensitive — cast the oracle SQL)",
+                wall,
+            )
     _, a = canon_rows(s_cols, s_rows)
     cols, b = canon_rows(o_cols, o_rows)
     if a == b:
@@ -123,6 +180,31 @@ def check(name, qfn, sql, spark, duck, sf_dir):
     return False, "row multiset differs (ordering-invisible)", wall
 
 
+def oracle_db(sf_dir):
+    """One DuckDB connection with a view per table present under sf_dir."""
+    duck = duckdb.connect()
+    # Cap the in-process oracle: an unbounded DuckDB buffer pool ran
+    # the whole host to a 125 GB OOM kill on a 64x-scale window oracle
+    # (q_ohlc) — with a limit + temp dir it spills to disk instead.
+    duck.execute("SET memory_limit='40GB'")
+    # Per-process spill dir: a fixed shared path risks temp-file
+    # collisions between concurrent runs and orphans spill files after
+    # a crash (round-9 ADVICE).
+    spill = tempfile.mkdtemp(prefix="duckdb_oracle_spill_")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    duck.execute(f"SET temp_directory='{spill}'")
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        # Spark-written tables (the 8x derivatives, test fixtures) are
+        # directories of part files; the driver's fixtures single files
+        if os.path.isdir(path):
+            path = f"{path}/*.parquet"
+        elif not os.path.exists(path):
+            continue
+        duck.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return duck
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -131,7 +213,7 @@ def main():
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
     from nfl26_bigdatabowl_prediction_spark.session import get_spark
 
@@ -142,36 +224,13 @@ def main():
         names = names[: args.window]
 
     spark = get_spark(app_name="driver-sim", shuffle_partitions=8)
-    duck = duckdb.connect()
-    # Cap the in-process oracle: an unbounded DuckDB buffer pool ran
-    # the whole host to a 125 GB OOM kill on a 64x-scale window oracle
-    # (q_ohlc) — with a limit + temp dir it spills to disk instead.
-    duck.execute("SET memory_limit='40GB'")
-    # Per-process spill dir: a fixed shared path risks temp-file
-    # collisions between concurrent driver_sim runs and orphans spill
-    # files after a crash (round-9 ADVICE).
-    import atexit
-    import shutil
-    import tempfile
+    duck = oracle_db(args.sf)
 
-    spill = tempfile.mkdtemp(prefix="duckdb_sim_spill_")
-    atexit.register(shutil.rmtree, spill, ignore_errors=True)
-    duck.execute(f"SET temp_directory='{spill}'")
-    for t in TABLES:
-        # the /tmp 8x/64x derivatives are Spark-written DIRECTORY
-        # parquet (part files under <table>.parquet/); the driver's
-        # fixtures are single files — glob accordingly
-        path = f"{args.sf}/{t}.parquet"
-        import os as _os
-
-        if _os.path.isdir(path):
-            path = f"{path}/*.parquet"
-        duck.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-
-    n_fail = 0
+    n_fail = n_skip = 0
     for name in names:
         if name not in oracles or not oracles[name]:
             print(f"SKIP  {name} (no oracle)")
+            n_skip += 1
             continue
         try:
             ok, msg, wall = check(
@@ -183,7 +242,8 @@ def main():
         if not ok:
             n_fail += 1
         print(f"{status}  {name:28s} {wall:6.2f}s  {msg}")
-    print(f"\n{n_fail} failures / {len(names)} checked")
+    n_checked = len(names) - n_skip
+    print(f"\n{n_fail} failures / {n_checked} checked, {n_skip} skipped (no oracle)")
     sys.exit(1 if n_fail else 0)
 
 
