@@ -292,8 +292,8 @@ def q_stream_mv_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# State API v2 (transformWithStateInPandas, Spark 4.x): per-user
-# running stats with a typed ValueState handle.  Update mode emits
+# Managed per-key state (applyInPandasWithState): per-user running
+# stats with one (count, max, cents) state tuple.  Update mode emits
 # one row per key per micro-batch; the final emission per key (the
 # row with the largest running count — count is monotone) must equal
 # the batch groupBy, which is the oracle.  The final-row selection is

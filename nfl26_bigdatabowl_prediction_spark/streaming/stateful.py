@@ -98,24 +98,12 @@ def streaming_ewm(events: DataFrame, alpha: float = 0.3) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# State API v2 (``transformWithStateInPandas``): the Spark 4.x
-# arbitrary-stateful-processing surface — typed state handles
-# (ValueState here; ListState/MapState/timers available) managed by
-# the processor object, replacing applyInPandasWithState's single
-# tuple.  Operator: per-user running stats (count, max, exact int64
-# cents sum) emitted as an update row per key per micro-batch; the
-# final row per key equals the batch groupBy — that equivalence is
-# the oracle.  State is one (long, double, long) per key: store size
-# is |keys|, independent of stream length.
+# Per-user running stats (count, max, exact int64 cents sum) emitted as
+# an update row per key per micro-batch; the final row per key equals
+# the batch groupBy — that equivalence is the oracle.  State is one
+# (long, double, long) per key: store size is |keys|, independent of
+# stream length.
 # --------------------------------------------------------------------------
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    _HAS_TWS = True
-except ImportError:  # pragma: no cover - older runtime
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    _HAS_TWS = False
-
 RUNNING_STATS_OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -134,36 +122,7 @@ _RUNNING_STATE_SCHEMA = T.StructType(
 )
 
 
-class RunningStatsProcessor(StatefulProcessor):
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._state = handle.getValueState("running", _RUNNING_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n, vmax, cents = (
-            self._state.get() if self._state.exists() else (0, None, 0)
-        )
-        for pdf in rows:
-            n += len(pdf)
-            bmax = float(pdf["value"].max()) if len(pdf) else None
-            if bmax is not None:
-                vmax = bmax if vmax is None else max(vmax, bmax)
-            # exact integer accumulation: summation order irrelevant
-            cents += int(pdf["value"].mul(100).round(0).astype("int64").sum())
-        self._state.update((n, vmax, cents))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "value_max": [vmax],
-                "value_sum": [cents / 100.0],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def _running_stats_v1_fn(
+def _running_stats_fn(
     key: Any, pdf_iter: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     n, vmax, cents = state.get if state.exists else (0, None, 0)
@@ -184,26 +143,12 @@ def _running_stats_v1_fn(
     )
 
 
-def streaming_running_stats(events: DataFrame, use_v2: bool = False) -> DataFrame:
-    """Per-user running (count, max, exact-cents sum).
-
-    ``use_v2=True`` routes through ``transformWithStateInPandas``
-    (state API v2, RunningStatsProcessor above) — the preferred
-    production surface, but its driver worker needs ``google.protobuf``
-    which this sandbox lacks, so the default is the v1
-    ``applyInPandasWithState`` path computing the identical recurrence
-    with the identical state tuple.
-    """
+def streaming_running_stats(events: DataFrame) -> DataFrame:
+    """Per-user running (count, max, exact-cents sum) through
+    ``applyInPandasWithState``."""
     keyed = events.select("user_id", "value").groupBy("user_id")
-    if use_v2:
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=RunningStatsProcessor(),
-            outputStructType=RUNNING_STATS_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
     return keyed.applyInPandasWithState(
-        _running_stats_v1_fn,
+        _running_stats_fn,
         outputStructType=RUNNING_STATS_OUTPUT_SCHEMA,
         stateStructType=_RUNNING_STATE_SCHEMA,
         outputMode="update",

@@ -13,7 +13,7 @@ a round close catches that bug class a round earlier.
 Setup (once per derivative rebuild, ~2 min each):
 
     python tools/make_8x.py                      # /tmp/nfl26_sf0.8x
-    python tools/make_8x_honest.py               # ts-shifted twin
+    python tools/make_8x.py --honest             # ts-shifted twin
 
 Then:  pytest -m scale8x            (~10 min, quiet host)
 
@@ -67,7 +67,7 @@ HONEST_NAMES = (
     # unrolled hook+compress min-label form (_minlabel_cc_sql, linear
     # per round, convergence-audited), so the row is now affordable
     "q_dedup_canonical",
-    # vector family on HONEST growth (round 10): make_8x_honest now
+    # vector family on HONEST growth (round 10): make_8x --honest now
     # rotates embedding components per copy — within-copy geometry is
     # bit-identical to sf0.1, cross-copy pairs decorrelate to the
     # corpus's own baseline near-dup rate (2.7e-4 cross vs 2.8e-4
@@ -97,7 +97,7 @@ def duck_mirror():
 def duck_honest():
     if not os.path.isdir(HONEST):
         pytest.skip(
-            f"{HONEST} absent — run: python tools/make_8x_honest.py"
+            f"{HONEST} absent — run: python tools/make_8x.py --honest"
         )
     con = oracle_db(HONEST)
     yield con

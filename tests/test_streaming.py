@@ -415,43 +415,6 @@ def test_incremental_cdc_table_is_replay_idempotent(spark, tmp_path):
     assert (again["value_current"].to_numpy() == want["value_current"].to_numpy()).all()
 
 
-def test_running_stats_v2_matches_v1_when_protobuf_present(spark):
-    # transformWithStateInPandas (state API v2) is the production
-    # surface; its Python worker needs google.protobuf, absent from
-    # this container — the test self-activates when a deployment has
-    # it, pinning v1/v2 parity of the running-stats recurrence.
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from pyspark.sql import functions as F
-
-    from nfl26_bigdatabowl_prediction_spark.streaming.stateful import (
-        streaming_running_stats,
-    )
-
-    src = (
-        spark.readStream.format("rate").option("rowsPerSecond", "50").load()
-        .select(
-            (F.col("value") % 7).alias("user_id"),
-            (F.col("value") % 100).cast("double").alias("value"),
-        )
-    )
-    v1 = streaming_running_stats(src, use_v2=False)
-    v2 = streaming_running_stats(src, use_v2=True)
-    # identical output contract...
-    assert v1.schema == v2.schema
-    # ...and the v2 plan actually runs a microbatch
-    q = (
-        v2.writeStream.format("memory").queryName("tws_v2_smoke")
-        .outputMode("update").trigger(processingTime="1 second").start()
-    )
-    try:
-        q.awaitTermination(8)
-    finally:
-        q.stop()
-    assert q.exception() is None
-
-
 def test_stateful_funnel_carries_state_across_microbatches(spark, tmp_path):
     """The applyInPandasWithState funnel must reach the SAME per-user
     stages whether events arrive in one micro-batch or four — the
