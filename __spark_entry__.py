@@ -6,16 +6,25 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All implementations live in ``nfl26_bigdatabowl_prediction_spark``;
-this module only wires the registry into the contract.
+this module only wires the registry into the contract and orders it
+for the driver's verification window.  The order is derived from the
+committed ``CORRECTNESS_r*.json`` records next to this file, so
+committing a round's record is all the bookkeeping a round needs.
 """
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from nfl26_bigdatabowl_prediction_spark.plans.registry import ORACLES, QUERIES
+
+_ROOT = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -25,195 +34,34 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["q_groupby_multi"](spark, "/root/testdata/sf0.001")
 
 
-# Round-stamped green history: round N → names whose driver row in
-# CORRECTNESS_r{N}.json was fully green (rows + schema + hash).  A name
-# re-verified in a later round appears again under that round; the
-# LATEST round wins when computing staleness.  This is the steady-state
-# bookkeeping contract (SURVEY §7): at the start of each round, append
-# the prior round's greens here, then the oldest-green names rotate
-# automatically into the driver's 50-slot verification window below.
-_GREEN_HISTORY: dict[int, tuple[str, ...]] = {
-    # round 1 (CORRECTNESS_r01.json)
-    1: (
-        "q_groupby_multi", "q_scan_parquet", "q_scan_csv", "q_project",
-        "q_filter_range", "q_filter_finite", "q_fill", "q_dropna", "q_clip",
-        "q_cast", "q_dummy_encode", "q_str_parse", "q_concat_id",
-        "q_distinct", "q_union_all", "q_intersect", "q_sort",
-        "q_topn_global", "q_join_inner", "q_join_left", "q_semi", "q_anti",
-        "q_rmse", "q_rollup", "q_distinct_agg", "q_cube", "q_grouping_sets",
-        "q_salted_join", "q_salted_distinct", "q_star_join", "q_quantile",
-        "q_scan_orc", "q_scan_json", "q_unpivot", "q_lag", "q_lead",
-        "q_rolling", "q_diff", "q_diff2", "q_cumsum", "q_cumcount",
-        "q_norm_by_max", "q_last_n", "q_topk_per_group", "q_rank_fns",
-    ),
-    # round 2 (CORRECTNESS_r02.json, 50/50 fully green)
-    2: (
-        "q_except", "q_pivot", "q_hypertable_rollup", "q_join_full",
-        "q_mode", "q_map_ops", "q_sketch_bounds", "q_scan_partitioned",
-        "q_merge_upsert", "q_sql_text", "q_bucketed_join", "q_group_corr",
-        "q_date_parts", "q_scan_xml", "q_python_datasource",
-        "q_ship_priority", "q_promo_share", "q_unshipped_revenue",
-        "q_big_spenders", "q_trade_volume", "q_fuzzy_join", "q_dpp_join",
-        "q_revenue_by_nation", "q_returned_customers", "q_top_supplier",
-        "q_ohlc", "q_data_profile", "q_skyline", "q_bitmap_distinct",
-        "q_decimal_agg", "q_interval_arith", "q_schema_evolution",
-        "q_pivot_multi", "q_dq_rules", "q_shuffle_hash_join",
-        "q_equi_depth_hist", "q_last_per_group", "q_ewm", "q_transform_sum",
-        "q_team_stats", "q_softmax_group", "q_cond_agg",
-        "q_group_mean_impute", "q_circular_mean", "q_argmin",
-        "q_collect_traj", "q_json", "q_sessionize", "q_ewm_multi",
-        "q_rolling_time",
-    ),
-    # round 3 (CORRECTNESS_r03.json, 50/50 fully green)
-    3: (
-        "q_asof", "q_asof_join", "q_asof_tolerance", "q_asof_forward",
-        "q_cogroup_asof", "q_self_join", "q_pairwise", "q_pairwise_kernel",
-        "q_gnn_lite", "q_seq_prep", "q_physics_baseline", "q_fold_assign",
-        "q_ensemble_features", "q_range_join", "q_traj_similarity",
-        "q_holt", "q_stream_tumbling", "q_stream_session", "q_stream_ewm",
-        "q_stream_sliding", "q_stream_dedup", "q_stream_join",
-        "q_stream_static_join", "q_stream_mv_rollup",
-        "q_stream_running_stats", "q_stream_join_left",
-        "q_stream_cdc_upsert", "q_stream_python_source", "q_setsim_join",
-        "q_bigram_logprob", "q_audio_features", "q_image_decode",
-        "q_png_decode", "q_dedup_exact", "q_minhash_lsh", "q_simhash",
-        "q_ngram_jaccard", "q_dedup_components", "q_embed_neardup",
-        "q_embed_cosine_topk", "q_embed_ivf_topk", "q_lang_id",
-        "q_quality_score", "q_token_count", "q_doc_fingerprint",
-        "q_stratified_sample", "q_corpus_mix", "q_split_assign",
-        "q_sample_exact_n", "q_percentiles_by_group",
-    ),
-    # round 4 (CORRECTNESS_r04.json, 50/50 fully green)
-    4: (
-        "q_ann_recall", "q_attribution", "q_auc", "q_bfs_levels", "q_bm25",
-        "q_brier", "q_calibration", "q_cdc_apply", "q_cdc_asof",
-        "q_char_entropy", "q_compaction_plan", "q_confusion",
-        "q_decontaminate", "q_dedup_apply", "q_dedup_stats",
-        "q_degree_dist", "q_edit_distance", "q_feature_hash", "q_funnel",
-        "q_gaps_islands", "q_gopher_rules", "q_ks_stat", "q_lateral_topk",
-        "q_lift", "q_line_dedup", "q_link_predict", "q_logloss",
-        "q_minhash_error", "q_mrr", "q_ndcg", "q_pagerank", "q_pq_quantize",
-        "q_pq_search", "q_pr_auc", "q_psi", "q_retention", "q_rolling_dau",
-        "q_scd2", "q_skipgram_pairs", "q_snapshot_diff", "q_sql_pipe",
-        "q_stl_lite", "q_target_encode", "q_tfidf_topk",
-        "q_triangle_count", "q_try_cast", "q_udtf_polymorphic",
-        "q_unigram_logprob", "q_vocab_topn", "q_zorder_cells",
-    ),
-    # round 5 (CORRECTNESS_r05.json, 50/50 fully green)
-    5: (
-        "q_ab_test", "q_arrow_grouped", "q_arrow_map", "q_assoc_rules",
-        "q_autocorr", "q_benford", "q_bpe_pairs", "q_correlated_subquery",
-        "q_crosstab", "q_cusum", "q_dataset_card", "q_embed_components",
-        "q_expanding", "q_ffill", "q_forecast_revenue", "q_geo_join",
-        "q_geo_track", "q_gini", "q_group_entropy", "q_histogram",
-        "q_interpolate", "q_join_nullsafe", "q_logit_irls",
-        "q_mad_outliers", "q_markov_transition", "q_max_drawdown",
-        "q_moments", "q_mutual_info", "q_observe", "q_ols_by_group",
-        "q_pandas_scalar", "q_peak_concurrency", "q_recursive_cte",
-        "q_regex_tokens", "q_repetition_score", "q_resample",
-        "q_ridge_fit", "q_seasonal_anomaly", "q_session_window",
-        "q_spearman", "q_sql_param", "q_sql_udf", "q_survival", "q_ttr",
-        "q_udaf_weighted_median", "q_udtf_sentences", "q_vwap",
-        "q_welch_ttest", "q_winsorize", "q_zscore_outliers",
-    ),
-    # rounds 6+7 (CORRECTNESS_r06.json ≡ CORRECTNESS_r07.json, the
-    # same 50 names fully green in two independent driver runs)
-    7: (
-        "q_except", "q_schema_evolution", "q_setsim_join",
-        "q_dedup_components", "q_embed_components", "q_bpe_train",
-        "q_bpe_vocab", "q_bpe_encode", "q_dsir_weights",
-        "q_gumbel_topk_resample", "q_dp_count", "q_pmi_cooccur",
-        "q_keyword_extract", "q_ngram_novelty", "q_naive_bayes",
-        "q_entity_resolution", "q_leakage_audit", "q_token_budget_trim",
-        "q_temporal_split", "q_code_detect", "q_contrastive_pairs",
-        "q_knn_classify", "q_minhash_containment", "q_matryoshka_recall",
-        "q_als_step", "q_bootstrap_ci", "q_window_funnel",
-        "q_stream_funnel", "q_percentile_rank", "q_seasonal_index",
-        "q_asof_nearest", "q_winnowing_fingerprint", "q_mv_incremental",
-        "q_qoi_decode", "q_gif_decode", "q_pgm_decode", "q_spectral_bins",
-        "q_cms_topk", "q_hll_audit", "q_bloom_audit",
-        "q_label_propagation", "q_kcore", "q_modularity", "q_holt_winters",
-        "q_anova", "q_kendall_tau", "q_mannwhitney", "q_chi_square",
-        "q_changepoint", "q_rfm",
-    ),
-    # round 8 (CORRECTNESS_r08.json, 49/50 fully green — the sole red
-    # row, q_embed_quantize, re-proved green in round 9 post-fix)
-    8: (
-        "q_cluster_quality", "q_cust_order_dist", "q_embed_centroid",
-        "q_embed_lsh_bucket", "q_embed_norm", "q_embed_project",
-        "q_emd_drift", "q_frame_sample", "q_heaps_law", "q_idle_customers",
-        "q_kmeans_iter2", "q_kmeans_step", "q_late_supplier", "q_listagg",
-        "q_market_share", "q_min_cost_supp", "q_multimodal_decode",
-        "q_neardup_threshold_sweep", "q_or_pushdown", "q_pending_priority",
-        "q_power_iteration", "q_product_profit", "q_python_datasink",
-        "q_range_frame", "q_scalar_native", "q_semdedup", "q_seq_pattern",
-        "q_small_qty_revenue", "q_sort_nulls", "q_stream_funnel_late",
-        "q_stream_funnel_ttl", "q_stream_session_dynamic",
-        "q_stream_tumbling_late", "q_supplier_audit", "q_table_checksum",
-        "q_top_value_parts", "q_twap", "q_union_drift", "q_variant",
-        "q_wow_growth", "q_zipf_fit",
-    ),
-    # round 9 (CORRECTNESS_r09.json, 50/50 fully green — the final
-    # coverage rotation: all 34 carried never-verified names, the
-    # fixed q_embed_quantize, and the round-9 additions landed)
-    9: (
-        "q_array_hof", "q_audience_overlap", "q_bigram_topn",
-        "q_cohens_kappa", "q_cohort_ltv", "q_corpus_curate",
-        "q_dedup_canonical", "q_did", "q_doc_chunk", "q_embed_quantize",
-        "q_except_all", "q_explode_outer", "q_histogram_2d",
-        "q_intersect_all", "q_interval_merge", "q_item_similarity",
-        "q_label_horizon", "q_log_histogram", "q_macro_f1", "q_nth_value",
-        "q_paginate", "q_path_topn", "q_perplexity_bucket", "q_redact",
-        "q_regex_scan", "q_ri_audit", "q_rsi", "q_scan_binary",
-        "q_scan_text", "q_seq_pack", "q_shard_assign", "q_skew_audit",
-        "q_substring_dup", "q_text_normalize", "q_xcorr_lags",
-        "q_zonemap_audit",
-    ),
-    # round 10 (CORRECTNESS_r10.json, 50/50 fully green — the drift
-    # re-proof window over the three highest-churn families plus the
-    # last never-verified name, q_semdedup_ivf)
-    10: (
-        "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
-        "q_stream_dedup", "q_stream_ewm", "q_stream_join",
-        "q_stream_join_left", "q_stream_static_join", "q_stream_mv_rollup",
-        "q_stream_running_stats", "q_stream_python_source",
-        "q_stream_tumbling_late", "q_stream_funnel_late",
-        "q_stream_funnel_ttl", "q_stream_cdc_upsert", "q_stream_funnel",
-        "q_stream_session_dynamic",
-        "q_embed_neardup", "q_embed_cosine_topk", "q_embed_ivf_topk",
-        "q_ann_recall", "q_pq_quantize", "q_pq_search", "q_kmeans_step",
-        "q_kmeans_iter2", "q_semdedup", "q_knn_classify",
-        "q_matryoshka_recall", "q_contrastive_pairs",
-        "q_neardup_threshold_sweep", "q_embed_components",
-        "q_embed_quantize", "q_embed_centroid", "q_embed_lsh_bucket",
-        "q_embed_norm", "q_embed_project",
-        "q_dedup_exact", "q_dedup_apply", "q_dedup_stats",
-        "q_dedup_canonical", "q_substring_dup", "q_minhash_lsh",
-        "q_minhash_error", "q_minhash_containment", "q_simhash",
-        "q_ngram_jaccard", "q_setsim_join", "q_dedup_components",
-        "q_leakage_audit",
-        "q_semdedup_ivf",
-    ),
-}
+def fully_green(rows: dict[str, dict]) -> set[str]:
+    """Names whose driver row matched on rows, schema and value hash,
+    with no error.  A row with ``hash_match: null`` (no hash computed)
+    counts as green on rows + schema."""
+    return {
+        n
+        for n, r in rows.items()
+        if r.get("rows_match")
+        and r.get("schema_match")
+        and (r.get("hash_match") or r.get("hash_match") is None)
+        and not r.get("err")
+    }
 
-# Rows-only by declared contract (no value oracle): the driver row
-# cannot improve, so they never occupy verification-window slots.
-_ROWS_ONLY: tuple[str, ...] = (
-    "q_approx_distinct", "q_quantile_approx", "q_embed_kmeans",
-    "q_image_resize",
-)
 
-# name → latest round with a fully-green driver row
-_GREEN_ROUND: dict[str, int] = {}
-for _rnd in sorted(_GREEN_HISTORY):
-    for _name in _GREEN_HISTORY[_rnd]:
-        _GREEN_ROUND[_name] = _rnd
+def green_rounds(root: str = _ROOT) -> dict[str, int]:
+    """name → the LATEST round N whose ``CORRECTNESS_r{N}.json`` under
+    ``root`` records the name as fully green."""
+    rounds: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path)[1])
+        with open(path) as f:
+            for n in fully_green(json.load(f)):
+                rounds[n] = max(rounds.get(n, 0), rnd)
+    return rounds
 
-_DRIVER_GREEN: frozenset[str] = frozenset(_GREEN_ROUND) | frozenset(_ROWS_ONLY)
 
-# Round-11 drift slots (≤ 8 — with pending = 0 the escape hatch in
-# tests/test_contract.py is closed and the cap binds): the names whose
-# engine or oracle code round 11 touches.
+# Drift slots (≤ 8, tests/test_registry.py): the names whose engine or
+# oracle code round 11 touched.
 # - streaming/source.py twin-session sharing (bench fixed-overhead cut):
 #   q_stream_tumbling / q_stream_python_source / q_stream_funnel_ttl
 #   are the three harness shapes (windowed agg, python DS resume,
@@ -229,37 +77,26 @@ _DRIFT_REVERIFY: tuple[str, ...] = (
     "q_dedup_components", "q_embed_components", "q_dedup_canonical",
 )
 
-_PRIORITY: tuple[str, ...] = _DRIFT_REVERIFY
-
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry ordered for the driver's 50-slot verification window:
 
-    1. drift-reverify slots (≤ 8): names this round's code churn touches;
-    2. never-driver-green names (steady state: none);
-    3. every green name, OLDEST green round first (name as tie-break), so
-       staleness rotates out automatically — with ~42 rotation slots per
-       round and 368 green names the full surface re-proves on a ~9-round
+    1. drift-reverify slots (≤ 8): names recent code churn touched;
+    2. every oracle-backed name, STALEST evidence first: oldest latest
+       green round first (never green counts as round 0, so it leads),
+       name as tie-break.  With ~42 rotation slots per round and 368
+       oracle-backed names the full surface re-proves on a ~9-round
        cadence without hand-picking;
-    4. the declared rows-only names last (their driver rows can't improve).
+    3. the rows-only names (no oracle) last: their driver rows can't
+       improve.
     """
-    prio = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}
-    pending = {
-        n: f for n, f in QUERIES.items()
-        if n not in _DRIVER_GREEN and n not in prio
-    }
-    rotation = sorted(
-        (n for n in QUERIES
-         if n in _GREEN_ROUND and n not in prio),
-        key=lambda n: (_GREEN_ROUND[n], n),
+    rounds = green_rounds()
+    rest = [n for n in QUERIES if n not in _DRIFT_REVERIFY]
+    stalest_first = sorted(
+        (n for n in rest if n in ORACLES), key=lambda n: (rounds.get(n, 0), n)
     )
-    tail = [n for n in _ROWS_ONLY if n in QUERIES and n not in prio]
-    return {
-        **prio,
-        **pending,
-        **{n: QUERIES[n] for n in rotation},
-        **{n: QUERIES[n] for n in tail},
-    }
+    rows_only = [n for n in rest if n not in ORACLES]
+    return {n: QUERIES[n] for n in [*_DRIFT_REVERIFY, *stalest_first, *rows_only]}
 
 
 def oracle_sql() -> dict[str, str]:

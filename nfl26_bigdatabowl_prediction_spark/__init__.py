@@ -19,8 +19,3 @@ Layout:
 """
 
 __version__ = "0.1.0"
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)

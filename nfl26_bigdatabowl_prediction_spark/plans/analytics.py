@@ -21,21 +21,13 @@ from ..functions.portable import (
     portable_hash_sql_spark,
 )
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+q = registrar(QUERIES, ORACLES)
 
 DAY_US = 86400 * 10**6
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------

@@ -38,19 +38,11 @@ from pyspark.sql.window import Window as W
 
 from ..functions.scalar import cents
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES)
 
 
 _REV_C = "CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)"

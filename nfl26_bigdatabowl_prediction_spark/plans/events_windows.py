@@ -28,24 +28,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+q = registrar(QUERIES, ORACLES)
 
 # DuckDB twins of the canonical trajectory window.
 DW = "PARTITION BY user_id ORDER BY epoch_us(ts), event_id"
 DW_ROWS = f"{DW} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 DW_FULL = f"{DW} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _w():

@@ -33,19 +33,11 @@ from pyspark.sql import functions as F
 
 from ..functions.portable import knuth_fold_expr, knuth_fold_sql
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES)
 
 
 # Bulk-quantity lines only (l_quantity >= 45, pushed to the scan):

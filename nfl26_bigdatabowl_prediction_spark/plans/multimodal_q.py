@@ -22,11 +22,32 @@ from ..operators.multimodal import (
     sample_frames,
 )
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+q = registrar(QUERIES, ORACLES)
 
 
+# The fake decoder is deterministic on the utf-8 byte length, so the
+# oracle mirrors it exactly (values 0..6 are float-exact, so the
+# float32→double chain on the Spark side is bitwise too).
+@q(
+    "q_multimodal_decode",
+    """
+    WITH dec AS (
+        SELECT doc_id, source, octet_length(encode(text)) AS n_bytes
+        FROM documents
+    )
+    SELECT source,
+           COUNT(*) AS n_docs,
+           CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
+           MAX(n_bytes % 640) AS max_width,
+           SUM(CAST(n_bytes % 7 AS DOUBLE)) AS feat0_sum
+    FROM dec
+    GROUP BY source
+""",
+)
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload → mapInPandas fake-decode → per-source feature
     stats.  Exercises the full multimodal plumbing chain."""
@@ -45,29 +66,20 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["q_multimodal_decode"] = q_multimodal_decode
-# The fake decoder is deterministic on the utf-8 byte length, so the
-# oracle mirrors it exactly (values 0..6 are float-exact, so the
-# float32→double chain on the Spark side is bitwise too).
-ORACLES["q_multimodal_decode"] = """
-    WITH dec AS (
-        SELECT doc_id, source, octet_length(encode(text)) AS n_bytes
-        FROM documents
-    )
-    SELECT source,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
-           MAX(n_bytes % 640) AS max_width,
-           SUM(CAST(n_bytes % 7 AS DOUBLE)) AS feat0_sum
-    FROM dec
-    GROUP BY source
-"""
-
-
 FRAME_STRIDE = 7
 CLIP_MOD = 97  # fake clip length = (n_chars % 97) + 1 frames
 
 
+# DuckDB range(0, n, step) is stop-exclusive = Spark sequence(0, n-1,
+# step) inclusive-bound; both emit 0, 7, ... < n_frames.
+@q(
+    "q_frame_sample",
+    f"""
+    SELECT doc_id,
+           unnest(range(0, (n_chars % {CLIP_MOD}) + 1, {FRAME_STRIDE})) AS frame_idx
+    FROM documents
+""",
+)
 def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sampling plumbing: every 7th frame index of each
     fake clip ((n_chars % 97) + 1 frames), one row per sampled frame.
@@ -79,16 +91,8 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(clips, F.col("n_frames"), stride=FRAME_STRIDE)
 
 
-QUERIES["q_frame_sample"] = q_frame_sample
-# DuckDB range(0, n, step) is stop-exclusive = Spark sequence(0, n-1,
-# step) inclusive-bound; both emit 0, 7, ... < n_frames.
-ORACLES["q_frame_sample"] = f"""
-    SELECT doc_id,
-           unnest(range(0, (n_chars % {CLIP_MOD}) + 1, {FRAME_STRIDE})) AS frame_idx
-    FROM documents
-"""
-
-
+# no oracle: blob byte-fold is not DuckDB-expressible → rows-only check
+@q("q_image_resize", None)
 def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image-resize plumbing (fake raster summary): payload bytes →
     fixed 64×64 output + content byte-sum.  Rows-only driver check —
@@ -100,10 +104,6 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_images"),
         F.sum("px_sum").alias("px_total"),
     )
-
-
-QUERIES["q_image_resize"] = q_image_resize
-# no oracle: blob byte-fold is not DuckDB-expressible → rows-only check
 
 
 # ---------------------------------------------------------------------------
@@ -118,18 +118,9 @@ QUERIES["q_image_resize"] = q_image_resize
 # ---------------------------------------------------------------------------
 
 
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real 16-bit PCM WAV payloads → RIFF/PCM parse →
-    integer signal features (peak, abs-sum, zero crossings).  Two
-    chained mapInPandas kernels, scan-side, zero shuffles."""
-    from ..operators.multimodal import synth_wav_payloads, wav_features
-
-    d = table(spark, sf_dir, "documents")
-    return wav_features(synth_wav_payloads(d))
-
-
-QUERIES["q_audio_features"] = q_audio_features
-ORACLES["q_audio_features"] = """
+@q(
+    "q_audio_features",
+    """
     WITH samp AS (
         SELECT doc_id, unnest(range(0, 200 + doc_id % 100)) AS i
         FROM documents
@@ -152,20 +143,21 @@ ORACLES["q_audio_features"] = """
                      THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_cross
     FROM lagged
     GROUP BY doc_id
-"""
-
-
-def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real 24bpp BMP payloads (bottom-up rows, 4-byte row
-    padding) → header+raster parse → integer pixel features."""
-    from ..operators.multimodal import bmp_features, synth_bmp_payloads
+""",
+)
+def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real 16-bit PCM WAV payloads → RIFF/PCM parse →
+    integer signal features (peak, abs-sum, zero crossings).  Two
+    chained mapInPandas kernels, scan-side, zero shuffles."""
+    from ..operators.multimodal import synth_wav_payloads, wav_features
 
     d = table(spark, sf_dir, "documents")
-    return bmp_features(synth_bmp_payloads(d))
+    return wav_features(synth_wav_payloads(d))
 
 
-QUERIES["q_image_decode"] = q_image_decode
-ORACLES["q_image_decode"] = """
+@q(
+    "q_image_decode",
+    """
     WITH dims AS (
         SELECT doc_id, 8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h
         FROM documents
@@ -183,21 +175,20 @@ ORACLES["q_image_decode"] = """
            CAST(SUM((x + y + doc_id) % 256) AS BIGINT) AS r_sum
     FROM px
     GROUP BY doc_id
-"""
-
-
-def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real 8-bit grayscale PNG payloads (zlib IDAT, rows
-    cycling ALL five PNG filter types) → chunk parse + inflate +
-    un-filter → integer raster features."""
-    from ..operators.multimodal import png_features, synth_png_payloads
+""",
+)
+def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real 24bpp BMP payloads (bottom-up rows, 4-byte row
+    padding) → header+raster parse → integer pixel features."""
+    from ..operators.multimodal import bmp_features, synth_bmp_payloads
 
     d = table(spark, sf_dir, "documents")
-    return png_features(synth_png_payloads(d))
+    return bmp_features(synth_bmp_payloads(d))
 
 
-QUERIES["q_png_decode"] = q_png_decode
-ORACLES["q_png_decode"] = """
+@q(
+    "q_png_decode",
+    """
     WITH dims AS (
         SELECT doc_id, 16 + doc_id % 17 AS w, 5 + doc_id % 11 AS h
         FROM documents
@@ -213,24 +204,21 @@ ORACLES["q_png_decode"] = """
            CAST(MAX((3 * x + 5 * y + doc_id) % 256) AS BIGINT) AS px_max
     FROM px
     GROUP BY doc_id
-"""
-
-
-def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real GIF87a payloads (grayscale palette, genuine
-    variable-width GIF-LZW with dict resets) → header parse + LZW
-    decode → integer raster features.  Same scan-side zero-shuffle
-    kernel pair as the PNG/BMP/WAV codecs; the decoder is verified
-    against tool-written files (tests/test_codecs.py's CPython-icon
-    conformance vector)."""
-    from ..operators.multimodal import gif_features, synth_gif_payloads
+""",
+)
+def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real 8-bit grayscale PNG payloads (zlib IDAT, rows
+    cycling ALL five PNG filter types) → chunk parse + inflate +
+    un-filter → integer raster features."""
+    from ..operators.multimodal import png_features, synth_png_payloads
 
     d = table(spark, sf_dir, "documents")
-    return gif_features(synth_gif_payloads(d))
+    return png_features(synth_png_payloads(d))
 
 
-QUERIES["q_gif_decode"] = q_gif_decode
-ORACLES["q_gif_decode"] = """
+@q(
+    "q_gif_decode",
+    """
     WITH dims AS (
         SELECT doc_id, 12 + doc_id % 13 AS w, 4 + doc_id % 9 AS h
         FROM documents
@@ -246,24 +234,24 @@ ORACLES["q_gif_decode"] = """
            CAST(MIN((7 * x + 11 * y + doc_id) % 256) AS BIGINT) AS px_min
     FROM px
     GROUP BY doc_id
-"""
-
-
-def q_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real WAV payloads → Walsh/square-wave spectral bins
-    (k = 1, 2, 4, 8 cycles per clip).  The integer-exact stand-in for
-    per-bin DFT energy — see operators/multimodal.wav_walsh_bins for
-    why square waves instead of cos/sin (cross-engine libm ulp).
-    Chained mapInPandas kernels, scan-side, zero shuffles — the same
-    embarrassingly-parallel shape as q_audio_features."""
-    from ..operators.multimodal import synth_wav_payloads, wav_walsh_bins
+""",
+)
+def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real GIF87a payloads (grayscale palette, genuine
+    variable-width GIF-LZW with dict resets) → header parse + LZW
+    decode → integer raster features.  Same scan-side zero-shuffle
+    kernel pair as the PNG/BMP/WAV codecs; the decoder is verified
+    against tool-written files (tests/test_codecs.py's CPython-icon
+    conformance vector)."""
+    from ..operators.multimodal import gif_features, synth_gif_payloads
 
     d = table(spark, sf_dir, "documents")
-    return wav_walsh_bins(synth_wav_payloads(d))
+    return gif_features(synth_gif_payloads(d))
 
 
-QUERIES["q_spectral_bins"] = q_spectral_bins
-ORACLES["q_spectral_bins"] = """
+@q(
+    "q_spectral_bins",
+    """
     WITH samp AS (
         SELECT doc_id, 200 + doc_id % 100 AS n,
                unnest(range(0, 200 + doc_id % 100)) AS i
@@ -281,23 +269,24 @@ ORACLES["q_spectral_bins"] = """
                AS corr_abs
     FROM s CROSS JOIN bins
     GROUP BY doc_id, k
-"""
-
-
-def q_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real Netpbm PGM payloads (P5 raw for even ids, P2
-    plain ASCII with header comments for odd ids — both parser paths
-    every batch) → token/raster parse → integer features.  Same
-    scan-side zero-shuffle mapInPandas kernel pair as the other
-    codecs (operators/codecs.encode_pgm/decode_pgm)."""
-    from ..operators.multimodal import pgm_features, synth_pgm_payloads
+""",
+)
+def q_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real WAV payloads → Walsh/square-wave spectral bins
+    (k = 1, 2, 4, 8 cycles per clip).  The integer-exact stand-in for
+    per-bin DFT energy — see operators/multimodal.wav_walsh_bins for
+    why square waves instead of cos/sin (cross-engine libm ulp).
+    Chained mapInPandas kernels, scan-side, zero shuffles — the same
+    embarrassingly-parallel shape as q_audio_features."""
+    from ..operators.multimodal import synth_wav_payloads, wav_walsh_bins
 
     d = table(spark, sf_dir, "documents")
-    return pgm_features(synth_pgm_payloads(d))
+    return wav_walsh_bins(synth_wav_payloads(d))
 
 
-QUERIES["q_pgm_decode"] = q_pgm_decode
-ORACLES["q_pgm_decode"] = """
+@q(
+    "q_pgm_decode",
+    """
     WITH dims AS (
         SELECT doc_id, 10 + doc_id % 19 AS w, 3 + doc_id % 7 AS h
         FROM documents
@@ -313,23 +302,23 @@ ORACLES["q_pgm_decode"] = """
            CAST(MAX((5 * x + 7 * y + doc_id) % 256) AS BIGINT) AS px_max
     FROM px
     GROUP BY doc_id
-"""
-
-
-def q_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → real QOI payloads (qoiformat.org; the full op set —
-    gradient rows drive DIFF/LUMA/RGB, constant rows drive RUN/INDEX)
-    → decode → integer raster features.  Same scan-side zero-shuffle
-    mapInPandas kernel pair as the other codecs
-    (operators/codecs.encode_qoi/decode_qoi)."""
-    from ..operators.multimodal import qoi_features, synth_qoi_payloads
+""",
+)
+def q_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real Netpbm PGM payloads (P5 raw for even ids, P2
+    plain ASCII with header comments for odd ids — both parser paths
+    every batch) → token/raster parse → integer features.  Same
+    scan-side zero-shuffle mapInPandas kernel pair as the other
+    codecs (operators/codecs.encode_pgm/decode_pgm)."""
+    from ..operators.multimodal import pgm_features, synth_pgm_payloads
 
     d = table(spark, sf_dir, "documents")
-    return qoi_features(synth_qoi_payloads(d))
+    return pgm_features(synth_pgm_payloads(d))
 
 
-QUERIES["q_qoi_decode"] = q_qoi_decode
-ORACLES["q_qoi_decode"] = """
+@q(
+    "q_qoi_decode",
+    """
     WITH dims AS (
         SELECT doc_id, 8 + doc_id % 21 AS w, 3 + doc_id % 8 AS h
         FROM documents
@@ -354,4 +343,15 @@ ORACLES["q_qoi_decode"] = """
            CAST(SUM(g) AS BIGINT) AS g_sum
     FROM chan
     GROUP BY doc_id
-"""
+""",
+)
+def q_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → real QOI payloads (qoiformat.org; the full op set —
+    gradient rows drive DIFF/LUMA/RGB, constant rows drive RUN/INDEX)
+    → decode → integer raster features.  Same scan-side zero-shuffle
+    mapInPandas kernel pair as the other codecs
+    (operators/codecs.encode_qoi/decode_qoi)."""
+    from ..operators.multimodal import qoi_features, synth_qoi_payloads
+
+    d = table(spark, sf_dir, "documents")
+    return qoi_features(synth_qoi_payloads(d))

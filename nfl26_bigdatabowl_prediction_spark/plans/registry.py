@@ -1,7 +1,8 @@
 """Central query registry.
 
 Every plan module contributes ``QUERIES`` (name → callable(spark,
-sf_dir) → DataFrame) and ``ORACLES`` (name → DuckDB SQL twin).  The
+sf_dir) → DataFrame) and ``ORACLES`` (name → DuckDB SQL twin), filled
+only through its ``q = registrar(QUERIES, ORACLES)`` decorator.  The
 driver contract (``__spark_entry__.py``) and the local differential
 test (`tests/test_oracle.py`) both read from here, so a query is
 "done" exactly when it appears in this registry with a passing twin.
@@ -17,11 +18,32 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
+def registrar(queries: dict, oracles: dict):
+    """The one way to register a query: ``@q(name, oracle_sql)`` files
+    the decorated function under ``name`` in ``queries`` and its DuckDB
+    twin in ``oracles`` (``oracle=None``: rows-only).  A name or an
+    oracle registered twice raises instead of overwriting."""
+
+    def q(name: str, oracle: str | None):
+        def deco(fn):
+            if name in queries:
+                raise ValueError(f"duplicate query {name}")
+            if name in oracles:
+                raise ValueError(f"duplicate oracle {name}")
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return q
+
+
 def _merge(module) -> None:
+    q = registrar(QUERIES, ORACLES)
     for name, fn in module.QUERIES.items():
-        assert name not in QUERIES, f"duplicate query id {name}"
-        QUERIES[name] = fn
-    ORACLES.update(module.ORACLES)
+        q(name, module.ORACLES.get(name))(fn)
 
 
 from . import relational  # noqa: E402

@@ -28,19 +28,11 @@ from pyspark.sql.window import Window as W
 
 from ..functions.scalar import cents, clip, dummy, make_id
 from ..sources.io import spread_scan, table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES)
 
 
 # --------------------------------------------------------------------------

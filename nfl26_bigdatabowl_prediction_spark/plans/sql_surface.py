@@ -20,19 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES)
 
 
 # --------------------------------------------------------------------------

@@ -29,19 +29,11 @@ from ..streaming import (
     streaming_ewm,
     tumbling_counts,
 )
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES)
 
 
 GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in micros

@@ -32,23 +32,15 @@ from ..functions.portable import (
     portable_hash_sql_spark,
 )
 from ..sources.io import spread_scan, table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+q = registrar(QUERIES, ORACLES)
 
 N_BANDS = 4
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # Spark/DuckDB twin fragments -------------------------------------------------

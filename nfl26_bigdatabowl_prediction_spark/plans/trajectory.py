@@ -27,25 +27,17 @@ from pyspark.sql.window import Window as W
 
 from ..functions.portable import knuth_fold_expr, knuth_fold_sql
 from ..sources.io import table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
+q = registrar(QUERIES, ORACLES)
 
 HOUR_US = 3600 * 10**6
 RADIUS = 50.0  # neighbor radius (reference RADIUS=30 yd, main_cuda.py:336)
 K_NEIGH = 5  # top-K neighbors (reference K_NEIGH=6/5, main_cuda.py:344)
 TAU = 10.0  # softmax temperature (reference τ, main_cuda.py:350)
 COGROUP_BUCKETS = 64  # users per cogroup kernel call: invocation-count knob
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _events(spark, sf_dir):
@@ -739,14 +731,11 @@ def q_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # kernel (nn-mps.py:321-426).  Bitwise-equal to the relational plan
 # for every Arrow batch size (tests/test_pairwise_kernel.py).
 # --------------------------------------------------------------------------
+@q("q_pairwise_kernel", ORACLES["q_pairwise"])
 def q_pairwise_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pairwise import pairwise_features_grouped
 
     return pairwise_features_grouped(_events(spark, sf_dir))
-
-
-QUERIES["q_pairwise_kernel"] = q_pairwise_kernel
-ORACLES["q_pairwise_kernel"] = ORACLES["q_pairwise"]
 
 
 # --------------------------------------------------------------------------

@@ -26,19 +26,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..sources.io import spread_scan, table
+from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-
-def q(name: str, oracle: str | None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+q = registrar(QUERIES, ORACLES)
 
 
 EMBED_DIM = 64  # every testdata embedding is a fixed 64-dim array<float>
@@ -745,6 +737,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # from the fixed seed.  array_to_vector bridges array<float> to
 # VectorUDT without a Python UDF.
 # --------------------------------------------------------------------------
+@q("q_embed_kmeans", None)  # iterative MLlib clustering → rows-only check
 def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -758,10 +751,6 @@ def q_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("prediction").alias("cell"))
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )
-
-
-QUERIES["q_embed_kmeans"] = q_embed_kmeans
-# no oracle: iterative MLlib clustering → rows-only check
 
 
 # --------------------------------------------------------------------------
@@ -2044,7 +2033,7 @@ def q_embed_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @q(
     "q_knn_classify",
     f"""
-    WITH topk AS ({{COSINE_TOPK}}),
+    WITH topk AS ({ORACLES['q_embed_cosine_topk']}),
     votes AS (
         SELECT t.qid, e.label, CAST(COUNT(*) AS BIGINT) AS cnt
         FROM topk t JOIN embeddings e ON e.vec_id = t.nb_id
@@ -2097,11 +2086,6 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["q_knn_classify"] = ORACLES["q_knn_classify"].replace(
-    "{COSINE_TOPK}", ORACLES["q_embed_cosine_topk"]
-)
-
-
 # --------------------------------------------------------------------------
 # Near-dup threshold sweep — the calibration run before picking a
 # semantic-dedup cosine cutoff: pair counts at each candidate
@@ -2117,7 +2101,7 @@ _SWEEP_MICROS = (300000, 500000, 700000, 800000, 900000, 950000)
 @q(
     "q_neardup_threshold_sweep",
     f"""
-    WITH nd AS ({{NEARDUP}}),
+    WITH nd AS ({ORACLES['q_embed_neardup']}),
     fan AS (
         SELECT unnest([{", ".join(str(t) for t in _SWEEP_MICROS)}]) AS t_micro,
                cosine
@@ -2145,11 +2129,6 @@ def q_neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t_micro")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     )
-
-
-ORACLES["q_neardup_threshold_sweep"] = ORACLES["q_neardup_threshold_sweep"].replace(
-    "{NEARDUP}", ORACLES["q_embed_neardup"]
-)
 
 
 # --------------------------------------------------------------------------

@@ -27,14 +27,14 @@ from nfl26_bigdatabowl_prediction_spark.sources.io import (
 # AQE), so a 100k-row test stream would schedule one stateful task and
 # commit one state-store delta per core every micro-batch — pure
 # fixed overhead at this volume.  Streams therefore execute on an
-# isolated-SQLConf twin session sized by this knob; production sizes
+# isolated-SQLConf twin session sized by this constant; production sizes
 # it to stream volume (state partitions ≈ peak keys / partition
 # budget), which is exactly what "set it at first run, the checkpoint
 # keeps it" supports.
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-# One twin per (parent session, shuffle_partitions): creating a fresh
+# One twin per (parent session, no_data_batches): creating a fresh
 # never-stopped newSession() per events_stream call leaked a session
 # each stream AND scattered memory-sink registrations across twins —
 # callers resolving spark.table(queryName) need every stream of one
@@ -46,14 +46,13 @@ STREAM_SHUFFLE_PARTITIONS = 8
 # drop out of the map instead of accumulating (round-10 ADVICE).
 import weakref
 
-_TWINS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, SparkSession]]" = (
+_TWINS: "weakref.WeakKeyDictionary[SparkSession, dict[bool, SparkSession]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
 def stream_exec_session(
     spark: SparkSession,
-    shuffle_partitions: int = STREAM_SHUFFLE_PARTITIONS,
     no_data_batches: bool = True,
 ) -> SparkSession:
     """Isolated-SQLConf twin of ``spark`` for executing a test-scale
@@ -81,16 +80,17 @@ def stream_exec_session(
     reflect the previous drain (the two-phase late-data harness) must
     keep the default."""
     per_parent = _TWINS.setdefault(spark, {})
-    key = (shuffle_partitions, no_data_batches)
-    twin = per_parent.get(key)
+    twin = per_parent.get(no_data_batches)
     if twin is None:
         twin = spark.newSession()
-        twin.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        twin.conf.set(
+            "spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS)
+        )
         if not no_data_batches:
             twin.conf.set(
                 "spark.sql.streaming.noDataMicroBatches.enabled", "false"
             )
-        per_parent[key] = twin
+        per_parent[no_data_batches] = twin
     return twin
 
 

@@ -1,62 +1,132 @@
 """Registry invariants: the wiring contracts between the query
-registry and the driver entry."""
+registry, its one registration decorator and the driver entry."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import json
+import os
+import re
+from types import SimpleNamespace
+
+import pytest
+
+import __spark_entry__ as E
+from nfl26_bigdatabowl_prediction_spark.plans import registry
 from nfl26_bigdatabowl_prediction_spark.plans.registry import ORACLES, QUERIES
+
+ROWS_ONLY = [
+    "q_approx_distinct", "q_embed_kmeans", "q_image_resize",
+    "q_quantile_approx",
+]
 
 
 def test_every_oracle_has_a_query():
     assert [n for n in ORACLES if n not in QUERIES] == []
+    assert all(callable(f) for f in QUERIES.values())
+    assert E.oracle_sql() == ORACLES
 
 
 def test_rows_only_queries_are_the_declared_four():
     # the driver contract allows omitting oracle_sql() only for
     # genuinely non-SQL-expressible ops; keep the list deliberate.
     rows_only = sorted(n for n in QUERIES if n not in ORACLES)
-    assert rows_only == [
-        "q_approx_distinct", "q_embed_kmeans", "q_image_resize",
-        "q_quantile_approx",
-    ], rows_only
+    assert rows_only == ROWS_ONLY, rows_only
+
+
+def test_repeated_query_name_raises():
+    queries, oracles = {}, {}
+    q = registry.registrar(queries, oracles)
+    q("q_a", "SELECT 1")(len)
+    with pytest.raises(ValueError, match="duplicate query q_a"):
+        q("q_a", None)(abs)
+    assert queries == {"q_a": len} and oracles == {"q_a": "SELECT 1"}
+    # a second plan module reusing a registered name is refused too
+    clash = SimpleNamespace(QUERIES={"q_groupby_multi": abs}, ORACLES={})
+    with pytest.raises(ValueError, match="duplicate query q_groupby_multi"):
+        registry._merge(clash)
+    assert QUERIES["q_groupby_multi"] is not abs
+
+
+def test_repeated_oracle_raises():
+    # two registrars sharing one oracle map (as the merged registry
+    # does): the second twin for a name raises instead of overwriting
+    oracles = {}
+    registry.registrar({}, oracles)("q_a", "SELECT 1")(len)
+    with pytest.raises(ValueError, match="duplicate oracle q_a"):
+        registry.registrar({}, oracles)("q_a", "SELECT 2")(abs)
+    assert oracles == {"q_a": "SELECT 1"}
+
+
+def test_plan_modules_register_only_through_the_decorator():
+    plans = os.path.dirname(registry.__file__)
+    direct = [
+        (f, node.lineno)
+        for f in sorted(glob.glob(os.path.join(plans, "*.py")))
+        for node in ast.walk(ast.parse(open(f).read()))
+        if isinstance(node, (ast.Assign, ast.AugAssign))
+        for t in (node.targets if isinstance(node, ast.Assign) else [node.target])
+        if isinstance(t, ast.Subscript)
+        and isinstance(t.value, ast.Name)
+        and t.value.id in ("QUERIES", "ORACLES")
+    ]
+    assert direct == []
+
+
+def test_green_rounds_follow_the_rule(tmp_path):
+    green = {"rows_match": True, "schema_match": True, "hash_match": True,
+             "err": None}
+    records = {
+        1: {"q_a": green, "q_b": green, "q_c": green,
+            "q_d": {**green, "hash_match": None},
+            "q_e": {**green, "err": "boom"}},
+        2: {"q_a": green, "q_b": {**green, "hash_match": False},
+            "q_c": {**green, "err": "timeout"},
+            "q_d": {**green, "schema_match": False}},
+        10: {"q_a": {**green, "rows_match": False}, "q_b": green},
+    }
+    for rnd, rows in records.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    # latest green round wins; a row with err or a false match is not
+    # green; hash_match null is green on rows + schema
+    assert E.green_rounds(str(tmp_path)) == {
+        "q_a": 2, "q_b": 10, "q_c": 1, "q_d": 1,
+    }
 
 
 def test_driver_entry_window_is_unverified_first():
-    import __spark_entry__ as e
+    """The driver verifies the first 50 queries() entries: ≤ 8 drift
+    slots, then the names with the stalest committed evidence (latest
+    fully-green round, name as tie-break), then the rows-only names,
+    whose driver rows cannot improve, last."""
+    names = list(E.queries())
+    assert sorted(names) == sorted(QUERIES)
+    drift = list(E._DRIFT_REVERIFY)
+    assert len(drift) <= 8
+    assert names[: len(drift)] == drift
 
-    names = list(e.queries())
-    assert set(names) == set(QUERIES)
-    # Window slots are too scarce to waste.  While never-green names
-    # remained (rounds 1-10), the window had to contain only
-    # _DRIFT_REVERIFY slots and pending names.  In the steady state
-    # (pending = 0, reached round 11) the remaining slots rotate
-    # through the STALEST greens — oldest green round first, name as
-    # tie-break (SURVEY §7.1) — so a green name in the window is only
-    # "wasted" if a staler one was skipped over.
-    window = names[:50]
-    pending = [n for n in names if n not in e._DRIVER_GREEN]
-    misplaced = [
-        n for n in window
-        if n in e._DRIVER_GREEN
-        and n not in e._DRIFT_REVERIFY
-        and pending
-    ]
-    assert misplaced == [], misplaced
-    rotation_in_window = [
-        n for n in window
-        if n in e._GREEN_ROUND and n not in e._DRIFT_REVERIFY
-    ]
-    stalest_first = sorted(
-        (n for n in QUERIES
-         if n in e._GREEN_ROUND and n not in e._DRIFT_REVERIFY),
-        key=lambda n: (e._GREEN_ROUND[n], n),
+    rounds = E.green_rounds()
+    assert set(rounds) <= set(QUERIES)
+    stalest = sorted(
+        (n for n in ORACLES if n not in drift),
+        key=lambda n: (rounds.get(n, 0), n),
     )
-    assert rotation_in_window == stalest_first[: len(rotation_in_window)]
+    window = names[len(drift):50]
+    assert window == stalest[: len(window)]
+    # the rotation slots go to evidence older than the last two records
+    recorded = sorted(
+        int(re.search(r"_r(\d+)\.json$", p)[1])
+        for p in glob.glob(os.path.join(E._ROOT, "CORRECTNESS_r*.json"))
+    )
+    assert [n for n in window if rounds.get(n, 0) >= recorded[-2]] == []
+    assert sorted(names[-len(ROWS_ONLY):]) == ROWS_ONLY
 
 
 def test_priority_names_exist():
-    import __spark_entry__ as e
-
-    assert [n for n in e._PRIORITY if n not in QUERIES] == []
+    # the drift slots are the only query names __spark_entry__ spells
+    # out; a typo there would silently drop a slot from the window
+    assert [n for n in E._DRIFT_REVERIFY if n not in QUERIES] == []
 
 
 def test_no_top_level_array_or_map_output(spark):

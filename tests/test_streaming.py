@@ -670,11 +670,11 @@ def test_stateful_kernels_tolerate_arrow_chunk_splits(spark, tmp_path):
 
 def test_stream_exec_session_memoized_per_parent_and_knob(spark):
     """The twin-session cache must hand every stream of one parent the
-    SAME twin (one catalog for memory-sink tables), key distinct
-    shuffle sizings separately, and key on the parent OBJECT — a
-    WeakKeyDictionary, not id(spark), so a collected parent's id being
-    reused can never alias an unrelated session to a dead parent's
-    twin (round-10 ADVICE)."""
+    SAME twin (one catalog for memory-sink tables), key the
+    ``no_data_batches`` variant separately, and key on the parent
+    OBJECT — a WeakKeyDictionary, not id(spark), so a collected
+    parent's id being reused can never alias an unrelated session to a
+    dead parent's twin (round-10 ADVICE)."""
     import weakref
 
     from nfl26_bigdatabowl_prediction_spark.streaming import source as src
@@ -686,9 +686,15 @@ def test_stream_exec_session_memoized_per_parent_and_knob(spark):
     assert t1.conf.get("spark.sql.shuffle.partitions") == str(
         src.STREAM_SHUFFLE_PARTITIONS
     )
-    t3 = src.stream_exec_session(spark, shuffle_partitions=4)
+    t3 = src.stream_exec_session(spark, no_data_batches=False)
     assert t3 is not t1
-    assert t3.conf.get("spark.sql.shuffle.partitions") == "4"
+    assert t3 is src.stream_exec_session(spark, no_data_batches=False)
+    assert (
+        t3.conf.get("spark.sql.streaming.noDataMicroBatches.enabled") == "false"
+    )
+    assert t3.conf.get("spark.sql.shuffle.partitions") == str(
+        src.STREAM_SHUFFLE_PARTITIONS
+    )
     # keyed on the live parent object, weakly
     assert isinstance(src._TWINS, weakref.WeakKeyDictionary)
     assert spark in src._TWINS

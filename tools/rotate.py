@@ -1,36 +1,21 @@
-"""Start-of-round driver-window rotation helper.
+"""Start-of-round plan-drift report: registry queries whose own
+``def`` changed since the commit that recorded their latest fully-green
+driver row (``__spark_entry__.green_rounds``), i.e. the candidates for
+``__spark_entry__._DRIFT_REVERIFY``.
 
-Reads every CORRECTNESS_r*.json, collects the fully-green names
-(rows+schema+hash), and reports what `__spark_entry__._DRIVER_GREEN`
-should contain plus which registry queries still lack a driver row —
-the candidates for the next `_PRIORITY` window.
-
-Usage:
-    python tools/rotate.py            # report
-    python tools/rotate.py --check    # exit 1 if _DRIVER_GREEN is stale
+Usage (from the repository root, which must be a git checkout):
+    python tools/rotate.py
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def fully_green(path: str) -> set[str]:
-    rows = json.load(open(path))
-    return {
-        n
-        for n, r in rows.items()
-        if r.get("rows_match")
-        and r.get("schema_match")
-        # rows-only queries have no hash; count them green on rows+schema
-        and (r.get("hash_match") or r.get("hash_match") is None)
-        and not r.get("err")
-    }
+from __spark_entry__ import fully_green, green_rounds  # noqa: E402
 
 
 def _plan_drift(
@@ -40,9 +25,11 @@ def _plan_drift(
     that recorded their green row — their driver evidence predates the
     current plan, so they should be re-front-loaded (round-4
     ADVICE.md).  Function-body granularity: a registry function whose
-    own ``def`` text is unchanged does not drift when an unrelated
-    query in the same module is edited.  (Limitation: changes to
-    shared helpers a query calls are not attributed to it.)"""
+    own ``def`` (signature and body; its registration decorator is not
+    compared) is unchanged does not drift when an unrelated query in
+    the same module is edited.  (Limitation: changes to shared helpers
+    a query calls, or to an oracle passed in its decorator, are not
+    attributed to it.)"""
     import ast
     import inspect
     import subprocess
@@ -77,14 +64,7 @@ def _plan_drift(
                     rows = json.loads(show.stdout) if show.returncode == 0 else {}
                 except json.JSONDecodeError:
                     rows = {}
-                commit_rows[key] = {
-                    n
-                    for n, r in rows.items()
-                    if r.get("rows_match")
-                    and r.get("schema_match")
-                    and (r.get("hash_match") or r.get("hash_match") is None)
-                    and not r.get("err")
-                }
+                commit_rows[key] = fully_green(rows)
             if name in commit_rows[key]:
                 return commit
         return None
@@ -96,11 +76,13 @@ def _plan_drift(
             return {}
         # Module-level defs only: a nested helper sharing a registry
         # query's name must not shadow it (round-5 ADVICE.md).
-        return {
-            node.name: ast.dump(node)
-            for node in tree.body
+        defs = [
+            node for node in tree.body
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-        }
+        ]
+        for node in defs:
+            node.decorator_list = []
+        return {node.name: ast.dump(node) for node in defs}
 
     # file → name → dumped AST at the green commit (cache per pair)
     old_cache: dict[tuple[str, str], dict[str, str]] = {}
@@ -136,56 +118,18 @@ def _plan_drift(
 
 
 def main() -> int:
-    import __spark_entry__ as e
-    from nfl26_bigdatabowl_prediction_spark.plans.registry import ORACLES, QUERIES
+    from nfl26_bigdatabowl_prediction_spark.plans.registry import QUERIES
 
-    green: set[str] = set()
-    # LATEST green round per name: a drift-slot re-verification
-    # refreshes the evidence, so the drift baseline must be the newest
-    # green row, not the first (else a name re-proven in r06 keeps
-    # comparing against its r01 source forever).
-    last_green_round: dict[str, str] = {}
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        g = fully_green(path)
-        print(f"{path}: {len(g)} fully green")
-        for n in g:
-            last_green_round[n] = path
-        green |= g
-    # q_except's round-1 green covered a since-respecified query;
-    # membership in the current registry is the real filter.
-    green &= set(QUERIES)
-
-    declared = set(e._DRIVER_GREEN) & set(QUERIES)
-    missing_from_decl = sorted(green - declared)
-    stale_in_decl = sorted(
-        n for n in declared - green
-        if n in ORACLES  # rows-only names are parked there deliberately
-    )
-    pending = sorted(set(QUERIES) - green - set(e._DRIVER_GREEN))
-    print(f"\ncumulative driver-green: {len(green)} / {len(QUERIES)}")
-    if missing_from_decl:
-        print(f"\nADD to _DRIVER_GREEN ({len(missing_from_decl)}):")
-        for n in missing_from_decl:
-            print(f'    "{n}",')
-    if stale_in_decl:
-        print(f"\nin _DRIVER_GREEN but never driver-green ({len(stale_in_decl)}):")
-        for n in stale_in_decl:
-            print(f"    {n}")
-    print(f"\nstill pending a driver row ({len(pending)}):")
-    for n in pending:
-        print(f"    {n}")
     drifted = _plan_drift(
-        {n: p for n, p in last_green_round.items() if n in declared}, QUERIES
+        {n: f"CORRECTNESS_r{r:02d}.json" for n, r in green_rounds().items()},
+        QUERIES,
     )
-    if drifted:
-        print(
-            f"\nplan drift — green rows older than their plan source "
-            f"({len(drifted)}); re-front-load these:"
-        )
-        for n, src in drifted:
-            print(f"    {n}  ({src})")
-    if "--check" in sys.argv and (missing_from_decl or stale_in_decl):
-        return 1
+    print(
+        f"plan drift — green rows older than their plan source "
+        f"({len(drifted)}); re-front-load these:"
+    )
+    for n, src in drifted:
+        print(f"    {n}  ({src})")
     return 0
 
 
