@@ -7,8 +7,8 @@ a 0.1-weighted residual projection back to the input width → a
 bidirectional LSTM → attention pooling → linear head →
 ``torch.cumsum(out, dim=1)``).  Re-expressed from scratch in numpy
 (float64, deterministic) as a drop-in (shapes, forward, backward)
-triple for the generic synchronous data-parallel Adam trainer in
-ml/rnn.py::_train_seq — the distributed dataflow (broadcast params,
+triple for the one synchronous data-parallel Adam trainer in
+ml/rnn.py::train_encoder — the distributed dataflow (broadcast params,
 shuffle-reduce gradients, (K+1)·P scalars to the driver per epoch) is
 identical to the GRU's and is documented there.
 
@@ -22,98 +22,12 @@ c' = f⊙c + i⊙g, h' = o⊙tanh(c').
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..plans.features import TRAJECTORY_KEY, advanced_features, build_training_rows
-from .folds import with_fold
-from .rnn import _predict_seq, _train_seq
-from .scoring import score
-from .seqreg import DEFAULT_SEQ_FEATURES, window_matrix
-
-
-@dataclass
-class BiLstmConfig:
-    window: int = 8          # last-W frames (nn-lstm.py's window pipeline)
-    hidden: int = 10         # LSTM width PER DIRECTION (reference 192)
-    conv: int = 6            # conv channels (reference 64)
-    attn: int = 8            # attention-pooling projection width
-    max_horizon: int = 16    # head emits this many per-0.1s-step increments
-    lr: float = 0.05
-    epochs: int = 60
-    huber_delta: float = 1.0
-    horizon_decay: float | None = None
-    seed: int = 11
-    partitions: int = 8
-
-
-@dataclass
-class BiLstmShapes:
-    f: int
-    window: int
-    hidden: int        # per direction; H concat width is 2·hidden
-    conv: int
-    attn: int
-    max_horizon: int
-
-    def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
-        h, f, c, a, m = self.hidden, self.f, self.conv, self.attn, self.max_horizon
-        return [
-            # conv front end: kernel-3 same-pad Conv1d + ReLU, then a
-            # linear projection back to f for the 0.1-residual
-            ("Kc", (c, f, 3)), ("bc", (c,)),
-            ("Wp", (c, f)), ("bp", (f,)),
-            # forward-direction LSTM (torch gate order i,f,g,o)
-            ("Wi_f", (4 * h, f)), ("Wh_f", (4 * h, h)),
-            ("bi_f", (4 * h,)), ("bh_f", (4 * h,)),
-            # backward-direction LSTM
-            ("Wi_b", (4 * h, f)), ("Wh_b", (4 * h, h)),
-            ("bi_b", (4 * h,)), ("bh_b", (4 * h,)),
-            # attention pooling over the 2h concat
-            ("Wa", (2 * h, a)), ("ba", (a,)), ("va", (a,)),
-            # head: per-step increments, cumsum outside
-            ("Wo", (2 * h, 2 * m)), ("bo", (2 * m,)),
-        ]
-
-    @property
-    def n_params(self) -> int:
-        return sum(int(np.prod(s)) for _, s in self.sizes())
-
-    def unpack(self, flat: np.ndarray) -> dict[str, np.ndarray]:
-        out, pos = {}, 0
-        for name, shape in self.sizes():
-            n = int(np.prod(shape))
-            out[name] = flat[pos : pos + n].reshape(shape)
-            pos += n
-        return out
-
-    def init(self, seed: int) -> np.ndarray:
-        """Glorot-ish deterministic init (seeded PCG64), zero biases."""
-        rng = np.random.default_rng(seed)
-        parts = []
-        for name, shape in self.sizes():
-            if name.startswith("b"):
-                parts.append(np.zeros(shape))
-            else:
-                fan = sum(shape[:2]) if len(shape) > 1 else shape[0]
-                parts.append(rng.normal(0.0, np.sqrt(2.0 / fan), size=shape).ravel())
-        return np.concatenate(parts)
-
-
-@dataclass
-class BiLstmModel:
-    feature_cols: list[str]
-    shapes: BiLstmShapes
-    params: dict[int, np.ndarray] = field(default_factory=dict)
-    mu: np.ndarray | None = None
-    sd: np.ndarray | None = None
-
-
-def _sigmoid(x: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-np.clip(x, -60, 60)))
+from .rnn import Shapes, _sigmoid
 
 
 def _lstm_scan(
@@ -273,95 +187,48 @@ def _backward(
     return g
 
 
-def train_bilstm(
-    train: DataFrame, feature_cols: list[str], k: int, cfg: BiLstmConfig,
-) -> BiLstmModel:
-    """CNN+BiLSTM instantiation of the generic data-parallel trainer
-    (ml/rnn.py::_train_seq — one distributed gradient scan per epoch,
-    all K+1 models in the same pass)."""
-    sh = BiLstmShapes(len(feature_cols), cfg.window, cfg.hidden, cfg.conv,
-                      cfg.attn, cfg.max_horizon)
-    models, mu, sd = _train_seq(train, k, cfg, sh, _forward, _backward)
-    model = BiLstmModel(feature_cols, sh)
-    model.params = models
-    model.mu, model.sd = mu, sd
-    return model
+@dataclass
+class BiLstmShapes(Shapes):
+    hidden: int        # per direction; H concat width is 2·hidden
+    conv: int
+    attn: int
+    max_horizon: int
 
+    prefix: ClassVar[str] = "bilstm"
+    forward = staticmethod(_forward)
+    backward = staticmethod(_backward)
 
-def predict_bilstm(model: BiLstmModel, df: DataFrame, oof: bool = True) -> DataFrame:
-    """Adds bilstm_pred_x / bilstm_pred_y."""
-    return _predict_seq(model, df, oof, "bilstm", _forward)
+    def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
+        h, f, c, a, m = self.hidden, self.f, self.conv, self.attn, self.max_horizon
+        return [
+            # conv front end: kernel-3 same-pad Conv1d + ReLU, then a
+            # linear projection back to f for the 0.1-residual
+            ("Kc", (c, f, 3)), ("bc", (c,)),
+            ("Wp", (c, f)), ("bp", (f,)),
+            # forward-direction LSTM (torch gate order i,f,g,o)
+            ("Wi_f", (4 * h, f)), ("Wh_f", (4 * h, h)),
+            ("bi_f", (4 * h,)), ("bh_f", (4 * h,)),
+            # backward-direction LSTM
+            ("Wi_b", (4 * h, f)), ("Wh_b", (4 * h, h)),
+            ("bi_b", (4 * h,)), ("bh_b", (4 * h,)),
+            # attention pooling over the 2h concat
+            ("Wa", (2 * h, a)), ("ba", (a,)), ("va", (a,)),
+            # head: per-step increments, cumsum outside
+            ("Wo", (2 * h, 2 * m)), ("bo", (2 * m,)),
+        ]
 
 
 @dataclass
-class BiLstmTrainResult:
-    predictions: DataFrame
-    rmse_baseline: float
-    rmse_bilstm: float
-
-
-def train_and_predict_bilstm(
-    input_df: DataFrame,
-    output_df: DataFrame,
-    feature_cols: list[str] | None = None,
-    k: int = 5,
-    cfg: BiLstmConfig | None = None,
-) -> BiLstmTrainResult:
-    """E2's lifecycle (nn-lstm.py:874-988 shape) with the CNN+BiLSTM
-    encoder: per-frame physics features → last-W windows → grouped
-    folds → distributed-Adam fit → OOF prediction → metric."""
-    cfg = cfg or BiLstmConfig()
-    feats = advanced_features(input_df)
-    cols = [
-        c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
-    ]
-    seq = window_matrix(feats, cols, cfg.window)
-    labeled = build_training_rows(feats, output_df)
-    train = (
-        labeled.filter(F.col("last_x").isNotNull())
-        .join(seq, list(TRAJECTORY_KEY))
-    )
-    train = with_fold(train, list(TRAJECTORY_KEY), k=k).cache()
-    model = train_bilstm(train, cols, k, cfg)
-    pred = predict_bilstm(model, train, oof=True)
-    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
-    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
-    bl = pred.select("id", F.col("bilstm_pred_x").alias("x"), F.col("bilstm_pred_y").alias("y"))
-    return BiLstmTrainResult(
-        predictions=pred,
-        rmse_baseline=score(sol, base),
-        rmse_bilstm=score(sol, bl),
-    )
-
-
-def save_bilstm(model: BiLstmModel, path: str) -> None:
-    """S5 analog: one compressed npz — flat parameter vectors per
-    model id + shapes + standardization (mirrors save_gru)."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    sh = model.shapes
-    np.savez_compressed(
-        os.path.join(path, "bilstm.npz"),
-        meta=np.array(
-            [sh.f, sh.window, sh.hidden, sh.conv, sh.attn, sh.max_horizon],
-            dtype=np.int64,
-        ),
-        feature_cols=np.array(model.feature_cols, dtype=object),
-        model_ids=np.array(sorted(model.params), dtype=np.int64),
-        mu=model.mu if model.mu is not None else np.zeros(sh.f),
-        sd=model.sd if model.sd is not None else np.ones(sh.f),
-        **{f"p_{m}": model.params[m] for m in model.params},
-    )
-
-
-def load_bilstm(path: str) -> BiLstmModel:
-    import os
-
-    z = np.load(os.path.join(path, "bilstm.npz"), allow_pickle=True)
-    f, window, hidden, conv, attn, max_h = (int(x) for x in z["meta"])
-    sh = BiLstmShapes(f, window, hidden, conv, attn, max_h)
-    model = BiLstmModel([str(c) for c in z["feature_cols"]], sh)
-    model.params = {int(m): z[f"p_{int(m)}"] for m in z["model_ids"]}
-    model.mu, model.sd = z["mu"], z["sd"]
-    return model
+class BiLstmConfig:
+    shapes: ClassVar[type[Shapes]] = BiLstmShapes
+    window: int = 8          # last-W frames (nn-lstm.py's window pipeline)
+    hidden: int = 10         # LSTM width PER DIRECTION (reference 192)
+    conv: int = 6            # conv channels (reference 64)
+    attn: int = 8            # attention-pooling projection width
+    max_horizon: int = 16    # head emits this many per-0.1s-step increments
+    lr: float = 0.05
+    epochs: int = 60
+    huber_delta: float = 1.0
+    horizon_decay: float | None = None
+    seed: int = 11
+    partitions: int = 8

@@ -3,7 +3,7 @@
 the M9 sequence encoders: blend two (or more) encoders' OOF
 prediction columns with weights ∝ 1/RMSE.  Output-space blending is
 the correct composition for nonlinear learners (the same reason
-ml/rnn._predict_seq averages fold PREDICTIONS, not parameters).
+ml/rnn.predict_encoder averages fold PREDICTIONS, not parameters).
 
 Measured on the tracking fixture (MEASURED.md round 5): GRU 1.945 +
 BiLSTM 2.142 → blend 1.926, beating the best single encoder — the

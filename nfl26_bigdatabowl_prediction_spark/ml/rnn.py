@@ -21,6 +21,14 @@ rows, so partials sum associatively — the same posexplode →
 groupBy(model, pos) → sum reduce as seqreg's Gram pass), and only
 (K+1)·P scalars reach the driver, which applies the Adam update.
 
+This module also hosts the one encoder lifecycle every sequence
+encoder shares — ``Shapes`` (parameter layout + init),
+``EncoderModel``, ``train_encoder`` / ``predict_encoder`` /
+``train_and_predict_encoder`` / ``save_encoder`` / ``load_encoder``.
+An encoder module (this GRU, ml/bilstm.py, ml/transformer.py) is only
+its ``Shapes`` subclass — ``sizes()`` plus its bound ``forward`` /
+``backward`` kernels — and a config naming that class.
+
 Scale notes (the 100 TB shape):
 - This is exactly how synchronous distributed SGD works on any
   data-parallel framework: broadcast params, all-reduce gradients.
@@ -40,51 +48,38 @@ bitwise-identical models.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Iterator
+import os
+from dataclasses import dataclass, field, fields
+from typing import ClassVar, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.features import TRAJECTORY_KEY, advanced_features, build_training_rows, clip
-from .folds import with_fold
-from .scoring import score
-from .seqreg import DEFAULT_SEQ_FEATURES, window_matrix
+from ..plans.features import clip
+from .seqreg import SeqTrainResult, oof_result, training_frame
 
 
 @dataclass
-class GruConfig:
-    window: int = 8          # last-W frames (nn-mps.py:616)
-    hidden: int = 12         # GRU width (reference uses 128; scaled to fixture)
-    attn: int = 8            # attention-pooling projection width
-    max_horizon: int = 16    # head emits this many per-0.1s-step increments
-    lr: float = 0.05
-    epochs: int = 60         # OOF optimum on the tracking fixture:
-                             # 60 ep → 1.945, 120 ep → 2.121 (overfit)
-    huber_delta: float = 1.0  # TemporalHuber's delta
-    horizon_decay: float | None = None  # row weight = decay ** delta_t
-    seed: int = 7
-    partitions: int = 8      # gradient-scan parallelism at test scale
+class Shapes:
+    """One encoder's flat parameter layout.  A subclass adds its width
+    fields (each named like the config field it comes from), lists its
+    tensors in ``sizes()``, and binds its kernels as static methods:
+    ``forward(p, X, dt, sh) -> (pred, cache)`` and
+    ``backward(p, cache, dpred, sh) -> grads``.  ``prefix`` names its
+    prediction columns and is the encoder name a saved model carries."""
 
-
-@dataclass
-class GruShapes:
     f: int
     window: int
-    hidden: int
-    attn: int
-    max_horizon: int
+
+    prefix: ClassVar[str]
+    # drawn at std 0.02 instead of Glorot (the reference's token
+    # embeddings use 0.01/0.02)
+    small_init: ClassVar[tuple[str, ...]] = ()
 
     def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
-        h, f, a, m = self.hidden, self.f, self.attn, self.max_horizon
-        return [
-            ("W_ih", (3 * h, f)), ("W_hh", (3 * h, h)),
-            ("b_ih", (3 * h,)), ("b_hh", (3 * h,)),
-            ("Wa", (h, a)), ("ba", (a,)), ("va", (a,)),
-            ("Wo", (h, 2 * m)), ("bo", (2 * m,)),
-        ]
+        raise NotImplementedError
 
     @property
     def n_params(self) -> int:
@@ -99,22 +94,24 @@ class GruShapes:
         return out
 
     def init(self, seed: int) -> np.ndarray:
-        """Glorot-ish deterministic init (seeded PCG64)."""
+        """Glorot-ish deterministic init (seeded PCG64), zero biases."""
         rng = np.random.default_rng(seed)
         parts = []
         for name, shape in self.sizes():
             if name.startswith("b"):
                 parts.append(np.zeros(shape))
+            elif name in self.small_init:
+                parts.append(rng.normal(0.0, 0.02, size=shape).ravel())
             else:
-                fan = sum(shape) if len(shape) > 1 else shape[0]
+                fan = sum(shape[:2]) if len(shape) > 1 else shape[0]
                 parts.append(rng.normal(0.0, np.sqrt(2.0 / fan), size=shape).ravel())
         return np.concatenate(parts)
 
 
 @dataclass
-class GruModel:
+class EncoderModel:
     feature_cols: list[str]
-    shapes: GruShapes
+    shapes: Shapes
     # model id -> flat params; -1 is the pooled (all-rows) model
     params: dict[int, np.ndarray] = field(default_factory=dict)
     # per-feature standardization (computed once, Spark-side); raw
@@ -216,21 +213,50 @@ def _backward(
     return g
 
 
+@dataclass
+class GruShapes(Shapes):
+    hidden: int
+    attn: int
+    max_horizon: int
+
+    prefix: ClassVar[str] = "rnn"
+    forward = staticmethod(_forward)
+    backward = staticmethod(_backward)
+
+    def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
+        h, f, a, m = self.hidden, self.f, self.attn, self.max_horizon
+        return [
+            ("W_ih", (3 * h, f)), ("W_hh", (3 * h, h)),
+            ("b_ih", (3 * h,)), ("b_hh", (3 * h,)),
+            ("Wa", (h, a)), ("ba", (a,)), ("va", (a,)),
+            ("Wo", (h, 2 * m)), ("bo", (2 * m,)),
+        ]
+
+
+@dataclass
+class GruConfig:
+    shapes: ClassVar[type[Shapes]] = GruShapes
+    window: int = 8          # last-W frames (nn-mps.py:616)
+    hidden: int = 12         # GRU width (reference uses 128; scaled to fixture)
+    attn: int = 8            # attention-pooling projection width
+    max_horizon: int = 16    # head emits this many per-0.1s-step increments
+    lr: float = 0.05
+    epochs: int = 60         # OOF optimum on the tracking fixture:
+                             # 60 ep → 1.945, 120 ep → 2.121 (overfit)
+    huber_delta: float = 1.0  # TemporalHuber's delta
+    horizon_decay: float | None = None  # row weight = decay ** delta_t
+    seed: int = 7
+    partitions: int = 8      # gradient-scan parallelism at test scale
+
+
 def _loss_grad_pack(
-    params: dict[int, np.ndarray], pdf: pd.DataFrame, sh,
+    params: dict[int, np.ndarray], pdf: pd.DataFrame, sh: Shapes,
     huber_delta: float, horizon_decay: float | None,
     mu: np.ndarray, sd: np.ndarray,
-    forward=None, backward=None,
 ) -> list[tuple[int, list[float]]]:
     """Per-model [grad..., loss_sum, weight_sum] pack for one Arrow
-    batch.  Model m trains on rows with fold != m; model −1 on all.
-
-    ``sh`` is any shapes object exposing f/window/max_horizon/sizes/
-    unpack; ``forward``/``backward`` default to the GRU kernels so
-    other encoders (ml/bilstm.py, ml/transformer.py) can ride the
-    same trainer."""
-    forward = forward or _forward
-    backward = backward or _backward
+    batch through ``sh``'s kernels.  Model m trains on rows with
+    fold != m; model −1 on all."""
     X = np.array(pdf["x_seq"].tolist(), dtype=np.float64).reshape(
         len(pdf), sh.window, sh.f
     )
@@ -254,7 +280,7 @@ def _loss_grad_pack(
         if not sel.any():
             continue
         p = sh.unpack(flat)
-        pred, cache = forward(p, X[sel], dt[sel], sh)
+        pred, cache = sh.forward(p, X[sel], dt[sel], sh)
         e = pred - y[sel]
         ae = np.abs(e)
         # Huber: ½e² below delta, δ(|e| − ½δ) above (TemporalHuber core)
@@ -262,7 +288,7 @@ def _loss_grad_pack(
                      huber_delta * (ae - 0.5 * huber_delta))
         dl = np.where(ae <= huber_delta, e, huber_delta * np.sign(e))
         ws = w[sel][:, None]
-        g = backward(p, cache, dl * ws, sh)
+        g = sh.backward(p, cache, dl * ws, sh)
         flatg = np.concatenate([g[name].ravel() for name, _ in sh.sizes()])
         rows.append(
             (int(m), np.concatenate([flatg, [(l * ws).sum(), 2.0 * ws.sum()]]).tolist())
@@ -270,16 +296,19 @@ def _loss_grad_pack(
     return rows
 
 
-def _train_seq(
-    train: DataFrame, k: int, cfg, sh, forward=None, backward=None,
-) -> tuple[dict[int, np.ndarray], np.ndarray, np.ndarray]:
-    """Generic synchronous data-parallel Adam trainer over any
-    (shapes, forward, backward) encoder triple — the GRU, the
-    CNN+BiLSTM (ml/bilstm.py) and the spatio-temporal transformer
-    (ml/transformer.py) all ride this loop.  Expects columns
-    fold, x_seq (array<double>, len W·f), res_x, res_y, delta_t.
-    Trains K leave-one-fold-out models + pooled (−1), all in one scan
-    per epoch.  Returns (params-by-model, mu, sd)."""
+def train_encoder(
+    train: DataFrame, feature_cols: list[str], k: int, cfg,
+) -> EncoderModel:
+    """Synchronous data-parallel Adam over the encoder ``cfg`` names
+    (``cfg.shapes``: the GRU, the CNN+BiLSTM of ml/bilstm.py or the
+    spatio-temporal transformer of ml/transformer.py).  Expects
+    columns fold, x_seq (array<double>, len W·f), res_x, res_y,
+    delta_t.  Trains K leave-one-fold-out models + pooled (−1), all in
+    one scan per epoch."""
+    sh = cfg.shapes(f=len(feature_cols), **{
+        fl.name: getattr(cfg, fl.name)
+        for fl in fields(cfg.shapes) if fl.name != "f"
+    })
     P = sh.n_params
     f = sh.f
     # ONE tiny distributed agg for per-feature standardization (pad
@@ -315,8 +344,7 @@ def _train_seq(
                 if len(pdf):
                     yield pd.DataFrame(
                         _loss_grad_pack(cur, pdf, sh, cfg.huber_delta,
-                                        cfg.horizon_decay, mu, sd,
-                                        forward, backward),
+                                        cfg.horizon_decay, mu, sd),
                         columns=["model", "g"],
                     )
 
@@ -342,31 +370,18 @@ def _train_seq(
             models[m] = models[m] - cfg.lr * mhat / (np.sqrt(vhat) + eps)
 
     src.unpersist()
-    return models, mu, sd
+    return EncoderModel(feature_cols, sh, models, mu, sd)
 
 
-def train_gru(
-    train: DataFrame, feature_cols: list[str], k: int, cfg: GruConfig,
-) -> GruModel:
-    """GRU instantiation of the generic trainer."""
-    sh = GruShapes(len(feature_cols), cfg.window, cfg.hidden, cfg.attn,
-                   cfg.max_horizon)
-    models, mu, sd = _train_seq(train, k, cfg, sh)
-    model = GruModel(feature_cols, sh)
-    model.params = models
-    model.mu, model.sd = mu, sd
-    return model
-
-
-def _predict_seq(
-    model, df: DataFrame, oof: bool, out_prefix: str, forward=None,
+def predict_encoder(
+    model: EncoderModel, df: DataFrame, oof: bool = True,
 ) -> DataFrame:
     """Adds {prefix}_pred_x / {prefix}_pred_y = clip(baseline +
-    encoder residual).  ``oof=True`` routes each row to the model that
-    never saw its fold; ``oof=False`` averages the K fold models'
-    PREDICTIONS (a nonlinear net's fold ensemble is an output-space
-    mean, unlike the linear coefficient mean in seqreg.predict_seq)."""
-    forward = forward or _forward
+    encoder residual), prefix from the model's shapes.  ``oof=True``
+    routes each row to the model that never saw its fold;
+    ``oof=False`` averages the K fold models' PREDICTIONS (a nonlinear
+    net's fold ensemble is an output-space mean, unlike the linear
+    coefficient mean in seqreg.predict_seq)."""
     sh = model.shapes
     params = {m: v.copy() for m, v in model.params.items()}
     mu = model.mu if model.mu is not None else np.zeros(sh.f)
@@ -395,12 +410,12 @@ def _predict_seq(
                     )
                 idx = np.where(fv == m)[0]
                 p = sh.unpack(params[int(m)])
-                out[idx], _ = forward(p, X[idx], dt[idx], sh)
+                out[idx], _ = sh.forward(p, X[idx], dt[idx], sh)
         else:
             folds = [m for m in params if m >= 0]
             acc = np.zeros((len(X), 2))
             for m in folds:
-                pr, _ = forward(sh.unpack(params[m]), X, dt, sh)
+                pr, _ = sh.forward(sh.unpack(params[m]), X, dt, sh)
                 acc += pr
             out = acc / len(folds)
         return pd.Series([r.tolist() for r in out])
@@ -411,77 +426,44 @@ def _predict_seq(
     )
     return (
         p.withColumn(
-            f"{out_prefix}_pred_x",
+            f"{sh.prefix}_pred_x",
             clip(F.col("baseline_x") + F.col("_p")[0], 0.0, 120.0),
         )
         .withColumn(
-            f"{out_prefix}_pred_y",
+            f"{sh.prefix}_pred_y",
             clip(F.col("baseline_y") + F.col("_p")[1], 0.0, 53.3),
         )
         .drop("_p")
     )
 
 
-def predict_gru(model: GruModel, df: DataFrame, oof: bool = True) -> DataFrame:
-    """Adds rnn_pred_x / rnn_pred_y (GRU instantiation)."""
-    return _predict_seq(model, df, oof, "rnn")
-
-
-@dataclass
-class GruTrainResult:
-    predictions: DataFrame
-    rmse_baseline: float
-    rmse_rnn: float
-
-
-def train_and_predict_gru(
+def train_and_predict_encoder(
     input_df: DataFrame,
     output_df: DataFrame,
+    cfg,
     feature_cols: list[str] | None = None,
     k: int = 5,
-    cfg: GruConfig | None = None,
-) -> GruTrainResult:
-    """E2's lifecycle (nn-mps.py:874-988) with the real recurrent
-    learner: per-frame physics features → last-W windows → grouped
-    folds → distributed-Adam GRU fit → OOF prediction → metric."""
-    cfg = cfg or GruConfig()
-    feats = advanced_features(input_df)
-    cols = [
-        c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
-    ]
-    seq = window_matrix(feats, cols, cfg.window)
-    labeled = build_training_rows(feats, output_df)
-    train = (
-        labeled.filter(F.col("last_x").isNotNull())
-        .join(seq, list(TRAJECTORY_KEY))
-    )
-    train = with_fold(train, list(TRAJECTORY_KEY), k=k).cache()
-    model = train_gru(train, cols, k, cfg)
-    pred = predict_gru(model, train, oof=True)
-    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
-    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
-    rn = pred.select("id", F.col("rnn_pred_x").alias("x"), F.col("rnn_pred_y").alias("y"))
-    return GruTrainResult(
-        predictions=pred,
-        rmse_baseline=score(sol, base),
-        rmse_rnn=score(sol, rn),
-    )
+) -> SeqTrainResult:
+    """E2's lifecycle (nn-mps.py:874-988) with the encoder ``cfg``
+    names: per-frame physics features → last-W windows → grouped
+    folds → distributed-Adam fit → OOF prediction → metric."""
+    train, cols = training_frame(input_df, output_df, feature_cols, cfg.window, k)
+    model = train_encoder(train, cols, k, cfg)
+    return oof_result(predict_encoder(model, train, oof=True), model.shapes.prefix)
 
 
-def save_gru(model: GruModel, path: str) -> None:
-    """S5 analog for the recurrent learner (reference pickles its
-    torch state dicts, main_cuda.py:1544-1559): one compressed npz —
-    flat parameter vectors per model id + shapes + standardization."""
-    import os
-
+def save_encoder(model: EncoderModel, path: str) -> None:
+    """S5 analog for the sequence encoders (reference pickles its
+    torch state dicts, main_cuda.py:1544-1559): one compressed npz of
+    plain arrays — encoder name, shapes fields by name, feature names,
+    flat parameter vectors per model id, standardization."""
     os.makedirs(path, exist_ok=True)
     sh = model.shapes
     np.savez_compressed(
-        os.path.join(path, "gru.npz"),
-        meta=np.array(
-            [sh.f, sh.window, sh.hidden, sh.attn, sh.max_horizon], dtype=np.int64
-        ),
-        feature_cols=np.array(model.feature_cols, dtype=object),
+        os.path.join(path, "encoder.npz"),
+        encoder=np.array(sh.prefix),
+        **{f"shape_{fl.name}": np.int64(getattr(sh, fl.name)) for fl in fields(sh)},
+        feature_cols=np.array(model.feature_cols, dtype=str),
         model_ids=np.array(sorted(model.params), dtype=np.int64),
         mu=model.mu if model.mu is not None else np.zeros(sh.f),
         sd=model.sd if model.sd is not None else np.ones(sh.f),
@@ -489,13 +471,20 @@ def save_gru(model: GruModel, path: str) -> None:
     )
 
 
-def load_gru(path: str) -> GruModel:
-    import os
-
-    z = np.load(os.path.join(path, "gru.npz"), allow_pickle=True)
-    f, window, hidden, attn, max_h = (int(x) for x in z["meta"])
-    sh = GruShapes(f, window, hidden, attn, max_h)
-    model = GruModel([str(c) for c in z["feature_cols"]], sh)
-    model.params = {int(m): z[f"p_{int(m)}"] for m in z["model_ids"]}
-    model.mu, model.sd = z["mu"], z["sd"]
-    return model
+def load_encoder(path: str, shapes: type[Shapes]) -> EncoderModel:
+    """Inverse of save_encoder.  Never unpickles (an object array in
+    the file raises), and refuses a file saved by another encoder."""
+    with np.load(os.path.join(path, "encoder.npz"), allow_pickle=False) as z:
+        stored = str(z["encoder"])
+        if stored != shapes.prefix:
+            raise ValueError(
+                f"{path} holds encoder {stored!r}, not {shapes.prefix!r}"
+            )
+        sh = shapes(**{fl.name: int(z[f"shape_{fl.name}"]) for fl in fields(shapes)})
+        return EncoderModel(
+            [str(c) for c in z["feature_cols"]],
+            sh,
+            {int(m): z[f"p_{int(m)}"] for m in z["model_ids"]},
+            z["mu"],
+            z["sd"],
+        )

@@ -278,7 +278,41 @@ def predict_seq(
 class SeqTrainResult:
     predictions: DataFrame
     rmse_baseline: float
-    rmse_seq: float
+    rmse_model: float
+
+
+def training_frame(
+    input_df: DataFrame, output_df: DataFrame,
+    feature_cols: list[str] | None, window: int, k: int,
+) -> tuple[DataFrame, list[str]]:
+    """The training frame every sequence learner shares: per-frame
+    physics features → last-W windows → labeled rows → grouped folds,
+    cached.  Returns (frame, the feature columns present)."""
+    feats = advanced_features(input_df)
+    cols = [
+        c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
+    ]
+    seq = window_matrix(feats, cols, window)
+    labeled = build_training_rows(feats, output_df)
+    train = (
+        labeled.filter(F.col("last_x").isNotNull())
+        .join(seq, list(TRAJECTORY_KEY))
+    )
+    return with_fold(train, list(TRAJECTORY_KEY), k=k).cache(), cols
+
+
+def oof_result(pred: DataFrame, prefix: str) -> SeqTrainResult:
+    """Official metric of the baseline and of {prefix}_pred_x/_y."""
+    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
+    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
+    mdl = pred.select(
+        "id", F.col(f"{prefix}_pred_x").alias("x"), F.col(f"{prefix}_pred_y").alias("y")
+    )
+    return SeqTrainResult(
+        predictions=pred,
+        rmse_baseline=score(sol, base),
+        rmse_model=score(sol, mdl),
+    )
 
 
 def train_and_predict_seq(
@@ -292,28 +326,9 @@ def train_and_predict_seq(
     learner: per-frame physics features → last-W windows → grouped
     folds → normal-equation fit → OOF prediction → official metric."""
     cfg = cfg or SeqRegConfig()
-    feats = advanced_features(input_df)
-    cols = [
-        c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
-    ]
-    seq = window_matrix(feats, cols, cfg.window)
-    labeled = build_training_rows(feats, output_df)
-    train = (
-        labeled.filter(F.col("last_x").isNotNull())
-        .join(seq, list(TRAJECTORY_KEY))
-        .withColumn(
-            "x_vec",
-            F.expr("concat(x_seq, array(delta_t, cast(1.0 as double)))"),
-        )
+    train, cols = training_frame(input_df, output_df, feature_cols, cfg.window, k)
+    train = train.withColumn(
+        "x_vec", F.expr("concat(x_seq, array(delta_t, cast(1.0 as double)))")
     )
-    train = with_fold(train, list(TRAJECTORY_KEY), k=k).cache()
     model = train_seq_reg(train, cols, cfg.window, k, cfg)
-    pred = predict_seq(model, train, oof=True)
-    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
-    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
-    sq = pred.select("id", F.col("seq_pred_x").alias("x"), F.col("seq_pred_y").alias("y"))
-    return SeqTrainResult(
-        predictions=pred,
-        rmse_baseline=score(sol, base),
-        rmse_seq=score(sol, sq),
-    )
+    return oof_result(predict_seq(model, train, oof=True), "seq")

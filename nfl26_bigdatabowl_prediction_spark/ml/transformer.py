@@ -11,8 +11,8 @@ The reference's STTransformer (nn/nn-transformer.py:558-750):
 3) attention pooling over time → MLP head → ``torch.cumsum``.
 
 Re-expressed from scratch in numpy (float64, deterministic) as a
-drop-in (shapes, forward, backward) triple for the generic
-synchronous data-parallel Adam trainer (ml/rnn.py::_train_seq).
+drop-in (shapes, forward, backward) triple for the one
+synchronous data-parallel Adam trainer (ml/rnn.py::train_encoder).
 Scaled to the fixture like the other encoders (reference: d_model
 128, 4 heads, 2+2 layers, GRU residual path, dual pooling; here:
 single-head, one spatial + one temporal block, pre-softmax scaling
@@ -24,97 +24,12 @@ and the standardized inputs play its role at the first layer.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..plans.features import TRAJECTORY_KEY, advanced_features, build_training_rows
-from .folds import with_fold
-from .rnn import _predict_seq, _train_seq
-from .scoring import score
-from .seqreg import DEFAULT_SEQ_FEATURES, window_matrix
-
-
-@dataclass
-class TransformerConfig:
-    window: int = 8          # last-W frames
-    d_model: int = 8         # token width (reference 128)
-    ffn: int = 16            # feed-forward hidden width (reference 4·d)
-    attn: int = 8            # attention-pooling projection width
-    max_horizon: int = 16    # head emits this many per-0.1s-step increments
-    lr: float = 0.03
-    epochs: int = 80
-    huber_delta: float = 1.0
-    horizon_decay: float | None = None
-    seed: int = 13
-    partitions: int = 8
-
-
-@dataclass
-class TransformerShapes:
-    f: int
-    window: int
-    d_model: int
-    ffn: int
-    attn: int
-    max_horizon: int
-
-    def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
-        f, d, ff, a, m = self.f, self.d_model, self.ffn, self.attn, self.max_horizon
-        blk = lambda tag: [  # noqa: E731 — one attention+FFN block
-            (f"Wq_{tag}", (d, d)), (f"Wk_{tag}", (d, d)),
-            (f"Wv_{tag}", (d, d)), (f"Wo_{tag}", (d, d)),
-            (f"W1_{tag}", (d, ff)), (f"b1_{tag}", (ff,)),
-            (f"W2_{tag}", (ff, d)), (f"b2_{tag}", (d,)),
-        ]
-        return [
-            # feature-as-token embeddings + [CLS]
-            ("Wval", (f, d)), ("Etok", (f, d)), ("cls", (d,)),
-            *blk("s"),   # spatial block (across feature tokens)
-            *blk("t"),   # temporal block (across timesteps)
-            # attention pooling over time
-            ("Wa", (d, a)), ("ba", (a,)), ("va", (a,)),
-            # head: per-step increments, cumsum outside
-            ("Wh", (d, 2 * m)), ("bh", (2 * m,)),
-        ]
-
-    @property
-    def n_params(self) -> int:
-        return sum(int(np.prod(s)) for _, s in self.sizes())
-
-    def unpack(self, flat: np.ndarray) -> dict[str, np.ndarray]:
-        out, pos = {}, 0
-        for name, shape in self.sizes():
-            n = int(np.prod(shape))
-            out[name] = flat[pos : pos + n].reshape(shape)
-            pos += n
-        return out
-
-    def init(self, seed: int) -> np.ndarray:
-        """Glorot-ish deterministic init (seeded PCG64), zero biases,
-        small-scale token embeddings (the reference uses 0.01/0.02)."""
-        rng = np.random.default_rng(seed)
-        parts = []
-        for name, shape in self.sizes():
-            if name.startswith("b"):
-                parts.append(np.zeros(shape))
-            elif name in ("Wval", "Etok", "cls"):
-                parts.append(rng.normal(0.0, 0.02, size=shape).ravel())
-            else:
-                fan = sum(shape) if len(shape) > 1 else shape[0]
-                parts.append(rng.normal(0.0, np.sqrt(2.0 / fan), size=shape).ravel())
-        return np.concatenate(parts)
-
-
-@dataclass
-class TransformerModel:
-    feature_cols: list[str]
-    shapes: TransformerShapes
-    params: dict[int, np.ndarray] = field(default_factory=dict)
-    mu: np.ndarray | None = None
-    sd: np.ndarray | None = None
+from .rnn import Shapes
 
 
 def _sinusoidal_pe(Wn: int, d: int) -> np.ndarray:
@@ -264,95 +179,49 @@ def _backward(
     return g
 
 
-def train_transformer(
-    train: DataFrame, feature_cols: list[str], k: int, cfg: TransformerConfig,
-) -> TransformerModel:
-    """Spatio-temporal transformer instantiation of the generic
-    data-parallel trainer (ml/rnn.py::_train_seq)."""
-    sh = TransformerShapes(len(feature_cols), cfg.window, cfg.d_model,
-                           cfg.ffn, cfg.attn, cfg.max_horizon)
-    models, mu, sd = _train_seq(train, k, cfg, sh, _forward, _backward)
-    model = TransformerModel(feature_cols, sh)
-    model.params = models
-    model.mu, model.sd = mu, sd
-    return model
+@dataclass
+class TransformerShapes(Shapes):
+    d_model: int
+    ffn: int
+    attn: int
+    max_horizon: int
 
+    prefix: ClassVar[str] = "stt"
+    small_init: ClassVar[tuple[str, ...]] = ("Wval", "Etok", "cls")
+    forward = staticmethod(_forward)
+    backward = staticmethod(_backward)
 
-def predict_transformer(
-    model: TransformerModel, df: DataFrame, oof: bool = True,
-) -> DataFrame:
-    """Adds stt_pred_x / stt_pred_y."""
-    return _predict_seq(model, df, oof, "stt", _forward)
+    def sizes(self) -> list[tuple[str, tuple[int, ...]]]:
+        f, d, ff, a, m = self.f, self.d_model, self.ffn, self.attn, self.max_horizon
+        blk = lambda tag: [  # noqa: E731 — one attention+FFN block
+            (f"Wq_{tag}", (d, d)), (f"Wk_{tag}", (d, d)),
+            (f"Wv_{tag}", (d, d)), (f"Wo_{tag}", (d, d)),
+            (f"W1_{tag}", (d, ff)), (f"b1_{tag}", (ff,)),
+            (f"W2_{tag}", (ff, d)), (f"b2_{tag}", (d,)),
+        ]
+        return [
+            # feature-as-token embeddings + [CLS]
+            ("Wval", (f, d)), ("Etok", (f, d)), ("cls", (d,)),
+            *blk("s"),   # spatial block (across feature tokens)
+            *blk("t"),   # temporal block (across timesteps)
+            # attention pooling over time
+            ("Wa", (d, a)), ("ba", (a,)), ("va", (a,)),
+            # head: per-step increments, cumsum outside
+            ("Wh", (d, 2 * m)), ("bh", (2 * m,)),
+        ]
 
 
 @dataclass
-class TransformerTrainResult:
-    predictions: DataFrame
-    rmse_baseline: float
-    rmse_stt: float
-
-
-def train_and_predict_transformer(
-    input_df: DataFrame,
-    output_df: DataFrame,
-    feature_cols: list[str] | None = None,
-    k: int = 5,
-    cfg: TransformerConfig | None = None,
-) -> TransformerTrainResult:
-    """E2's lifecycle with the spatio-temporal transformer encoder:
-    per-frame physics features → last-W windows → grouped folds →
-    distributed-Adam fit → OOF prediction → metric."""
-    cfg = cfg or TransformerConfig()
-    feats = advanced_features(input_df)
-    cols = [
-        c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
-    ]
-    seq = window_matrix(feats, cols, cfg.window)
-    labeled = build_training_rows(feats, output_df)
-    train = (
-        labeled.filter(F.col("last_x").isNotNull())
-        .join(seq, list(TRAJECTORY_KEY))
-    )
-    train = with_fold(train, list(TRAJECTORY_KEY), k=k).cache()
-    model = train_transformer(train, cols, k, cfg)
-    pred = predict_transformer(model, train, oof=True)
-    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
-    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
-    st = pred.select("id", F.col("stt_pred_x").alias("x"), F.col("stt_pred_y").alias("y"))
-    return TransformerTrainResult(
-        predictions=pred,
-        rmse_baseline=score(sol, base),
-        rmse_stt=score(sol, st),
-    )
-
-
-def save_transformer(model: TransformerModel, path: str) -> None:
-    """S5 analog: one compressed npz (mirrors save_gru/save_bilstm)."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    sh = model.shapes
-    np.savez_compressed(
-        os.path.join(path, "stt.npz"),
-        meta=np.array(
-            [sh.f, sh.window, sh.d_model, sh.ffn, sh.attn, sh.max_horizon],
-            dtype=np.int64,
-        ),
-        feature_cols=np.array(model.feature_cols, dtype=object),
-        model_ids=np.array(sorted(model.params), dtype=np.int64),
-        mu=model.mu if model.mu is not None else np.zeros(sh.f),
-        sd=model.sd if model.sd is not None else np.ones(sh.f),
-        **{f"p_{m}": model.params[m] for m in model.params},
-    )
-
-
-def load_transformer(path: str) -> TransformerModel:
-    import os
-
-    z = np.load(os.path.join(path, "stt.npz"), allow_pickle=True)
-    f, window, d_model, ffn, attn, max_h = (int(x) for x in z["meta"])
-    sh = TransformerShapes(f, window, d_model, ffn, attn, max_h)
-    model = TransformerModel([str(c) for c in z["feature_cols"]], sh)
-    model.params = {int(m): z[f"p_{int(m)}"] for m in z["model_ids"]}
-    model.mu, model.sd = z["mu"], z["sd"]
-    return model
+class TransformerConfig:
+    shapes: ClassVar[type[Shapes]] = TransformerShapes
+    window: int = 8          # last-W frames
+    d_model: int = 8         # token width (reference 128)
+    ffn: int = 16            # feed-forward hidden width (reference 4·d)
+    attn: int = 8            # attention-pooling projection width
+    max_horizon: int = 16    # head emits this many per-0.1s-step increments
+    lr: float = 0.03
+    epochs: int = 80
+    huber_delta: float = 1.0
+    horizon_decay: float | None = None
+    seed: int = 13
+    partitions: int = 8

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..functions.scalar import cents as _cents
 from ..sources.io import table
 from .registry import registrar
 
@@ -42,10 +43,6 @@ DW_FULL = f"{DW} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
 
 def _w():
     return W.partitionBy("user_id").orderBy("ts", "event_id")
-
-
-def _cents(c):
-    return F.round(c * F.lit(100.0), 0).cast("bigint")
 
 
 # --------------------------------------------------------------------------

@@ -29,6 +29,7 @@ from ..streaming import (
     streaming_ewm,
     tumbling_counts,
 )
+from ..streaming.stateful import _FUNNEL_GAP_US
 from .registry import registrar
 
 QUERIES: dict = {}
@@ -517,7 +518,6 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch chained-argmin form: first view, first in-window click after
 # it, first in-window purchase after that, each with its event id.
 # --------------------------------------------------------------------------
-_FUNNEL_GAP_US = 3600 * 10**6
 
 
 @q(

@@ -22,9 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _cents(c):
-    return F.round(c * F.lit(100.0), 0).cast("bigint")
+from ..functions.scalar import cents as _cents
 
 
 def tumbling_totals(

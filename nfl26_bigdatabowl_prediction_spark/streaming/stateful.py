@@ -176,6 +176,51 @@ FUNNEL_STATE_SCHEMA = T.StructType(
 _FUNNEL_GAP_US = 3600 * 10**6
 
 
+def _funnel_advance(
+    pdf_iter: Iterator[pd.DataFrame],
+    t1: int | None, t2: int | None, t3: int | None,
+) -> tuple[list[pd.DataFrame], tuple[int | None, int | None, int | None]]:
+    """The view → click → purchase advance loop both funnel machines
+    share: each hop must land in (previous stage, previous stage +
+    1 h].  Returns the group's advance rows (no frame for an empty
+    group) and the new (t1, t2, t3)."""
+    # Whole-group drain before sorting: Arrow batch-boundary splits
+    # deliver a group as multiple arbitrary-order chunks (see ewm_fn;
+    # found by the round-8 8x differential).
+    chunks = [p for p in pdf_iter if len(p)]
+    if not chunks:
+        return [], (t1, t2, t3)
+    pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "event_id"])
+    out = {"user_id": [], "event_id": [], "stage": [], "ts_us": []}
+    for uid, eid, ts, et in zip(
+        pdf["user_id"], pdf["event_id"], pdf["ts"], pdf["event_type"]
+    ):
+        ts = int(ts)
+        stage = None
+        if et == "view" and t1 is None:
+            t1, stage = ts, 1
+        elif (
+            et == "click"
+            and t1 is not None
+            and t2 is None
+            and t1 < ts <= t1 + _FUNNEL_GAP_US
+        ):
+            t2, stage = ts, 2
+        elif (
+            et == "purchase"
+            and t2 is not None
+            and t3 is None
+            and t2 < ts <= t2 + _FUNNEL_GAP_US
+        ):
+            t3, stage = ts, 3
+        if stage is not None:
+            out["user_id"].append(int(uid))
+            out["event_id"].append(int(eid))
+            out["stage"].append(stage)
+            out["ts_us"].append(ts)
+    return [pd.DataFrame(out)], (t1, t2, t3)
+
+
 def _funnel_fn(
     key: Any, pdf_iter: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -185,52 +230,15 @@ def _funnel_fn(
     accumulated append output is identical however the micro-batches
     split (each advance fires exactly once); like streaming_ewm, the
     state machine assumes event-time-ordered arrival across batches
-    (exact under the drained single-source run the oracle checks)."""
-    t1: int | None
-    t2: int | None
-    t3: int | None
-    if state.exists:
-        # Stage timestamps are stored as nullable LongType directly —
-        # no -1 sentinel, so a legitimate ts of exactly 0 us (epoch)
-        # round-trips unchanged across micro-batches.
-        t1, t2, t3 = (v if v is not None else None for v in state.get)
-    else:
-        t1 = t2 = t3 = None
-    # Whole-group drain before sorting: Arrow batch-boundary splits
-    # deliver a group as multiple arbitrary-order chunks (see ewm_fn;
-    # found by the round-8 8x differential).
-    chunks = [p for p in pdf_iter if len(p)]
-    for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
-        pdf = pdf.sort_values(["ts", "event_id"])
-        out = {"user_id": [], "event_id": [], "stage": [], "ts_us": []}
-        for uid, eid, ts, et in zip(
-            pdf["user_id"], pdf["event_id"], pdf["ts"], pdf["event_type"]
-        ):
-            ts = int(ts)
-            stage = None
-            if et == "view" and t1 is None:
-                t1, stage = ts, 1
-            elif (
-                et == "click"
-                and t1 is not None
-                and t2 is None
-                and t1 < ts <= t1 + _FUNNEL_GAP_US
-            ):
-                t2, stage = ts, 2
-            elif (
-                et == "purchase"
-                and t2 is not None
-                and t3 is None
-                and t2 < ts <= t2 + _FUNNEL_GAP_US
-            ):
-                t3, stage = ts, 3
-            if stage is not None:
-                out["user_id"].append(int(uid))
-                out["event_id"].append(int(eid))
-                out["stage"].append(stage)
-                out["ts_us"].append(ts)
-        yield pd.DataFrame(out)
-    state.update((t1, t2, t3))
+    (exact under the drained single-source run the oracle checks).
+    Stage timestamps are stored as nullable LongType directly — no -1
+    sentinel, so a legitimate ts of exactly 0 us (epoch) round-trips
+    unchanged across micro-batches."""
+    frames, t = _funnel_advance(
+        pdf_iter, *(state.get if state.exists else (None, None, None))
+    )
+    yield from frames
+    state.update(t)
 
 
 def streaming_funnel(events: DataFrame) -> DataFrame:
@@ -294,52 +302,15 @@ def _funnel_ttl_fn(
         )
 
     if state.hasTimedOut:
-        t1, t2, _t3 = (v if v is not None else None for v in state.get)
+        t1, t2, _t3 = state.get
         last = t2 if t2 is not None else t1
         state.remove()
         yield _row(int(key[0]), None, 0, int(last))
         return
-    t1: int | None
-    t2: int | None
-    t3: int | None
-    if state.exists:
-        t1, t2, t3 = (v if v is not None else None for v in state.get)
-    else:
-        t1 = t2 = t3 = None
-    # Whole-group drain before sorting: Arrow batch-boundary splits
-    # deliver a group as multiple arbitrary-order chunks (see ewm_fn;
-    # found by the round-8 8x differential).
-    chunks = [p for p in pdf_iter if len(p)]
-    for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
-        pdf = pdf.sort_values(["ts", "event_id"])
-        out = {"user_id": [], "event_id": [], "stage": [], "ts_us": []}
-        for uid, eid, ts, et in zip(
-            pdf["user_id"], pdf["event_id"], pdf["ts"], pdf["event_type"]
-        ):
-            ts = int(ts)
-            stage = None
-            if et == "view" and t1 is None:
-                t1, stage = ts, 1
-            elif (
-                et == "click"
-                and t1 is not None
-                and t2 is None
-                and t1 < ts <= t1 + _FUNNEL_GAP_US
-            ):
-                t2, stage = ts, 2
-            elif (
-                et == "purchase"
-                and t2 is not None
-                and t3 is None
-                and t2 < ts <= t2 + _FUNNEL_GAP_US
-            ):
-                t3, stage = ts, 3
-            if stage is not None:
-                out["user_id"].append(int(uid))
-                out["event_id"].append(int(eid))
-                out["stage"].append(stage)
-                out["ts_us"].append(ts)
-        yield pd.DataFrame(out)
+    frames, (t1, t2, t3) = _funnel_advance(
+        pdf_iter, *(state.get if state.exists else (None, None, None))
+    )
+    yield from frames
     if t3 is not None:
         if state.exists:
             state.remove()

@@ -149,32 +149,22 @@ class _LazyEncoders:
 
                 self._tables = make_tracking_tables(self._spark)
             inp, outp = self._tables
-            if name == "gru":
-                from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
-                    GruConfig, train_and_predict_gru,
-                )
+            from nfl26_bigdatabowl_prediction_spark.ml.bilstm import BiLstmConfig
+            from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
+                GruConfig, train_and_predict_encoder,
+            )
+            from nfl26_bigdatabowl_prediction_spark.ml.transformer import (
+                TransformerConfig,
+            )
 
-                self._cache[name] = train_and_predict_gru(
-                    inp, outp, k=5, cfg=GruConfig(horizon_decay=0.9)
-                )
-            elif name == "bilstm":
-                from nfl26_bigdatabowl_prediction_spark.ml.bilstm import (
-                    BiLstmConfig, train_and_predict_bilstm,
-                )
-
-                self._cache[name] = train_and_predict_bilstm(
-                    inp, outp, k=5, cfg=BiLstmConfig(horizon_decay=0.9)
-                )
-            elif name == "transformer":
-                from nfl26_bigdatabowl_prediction_spark.ml.transformer import (
-                    TransformerConfig, train_and_predict_transformer,
-                )
-
-                self._cache[name] = train_and_predict_transformer(
-                    inp, outp, k=5, cfg=TransformerConfig(horizon_decay=0.9)
-                )
-            else:
-                raise KeyError(name)
+            configs = {
+                "gru": GruConfig,
+                "bilstm": BiLstmConfig,
+                "transformer": TransformerConfig,
+            }
+            self._cache[name] = train_and_predict_encoder(
+                inp, outp, k=5, cfg=configs[name](horizon_decay=0.9)
+            )
             self._disk_save(name, self._cache[name])
         return self._cache[name]
 

@@ -65,7 +65,7 @@ def test_bilstm_training_is_deterministic(spark):
     # init, full-batch gradients, float64 end-to-end.
     import pandas as pd
 
-    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import train_bilstm
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import train_encoder
     from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
 
     rng = np.random.default_rng(5)
@@ -82,8 +82,8 @@ def test_bilstm_training_is_deterministic(spark):
     df = with_fold(spark.createDataFrame(pdf), ["gid"], k=3)
     cfg = BiLstmConfig(window=w, hidden=4, conv=3, attn=3, max_horizon=6,
                        epochs=3, partitions=2)
-    m1 = train_bilstm(df, ["a", "b"], k=3, cfg=cfg)
-    m2 = train_bilstm(df, ["a", "b"], k=3, cfg=cfg)
+    m1 = train_encoder(df, ["a", "b"], k=3, cfg=cfg)
+    m2 = train_encoder(df, ["a", "b"], k=3, cfg=cfg)
     for key in m1.params:
         assert (m1.params[key] == m2.params[key]).all()
 
@@ -95,8 +95,8 @@ def test_bilstm_beats_physics_baseline(spark, trained_encoders):
     # 2.142 vs 2.887 (between the ridge 2.261 and the GRU 1.945 —
     # consistent with the reference keeping all three encoders).
     r = trained_encoders["bilstm"]
-    assert r.rmse_bilstm * 1.25 < r.rmse_baseline, (
-        r.rmse_bilstm, r.rmse_baseline,
+    assert r.rmse_model * 1.25 < r.rmse_baseline, (
+        r.rmse_model, r.rmse_baseline,
     )
     from pyspark.sql import functions as F
 
@@ -108,17 +108,17 @@ def test_bilstm_beats_physics_baseline(spark, trained_encoders):
 
 def test_bilstm_save_load_roundtrip(tmp_path):
     # S5 parity: bitwise param round-trip
-    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import (
-        BiLstmModel, load_bilstm, save_bilstm,
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
+        EncoderModel, load_encoder, save_encoder,
     )
 
     sh = BiLstmShapes(f=2, window=3, hidden=4, conv=3, attn=3, max_horizon=5)
-    m = BiLstmModel(["a", "b"], sh)
+    m = EncoderModel(["a", "b"], sh)
     m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}
     m.mu = np.array([0.5, -1.0])
     m.sd = np.array([2.0, 3.0])
-    save_bilstm(m, str(tmp_path / "m"))
-    m2 = load_bilstm(str(tmp_path / "m"))
+    save_encoder(m, str(tmp_path / "m"))
+    m2 = load_encoder(str(tmp_path / "m"), BiLstmShapes)
     assert m2.feature_cols == ["a", "b"]
     assert m2.shapes == sh
     for k in m.params:

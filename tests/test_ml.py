@@ -180,7 +180,7 @@ def test_seq_regressor_beats_physics_baseline(spark):
         k=5,
         cfg=SeqRegConfig(huber_delta=1.0, irls_iters=2, horizon_decay=0.9),
     )
-    assert r.rmse_seq < r.rmse_baseline, (r.rmse_seq, r.rmse_baseline)
+    assert r.rmse_model < r.rmse_baseline, (r.rmse_model, r.rmse_baseline)
     # OOF predictions are finite and in field bounds
     from pyspark.sql import functions as F
 
@@ -214,13 +214,13 @@ def test_encoder_ensemble_beats_best_single(spark, trained_encoders):
     b = rb.predictions.select("id", "bilstm_pred_x", "bilstm_pred_y")
     j = blend_predictions(
         g.join(b, "id"),
-        [("rnn", rg.rmse_rnn), ("bilstm", rb.rmse_bilstm)],
+        [("rnn", rg.rmse_model), ("bilstm", rb.rmse_model)],
     )
     sol = j.select("id", F.col("tx").alias("x"), F.col("ty").alias("y"))
     ens = j.select(
         "id", F.col("ens_pred_x").alias("x"), F.col("ens_pred_y").alias("y")
     )
     rmse_ens = score(sol, ens)
-    assert rmse_ens < min(rg.rmse_rnn, rb.rmse_bilstm), (
-        rmse_ens, rg.rmse_rnn, rb.rmse_bilstm,
+    assert rmse_ens < min(rg.rmse_model, rb.rmse_model), (
+        rmse_ens, rg.rmse_model, rb.rmse_model,
     )

@@ -7,6 +7,7 @@ baseline, main_cuda.py:1389-1401 / nn-mps.py:874-988).
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
     GruConfig,
@@ -64,7 +65,7 @@ def test_cumsum_head_monotone_mask():
 def test_gru_training_is_deterministic(spark):
     # bitwise-identical parameters from two identical runs: seeded
     # init, full-batch gradients, float64 end-to-end.
-    from nfl26_bigdatabowl_prediction_spark.ml.rnn import train_gru
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import train_encoder
     from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
     import pandas as pd
 
@@ -82,8 +83,8 @@ def test_gru_training_is_deterministic(spark):
     df = with_fold(spark.createDataFrame(pdf), ["gid"], k=3)
     cfg = GruConfig(window=w, hidden=4, attn=3, max_horizon=6, epochs=3,
                     partitions=2)
-    m1 = train_gru(df, ["a", "b"], k=3, cfg=cfg)
-    m2 = train_gru(df, ["a", "b"], k=3, cfg=cfg)
+    m1 = train_encoder(df, ["a", "b"], k=3, cfg=cfg)
+    m2 = train_encoder(df, ["a", "b"], k=3, cfg=cfg)
     for key in m1.params:
         assert (m1.params[key] == m2.params[key]).all()
 
@@ -96,7 +97,7 @@ def test_gru_beats_physics_baseline(spark, trained_encoders):
     # matching the reference's finding that the recurrent encoder
     # outperforms linear feature models, nn-mps.py headline).
     r = trained_encoders["gru"]
-    assert r.rmse_rnn * 1.3 < r.rmse_baseline, (r.rmse_rnn, r.rmse_baseline)
+    assert r.rmse_model * 1.3 < r.rmse_baseline, (r.rmse_model, r.rmse_baseline)
     from pyspark.sql import functions as F
 
     pred = r.predictions
@@ -108,16 +109,16 @@ def test_gru_beats_physics_baseline(spark, trained_encoders):
 def test_gru_save_load_roundtrip(tmp_path):
     # S5 parity for the recurrent learner: bitwise param round-trip
     from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
-        GruModel, load_gru, save_gru,
+        EncoderModel, load_encoder, save_encoder,
     )
 
     sh = GruShapes(f=2, window=3, hidden=4, attn=3, max_horizon=5)
-    m = GruModel(["a", "b"], sh)
+    m = EncoderModel(["a", "b"], sh)
     m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}
     m.mu = np.array([0.5, -1.0])
     m.sd = np.array([2.0, 3.0])
-    save_gru(m, str(tmp_path / "m"))
-    m2 = load_gru(str(tmp_path / "m"))
+    save_encoder(m, str(tmp_path / "m"))
+    m2 = load_encoder(str(tmp_path / "m"), GruShapes)
     assert m2.feature_cols == ["a", "b"]
     assert m2.shapes == sh
     for k in m.params:
@@ -125,17 +126,63 @@ def test_gru_save_load_roundtrip(tmp_path):
     assert (m2.mu == m.mu).all() and (m2.sd == m.sd).all()
 
 
-def test_gru_oof_predict_rejects_unknown_fold(spark):
+def _small_shapes():
+    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import BiLstmShapes
+    from nfl26_bigdatabowl_prediction_spark.ml.transformer import TransformerShapes
+
+    return {
+        "gru": GruShapes(f=2, window=3, hidden=4, attn=3, max_horizon=5),
+        "bilstm": BiLstmShapes(f=2, window=3, hidden=4, conv=3, attn=3,
+                               max_horizon=5),
+        "transformer": TransformerShapes(f=2, window=3, d_model=4, ffn=6,
+                                         attn=3, max_horizon=5),
+    }
+
+
+def _tiny_model(sh):
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import EncoderModel
+
+    m = EncoderModel(["a", "b"], sh)
+    m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}  # folds {0, 1}
+    m.mu = np.array([0.5, -1.0])
+    m.sd = np.array([2.0, 3.0])
+    return m
+
+
+def test_load_encoder_refuses_pickled_or_foreign_file(tmp_path):
+    # A model file is data: load_encoder never unpickles (an object
+    # array in the file raises instead of running its pickle), and a
+    # file saved by another encoder is refused by its stored name.
+    import pytest
+
+    from nfl26_bigdatabowl_prediction_spark.ml.bilstm import BiLstmShapes
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
+        load_encoder, save_encoder,
+    )
+
+    save_encoder(_tiny_model(_small_shapes()["gru"]), str(tmp_path / "m"))
+    with pytest.raises(ValueError, match="holds encoder 'rnn'"):
+        load_encoder(str(tmp_path / "m"), BiLstmShapes)
+    path = tmp_path / "m" / "encoder.npz"
+    with np.load(path) as z:
+        arrays = {k: z[k] for k in z.files}
+    arrays["feature_cols"] = np.array(["a", "b"], dtype=object)
+    np.savez_compressed(path, **arrays)
+    with pytest.raises(ValueError, match="allow_pickle"):
+        load_encoder(str(tmp_path / "m"), GruShapes)
+
+
+@pytest.mark.parametrize("encoder", ["gru", "bilstm", "transformer"])
+def test_gru_oof_predict_rejects_unknown_fold(spark, encoder):
     # A fold id with no trained model must fail loudly: the old
     # silent fallback to the pooled model (which SAW that fold's
-    # rows) produced leaked "OOF" predictions.
+    # rows) produced leaked "OOF" predictions.  Every encoder shares
+    # the one predict_encoder path; each is checked.
     import pandas as pd
-    import pytest
-    from nfl26_bigdatabowl_prediction_spark.ml.rnn import GruModel, predict_gru
 
-    sh = GruShapes(f=2, window=3, hidden=4, attn=3, max_horizon=5)
-    m = GruModel(["a", "b"], sh)
-    m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}  # folds {0, 1}
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import predict_encoder
+
+    m = _tiny_model(_small_shapes()[encoder])
     rng = np.random.default_rng(9)
     pdf = pd.DataFrame(
         {
@@ -148,4 +195,4 @@ def test_gru_oof_predict_rejects_unknown_fold(spark):
     )
     df = spark.createDataFrame(pdf)
     with pytest.raises(Exception, match="no fold model for fold=7"):
-        predict_gru(m, df, oof=True).collect()
+        predict_encoder(m, df, oof=True).collect()

@@ -9,8 +9,11 @@ against the equivalent batch plan on the same session.
 
 from __future__ import annotations
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from nfl26_bigdatabowl_prediction_spark.functions.scalar import cents as _cents
 from nfl26_bigdatabowl_prediction_spark.scratch import scratch_dir
 from nfl26_bigdatabowl_prediction_spark.sources.io import table
 from nfl26_bigdatabowl_prediction_spark.streaming import (
@@ -21,10 +24,6 @@ from nfl26_bigdatabowl_prediction_spark.streaming import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _cents(c):
-    return F.round(c * F.lit(100.0), 0).cast("bigint")
 
 
 def test_sliding_stream_matches_batch(spark):
@@ -698,3 +697,49 @@ def test_stream_exec_session_memoized_per_parent_and_knob(spark):
     # keyed on the live parent object, weakly
     assert isinstance(src._TWINS, weakref.WeakKeyDictionary)
     assert spark in src._TWINS
+
+
+_GAP = 3600 * 10**6
+_T1, _T2 = 10**12, 10**12 + 5 * 10**8
+
+
+@pytest.mark.parametrize(
+    "state, event_type, ts, advances",
+    [
+        # click hop against t1: (t1, t1 + gap]
+        ((_T1, None, None), "click", _T1, False),
+        ((_T1, None, None), "click", _T1 + _GAP, True),
+        ((_T1, None, None), "click", _T1 + _GAP + 1, False),
+        # purchase hop against t2: (t2, t2 + gap]
+        ((_T1, _T2, None), "purchase", _T2, False),
+        ((_T1, _T2, None), "purchase", _T2 + _GAP, True),
+        ((_T1, _T2, None), "purchase", _T2 + _GAP + 1, False),
+    ],
+    ids=["click@t1", "click@t1+gap", "click@t1+gap+1us",
+         "purchase@t2", "purchase@t2+gap", "purchase@t2+gap+1us"],
+)
+def test_funnel_advance_hop_bounds(state, event_type, ts, advances):
+    # Spark-free: the one advance loop behind both funnel machines
+    # (streaming_funnel, streaming_funnel_ttl) bounds each hop to
+    # (previous stage, previous stage + 1 h], in microseconds.
+    from nfl26_bigdatabowl_prediction_spark.streaming.stateful import (
+        _FUNNEL_GAP_US,
+        _funnel_advance,
+    )
+
+    assert _FUNNEL_GAP_US == _GAP
+    pdf = pd.DataFrame(
+        {"user_id": [1], "event_id": [9], "ts": [ts], "event_type": [event_type]}
+    )
+    frames, after = _funnel_advance(iter([pdf]), *state)
+    stage = 2 if event_type == "click" else 3
+    (out,) = frames
+    if advances:
+        assert after[stage - 1] == ts
+        assert out.to_dict("list") == {
+            "user_id": [1], "event_id": [9], "stage": [stage], "ts_us": [ts],
+        }
+    else:
+        assert after == state
+        assert out.empty
+    assert _funnel_advance(iter([]), *state) == ([], state)

@@ -80,7 +80,7 @@ def test_transformer_training_is_deterministic(spark):
     import pandas as pd
 
     from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
-    from nfl26_bigdatabowl_prediction_spark.ml.transformer import train_transformer
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import train_encoder
 
     rng = np.random.default_rng(5)
     n, w, f = 60, 4, 2
@@ -96,8 +96,8 @@ def test_transformer_training_is_deterministic(spark):
     df = with_fold(spark.createDataFrame(pdf), ["gid"], k=3)
     cfg = TransformerConfig(window=w, d_model=4, ffn=6, attn=3,
                             max_horizon=6, epochs=3, partitions=2)
-    m1 = train_transformer(df, ["a", "b"], k=3, cfg=cfg)
-    m2 = train_transformer(df, ["a", "b"], k=3, cfg=cfg)
+    m1 = train_encoder(df, ["a", "b"], k=3, cfg=cfg)
+    m2 = train_encoder(df, ["a", "b"], k=3, cfg=cfg)
     for key in m1.params:
         assert (m1.params[key] == m2.params[key]).all()
 
@@ -112,8 +112,8 @@ def test_transformer_beats_physics_baseline(spark, trained_encoders):
     # bar).  Trained via the session-scoped fixture so the ~110 s
     # training is shared with any other consumer (round-5 verdict #5).
     r = trained_encoders["transformer"]
-    assert r.rmse_stt * 1.15 < r.rmse_baseline, (
-        r.rmse_stt, r.rmse_baseline,
+    assert r.rmse_model * 1.15 < r.rmse_baseline, (
+        r.rmse_model, r.rmse_baseline,
     )
     from pyspark.sql import functions as F
 
@@ -125,18 +125,18 @@ def test_transformer_beats_physics_baseline(spark, trained_encoders):
 
 def test_transformer_save_load_roundtrip(tmp_path):
     # S5 parity: bitwise param round-trip
-    from nfl26_bigdatabowl_prediction_spark.ml.transformer import (
-        TransformerModel, load_transformer, save_transformer,
+    from nfl26_bigdatabowl_prediction_spark.ml.rnn import (
+        EncoderModel, load_encoder, save_encoder,
     )
 
     sh = TransformerShapes(f=2, window=3, d_model=4, ffn=6, attn=3,
                            max_horizon=5)
-    m = TransformerModel(["a", "b"], sh)
+    m = EncoderModel(["a", "b"], sh)
     m.params = {-1: sh.init(1), 0: sh.init(2), 1: sh.init(3)}
     m.mu = np.array([0.5, -1.0])
     m.sd = np.array([2.0, 3.0])
-    save_transformer(m, str(tmp_path / "m"))
-    m2 = load_transformer(str(tmp_path / "m"))
+    save_encoder(m, str(tmp_path / "m"))
+    m2 = load_encoder(str(tmp_path / "m"), TransformerShapes)
     assert m2.feature_cols == ["a", "b"]
     assert m2.shapes == sh
     for k in m.params:
