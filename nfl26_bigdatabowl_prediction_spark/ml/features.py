@@ -34,6 +34,17 @@ def _traj_window():
     return W.partitionBy(*TRAJECTORY_KEY).orderBy("frame_id")
 
 
+def last_frames(df: DataFrame, n: int) -> DataFrame:
+    """The last ``n`` frames of every trajectory (row_number over the
+    trajectory key by frame_id descending, rn ≤ n)."""
+    w = W.partitionBy(*TRAJECTORY_KEY).orderBy(F.col("frame_id").desc())
+    return (
+        df.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= n)
+        .drop("rn")
+    )
+
+
 def advanced_features(df: DataFrame) -> DataFrame:
     """Row-local physics features (main_cuda.py:157-204; md/physics.md
     derivations).  Pure projection — fused into the scan by codegen."""
@@ -234,21 +245,12 @@ def gnn_lite_features(df: DataFrame) -> DataFrame:
     left-join it back (main_cuda.py:1380).  The self-join is equi on
     (game_id, play_id, frame_id) — group-bounded fanout (≤22 players).
     """
-    ego = (
-        df.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy(*TRAJECTORY_KEY).orderBy(F.col("frame_id").desc())
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select(
-            *TRAJECTORY_KEY,
-            F.col("frame_id").alias("last_frame_id"),
-            F.col("x").alias("ego_x"),
-            F.col("y").alias("ego_y"),
-            F.col("player_side").alias("ego_side"),
-        )
+    ego = last_frames(df, 1).select(
+        *TRAJECTORY_KEY,
+        F.col("frame_id").alias("last_frame_id"),
+        F.col("x").alias("ego_x"),
+        F.col("y").alias("ego_y"),
+        F.col("player_side").alias("ego_side"),
     )
     nb = df.select(
         F.col("game_id").alias("g"),
@@ -332,17 +334,12 @@ def build_training_rows(input_df: DataFrame, output_df: DataFrame) -> DataFrame:
     frame_id (output frames restart at 1, 10 Hz — FIXTURES §3);
     constant-velocity baseline + residual labels.
     """
-    wlast = W.partitionBy(*TRAJECTORY_KEY).orderBy(F.col("frame_id").desc())
-    last = (
-        input_df.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") == 1)
-        .select(
-            *TRAJECTORY_KEY,
-            F.col("x").alias("last_x"),
-            F.col("y").alias("last_y"),
-            F.col("vx").alias("last_vx"),
-            F.col("vy").alias("last_vy"),
-        )
+    last = last_frames(input_df, 1).select(
+        *TRAJECTORY_KEY,
+        F.col("x").alias("last_x"),
+        F.col("y").alias("last_y"),
+        F.col("vx").alias("last_vx"),
+        F.col("vy").alias("last_vy"),
     )
     out = output_df.select(
         *TRAJECTORY_KEY,
@@ -371,6 +368,6 @@ def build_training_rows(input_df: DataFrame, output_df: DataFrame) -> DataFrame:
 
 def full_feature_pipeline(input_df: DataFrame) -> DataFrame:
     """Stages 2-5 of E1 (SURVEY §3) as one lazy DAG."""
-    feat = ensemble_features(sequence_features(advanced_features(input_df)))
-    gnn = gnn_lite_features(advanced_features(input_df))
-    return feat.join(gnn, TRAJECTORY_KEY, "left")
+    base = advanced_features(input_df)
+    feat = ensemble_features(sequence_features(base))
+    return feat.join(gnn_lite_features(base), TRAJECTORY_KEY, "left")

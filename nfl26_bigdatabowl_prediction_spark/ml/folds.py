@@ -8,42 +8,26 @@ same fold, deterministically, join-free, on any cluster size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_fold(
-    df: DataFrame,
-    group_cols: list[str],
-    k: int = 5,
-    fold_col: str = "fold",
-    portable: bool = False,
-) -> DataFrame:
-    """Add a fold column in [0, k).  ``portable=True`` uses the
-    oracle-checkable Knuth hash (functions.portable); default is
-    xxhash64 — the production path (better mixing, JVM codegen)."""
-    if portable:
-        from ..functions.portable import knuth_fold_expr
-
-        # portable mode supports a single numeric key (oracle parity)
-        assert len(group_cols) == 1, "portable folds need one numeric key"
-        return df.withColumn(fold_col, knuth_fold_expr(F.col(group_cols[0]), k))
+def with_fold(df: DataFrame, group_cols: list[str], k: int = 5) -> DataFrame:
+    """Add a ``fold`` column in [0, k): xxhash64 of the group key mod k."""
     return df.withColumn(
-        fold_col, F.pmod(F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(k))
+        "fold", F.pmod(F.xxhash64(*[F.col(c) for c in group_cols]), F.lit(k))
     )
 
 
 def with_validation_flag(
-    df: DataFrame,
-    group_cols: list[str],
-    frac_denominator: int = 5,
-    flag_col: str = "is_val",
+    df: DataFrame, group_cols: list[str], frac_denominator: int = 5
 ) -> DataFrame:
-    """Deterministic group-safe validation holdout: every row of a
-    group gets the same boolean, ~1/frac_denominator of groups True.
+    """Deterministic group-safe validation holdout ``is_val``: every
+    row of a group gets the same boolean, ~1/frac_denominator of
+    groups True.
 
     Feeds GBTRegressor's ``validationIndicatorCol`` (the reference's
     eval_set early stopping, SURVEY §4) — a second, salted hash so the
     holdout is independent of the fold assignment."""
     h = F.xxhash64(F.lit("val_salt"), *[F.col(c) for c in group_cols])
-    return df.withColumn(flag_col, F.pmod(h, F.lit(frac_denominator)) == 0)
+    return df.withColumn("is_val", F.pmod(h, F.lit(frac_denominator)) == 0)

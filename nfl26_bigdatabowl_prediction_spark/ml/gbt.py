@@ -7,24 +7,48 @@ Reference stack (main_cuda.py:1009-1126, 1298-1310, 85-90):
 MLlib mapping (SURVEY §2.10): GBTRegressor per target replaces each
 booster (parity is metric-level, not bitwise — the reference's own
 logs are its only spec); LinearRegression(regParam=1, elasticNet=0)
-is the Ridge meta-learner; weighted averaging is column arithmetic.
+is the Ridge meta-learner; weighted averaging is column arithmetic
+(ensemble.blend_predictions).
 Early stopping: GBT's validationIndicatorCol + validationTol emulate
 the reference's eval_set (SURVEY §4) via folds.with_validation_flag;
 default stays a fixed maxIter budget.
 
 Everything stays distributed: VectorAssembler keeps features in
 DataFrames; per-fold training iterates over K cached filtered views.
+
+The E1 lifecycle (``NFLPredictor.train_and_predict``,
+main_cuda.py:1445-1566 — features → as-of labels → grouped folds →
+residual GBT → official metric) is ``train_and_predict_gbt``: it
+fits on the one training frame every learner shares
+(seqreg.training_frame) and scores out of fold like the sequence
+learners.  The feature list is declared-then-intersected with the
+columns the pipeline produced (the reference's schema-tolerant
+projection, main_cuda.py:483-486), so callers can pass a superset.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.feature import StandardScaler, VectorAssembler
 from pyspark.ml.regression import GBTRegressor, LinearRegression
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.scalar import clip
+from .features import TRAJECTORY_KEY, full_feature_pipeline, last_frames
+from .seqreg import SeqTrainResult, oof_result, training_frame
+
+DEFAULT_FEATURES = [
+    "x", "y", "s", "a",
+    "s_roll3_mean", "s_roll5_mean", "speed_change", "momentum",
+    "kinetic_energy", "dist_to_ball", "velocity_toward_ball",
+    "gnn_d1", "gnn_d2", "gnn_d3", "gnn_ally_cnt", "gnn_opp_cnt",
+    "team_x_mean", "team_y_mean", "team_s_mean",
+]
+# each label row's horizon (output frame index, Δt), appended to the features
+HORIZON_COLS = ["out_frame_id", "delta_t"]
 
 
 @dataclass
@@ -92,7 +116,6 @@ def train_residual_gbt(
     feature_cols: list[str],
     k: int = 3,
     cfg: ResidualGBTConfig | None = None,
-    fold_col: str = "fold",
 ) -> list[FoldModel]:
     """K-fold training of the (res_x, res_y) regressor pair
     (main_cuda.py:728-801).  Expects ``with_fold`` to have been
@@ -101,7 +124,7 @@ def train_residual_gbt(
     train_df = train_df.cache()
     models = []
     for fold in range(k):
-        tr = train_df.filter(F.col(fold_col) != fold)
+        tr = train_df.filter(F.col("fold") != fold)
         mx = _pipeline(feature_cols, "res_x", cfg).fit(tr)
         my = _pipeline(feature_cols, "res_y", cfg).fit(tr)
         models.append(FoldModel(fold, mx, my))
@@ -109,11 +132,13 @@ def train_residual_gbt(
 
 
 def predict_fold_mean(
-    models: list[FoldModel], df: DataFrame, clip_bounds: bool = True
+    models: list[FoldModel], df: DataFrame, oof: bool = True
 ) -> DataFrame:
-    """Fold-ensemble mean prediction + baseline add-back + clip
-    (main_cuda.py:1501-1530): pred = clip(baseline + mean_k residual)."""
-    n = len(models)
+    """Adds gbt_pred_x / gbt_pred_y = clip(baseline + predicted
+    residual) (main_cuda.py:1501-1530).  ``oof=True`` routes each row
+    to the model of its own fold, the one that never saw it;
+    ``oof=False`` averages the K fold models' residuals, the
+    inference path for unseen data."""
     out = df
     for fm in models:
         out = (
@@ -126,34 +151,47 @@ def predict_fold_mean(
             .withColumnRenamed("pred_res_y", f"_py_{fm.fold}")
             .drop("_features_raw", "_features")
         )
-    mean_x = sum(F.col(f"_px_{m.fold}") for m in models) / float(n)
-    mean_y = sum(F.col(f"_py_{m.fold}") for m in models) / float(n)
-    px = F.col("baseline_x") + mean_x
-    py = F.col("baseline_y") + mean_y
-    if clip_bounds:
-        px = F.greatest(F.lit(0.0), F.least(F.lit(120.0), px))
-        py = F.greatest(F.lit(0.0), F.least(F.lit(53.3), py))
-    out = out.withColumn("pred_x", px).withColumn("pred_y", py)
+
+    def residual(t: str):
+        if not oof:
+            return sum(F.col(f"_p{t}_{m.fold}") for m in models) / float(len(models))
+        # a fold without its model must fail, not fall back to a model
+        # that saw the row
+        e = F.raise_error(F.format_string("no GBT fold model for fold=%s", "fold"))
+        for m in models:
+            e = F.when(F.col("fold") == m.fold, F.col(f"_p{t}_{m.fold}")).otherwise(e)
+        return e
+
+    out = out.withColumn(
+        "gbt_pred_x", clip(F.col("baseline_x") + residual("x"), 0.0, 120.0)
+    ).withColumn("gbt_pred_y", clip(F.col("baseline_y") + residual("y"), 0.0, 53.3))
     return out.drop(*[c for c in out.columns if c.startswith("_p")])
 
 
-def weighted_average(preds: dict[str, DataFrame], weights: dict[str, float], keys: list[str]) -> DataFrame:
-    """M7 — fixed-weight model averaging (main_cuda.py:85-90):
-    pred = Σ w_m · pred_m, joined on the row key."""
-    total = sum(weights.values())
-    it = iter(preds.items())
-    name0, df0 = next(it)
-    out = df0.select(*keys, F.col("pred_x").alias(f"px_{name0}"), F.col("pred_y").alias(f"py_{name0}"))
-    names = [name0]
-    for name, df in it:
-        out = out.join(
-            df.select(*keys, F.col("pred_x").alias(f"px_{name}"), F.col("pred_y").alias(f"py_{name}")),
-            keys,
-        )
-        names.append(name)
-    wx = sum(F.col(f"px_{n}") * F.lit(weights[n] / total) for n in names)
-    wy = sum(F.col(f"py_{n}") * F.lit(weights[n] / total) for n in names)
-    return out.withColumn("pred_x", wx).withColumn("pred_y", wy)
+def last_frame_features(
+    input_df: DataFrame, feature_cols: list[str] | None
+) -> tuple[DataFrame, list[str]]:
+    """The E1 feature pipeline's last frame per trajectory, nulls
+    filled with 0.0.  Returns (features, the declared columns present)."""
+    feats = full_feature_pipeline(input_df)
+    cols = [c for c in (feature_cols or DEFAULT_FEATURES) if c in feats.columns]
+    last = last_frames(feats, 1).select(*TRAJECTORY_KEY, *cols).na.fill(0.0, cols)
+    return last, cols
+
+
+def train_and_predict_gbt(
+    input_df: DataFrame,
+    output_df: DataFrame,
+    feature_cols: list[str] | None = None,
+    k: int = 5,
+    cfg: ResidualGBTConfig | None = None,
+) -> SeqTrainResult:
+    """The E1 lifecycle: last-frame features → shared training frame →
+    K-fold residual GBT → OOF prediction → official metric."""
+    last, cols = last_frame_features(input_df, feature_cols)
+    train = training_frame(input_df, output_df, last, k)
+    models = train_residual_gbt(train, cols + HORIZON_COLS, k=k, cfg=cfg)
+    return oof_result(predict_fold_mean(models, train), "gbt")
 
 
 def save_models(models: list[FoldModel], path: str) -> None:

@@ -57,8 +57,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.features import clip
-from .seqreg import SeqTrainResult, oof_result, training_frame
+from ..functions.scalar import clip
+from .seqreg import SeqTrainResult, oof_result, seq_windows, training_frame
 
 
 @dataclass
@@ -447,7 +447,8 @@ def train_and_predict_encoder(
     """E2's lifecycle (nn-mps.py:874-988) with the encoder ``cfg``
     names: per-frame physics features → last-W windows → grouped
     folds → distributed-Adam fit → OOF prediction → metric."""
-    train, cols = training_frame(input_df, output_df, feature_cols, cfg.window, k)
+    seq, cols = seq_windows(input_df, feature_cols, cfg.window)
+    train = training_frame(input_df, output_df, seq, k)
     model = train_encoder(train, cols, k, cfg)
     return oof_result(predict_encoder(model, train, oof=True), model.shapes.prefix)
 

@@ -43,9 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
 
-from ..plans.features import TRAJECTORY_KEY, advanced_features, build_training_rows, clip
+from ..functions.scalar import clip
+from .features import TRAJECTORY_KEY, advanced_features, build_training_rows, last_frames
 from .folds import with_fold
 from .scoring import score
 
@@ -83,12 +83,7 @@ def window_matrix(
     """
     nf = len(feature_cols)
     fv = F.array(*[F.coalesce(F.col(c).cast("double"), F.lit(0.0)) for c in feature_cols])
-    wlast = W.partitionBy(*TRAJECTORY_KEY).orderBy(F.col("frame_id").desc())
-    lastw = (
-        feats.withColumn("rn", F.row_number().over(wlast))
-        .filter(F.col("rn") <= window)
-        .select(*TRAJECTORY_KEY, "frame_id", fv.alias("fv"))
-    )
+    lastw = last_frames(feats, window).select(*TRAJECTORY_KEY, "frame_id", fv.alias("fv"))
     flat = lastw.groupBy(*TRAJECTORY_KEY).agg(
         F.expr(
             "flatten(transform(array_sort(collect_list(struct(frame_id, fv))), s -> s.fv))"
@@ -276,29 +271,39 @@ def predict_seq(
 
 @dataclass
 class SeqTrainResult:
+    """What every learner's train_and_predict returns (seqreg, the
+    encoders, the residual GBT)."""
+
     predictions: DataFrame
     rmse_baseline: float
     rmse_model: float
 
 
-def training_frame(
-    input_df: DataFrame, output_df: DataFrame,
-    feature_cols: list[str] | None, window: int, k: int,
+def seq_windows(
+    input_df: DataFrame, feature_cols: list[str] | None, window: int,
 ) -> tuple[DataFrame, list[str]]:
-    """The training frame every sequence learner shares: per-frame
-    physics features → last-W windows → labeled rows → grouped folds,
-    cached.  Returns (frame, the feature columns present)."""
+    """Per-trajectory last-W windows of the per-frame physics features.
+    Returns (windows, the declared feature columns present)."""
     feats = advanced_features(input_df)
     cols = [
         c for c in (feature_cols or DEFAULT_SEQ_FEATURES) if c in feats.columns
     ]
-    seq = window_matrix(feats, cols, window)
-    labeled = build_training_rows(feats, output_df)
+    return window_matrix(feats, cols, window), cols
+
+
+def training_frame(
+    input_df: DataFrame, output_df: DataFrame, per_traj: DataFrame, k: int,
+) -> DataFrame:
+    """The training frame every learner shares: as-of labeled rows
+    joined to one per-trajectory feature frame (``seq_windows`` for
+    the sequence learners, last-frame features for the GBT) → grouped
+    folds, cached."""
+    labeled = build_training_rows(advanced_features(input_df), output_df)
     train = (
         labeled.filter(F.col("last_x").isNotNull())
-        .join(seq, list(TRAJECTORY_KEY))
+        .join(per_traj, list(TRAJECTORY_KEY))
     )
-    return with_fold(train, list(TRAJECTORY_KEY), k=k).cache(), cols
+    return with_fold(train, list(TRAJECTORY_KEY), k=k).cache()
 
 
 def oof_result(pred: DataFrame, prefix: str) -> SeqTrainResult:
@@ -326,8 +331,8 @@ def train_and_predict_seq(
     learner: per-frame physics features → last-W windows → grouped
     folds → normal-equation fit → OOF prediction → official metric."""
     cfg = cfg or SeqRegConfig()
-    train, cols = training_frame(input_df, output_df, feature_cols, cfg.window, k)
-    train = train.withColumn(
+    seq, cols = seq_windows(input_df, feature_cols, cfg.window)
+    train = training_frame(input_df, output_df, seq, k).withColumn(
         "x_vec", F.expr("concat(x_seq, array(delta_t, cast(1.0 as double)))")
     )
     model = train_seq_reg(train, cols, cfg.window, k, cfg)

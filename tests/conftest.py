@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import functools
 import os
 
 import pytest
@@ -37,23 +38,47 @@ def sf_dir():
 _ENCODER_CACHE_ROOT = "/tmp/nfl26_encoder_cache"
 
 
-def _ml_source_key() -> str:
-    """Cache key = hash of every ml/ source file + testing.py: any
-    change to a trainer, feature builder, or the fixture generator
-    invalidates every cached result, so a cache hit is exactly the
-    result retraining would produce (training is deterministic — fixed
-    seeds, no wall-clock)."""
-    import glob as _glob
-    import hashlib
+_PKG = "nfl26_bigdatabowl_prediction_spark"
+# the trainers and the fixture generator whose results the cache holds
+_TRAINERS = ("ml.rnn", "ml.bilstm", "ml.transformer", "ml.seqreg", "ml.gbt", "testing")
+
+
+@functools.lru_cache(maxsize=None)
+def _ml_sources() -> tuple[str, ...]:
+    """Source files of the trainers' import closure: every package
+    module a fresh interpreter has loaded after importing them (a
+    fresh one, because this session may already hold unrelated
+    package modules)."""
+    import json
+    import subprocess
+    import sys
 
     import nfl26_bigdatabowl_prediction_spark as pkg
 
-    root = os.path.dirname(pkg.__file__)
+    code = (
+        "import importlib, json, sys\n"
+        f"for m in {_TRAINERS!r}: importlib.import_module('{_PKG}.' + m)\n"
+        "print(json.dumps(sorted(m.__file__ for n, m in list(sys.modules.items())"
+        f" if n.split('.')[0] == '{_PKG}' and getattr(m, '__file__', None))))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=os.path.dirname(os.path.dirname(pkg.__file__)),
+        capture_output=True, text=True, check=True,
+    )
+    return tuple(json.loads(out.stdout.splitlines()[-1]))
+
+
+def _ml_source_key() -> str:
+    """Cache key = hash of the trainers' import closure
+    (_ml_sources): any change to a trainer, the feature library, a
+    scalar helper or the fixture generator invalidates every cached
+    result, so a cache hit is exactly the result retraining would
+    produce (training is deterministic — fixed seeds, no wall-clock)."""
+    import hashlib
+
     h = hashlib.sha256()
-    for path in sorted(
-        _glob.glob(os.path.join(root, "ml", "*.py"))
-        + [os.path.join(root, "testing.py")]
-    ):
+    for path in _ml_sources():
         h.update(path.encode())
         with open(path, "rb") as fh:
             h.update(fh.read())
@@ -70,9 +95,9 @@ class _LazyEncoders:
     Round-8 (round-6/7 ask #8): results additionally persist to a
     source-keyed DISK cache, so back-to-back suite runs (the
     driver's verify, repeated local iteration) skip retraining
-    entirely.  The key covers every ml/ source + the fixture
-    generator (_ml_source_key), and SPARK_GRAFT_ENCODER_CACHE=0
-    forces retraining."""
+    entirely.  The key covers the trainers' import closure
+    (_ml_source_key), and SPARK_GRAFT_ENCODER_CACHE=0 forces
+    retraining."""
 
     def __init__(self, spark):
         self._spark = spark

@@ -92,10 +92,10 @@ def test_gru_training_is_deterministic(spark):
 def test_gru_beats_physics_baseline(spark, trained_encoders):
     # M9 (SURVEY §2.10), now with the TRUE recurrent learner: the
     # distributed-Adam GRU must beat the constant-velocity baseline
-    # out-of-fold on the tracking fixture.  Measured at the default
-    # config: 1.945 vs 2.887 (also better than seqreg's ridge 2.26 —
-    # matching the reference's finding that the recurrent encoder
-    # outperforms linear feature models, nn-mps.py headline).
+    # out-of-fold on the tracking fixture, and it also beats seqreg's
+    # ridge (MEASURED.md §"M9 true recurrent learner") — matching the
+    # reference's finding that the recurrent encoder outperforms
+    # linear feature models, nn-mps.py headline.
     r = trained_encoders["gru"]
     assert r.rmse_model * 1.3 < r.rmse_baseline, (r.rmse_model, r.rmse_baseline)
     from pyspark.sql import functions as F

@@ -8,23 +8,22 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
-from nfl26_bigdatabowl_prediction_spark.ml.gbt import (
-    ResidualGBTConfig,
-    predict_fold_mean,
-    train_residual_gbt,
-)
-from nfl26_bigdatabowl_prediction_spark.ml.scoring import score
-from nfl26_bigdatabowl_prediction_spark.plans.features import (
+from nfl26_bigdatabowl_prediction_spark.ml.features import (
     advanced_features,
     build_training_rows,
-    ensemble_features,
-    full_feature_pipeline,
     gnn_lite_features,
     sequence_features,
 )
+from nfl26_bigdatabowl_prediction_spark.ml.folds import with_fold
+from nfl26_bigdatabowl_prediction_spark.ml.gbt import (
+    HORIZON_COLS,
+    ResidualGBTConfig,
+    last_frame_features,
+    predict_fold_mean,
+    train_residual_gbt,
+)
+from nfl26_bigdatabowl_prediction_spark.ml.seqreg import oof_result, training_frame
 from nfl26_bigdatabowl_prediction_spark.testing import make_tracking_tables
 
 
@@ -73,48 +72,25 @@ def test_training_rows_asof(tracking):
     ).count() == 0  # clip
 
 
-def test_ensemble_beats_physics_baseline(spark, tracking):
+def test_gbt_in_sample_fit_beats_physics_baseline(spark, tracking):
     """The reference's own acceptance check (main_cuda.py:1389-1401,
-    BASELINE.md: 4.237 → 0.678): learned residuals must improve on
-    dead reckoning, measured with the official metric."""
+    BASELINE.md: 4.237 → 0.678) as an in-sample fit: the K fold
+    models' mean residual, scored on the rows they trained on with the
+    official metric, must beat dead reckoning by a 1.3× margin.  Out
+    of fold is test_ml.py::test_train_and_predict_end_to_end."""
     inp, outp = tracking
-    feats = full_feature_pipeline(inp)
-    labeled = build_training_rows(advanced_features(inp), outp)
-    wlast = F.row_number().over(
-        Window.partitionBy("game_id", "play_id", "nfl_id").orderBy(
-            F.col("frame_id").desc()
-        )
-    )
-    last_feats = (
-        feats.withColumn("rn", wlast).filter(F.col("rn") == 1).drop("rn")
-    )
     feature_cols = [
         "x", "y", "s_roll3_mean", "speed_change", "momentum",
         "gnn_d1", "gnn_ally_cnt", "team_x_mean", "dist_to_ball",
     ]
-    train = (
-        labeled.filter(F.col("last_x").isNotNull())
-        .join(
-            last_feats.select("game_id", "play_id", "nfl_id", *feature_cols),
-            ["game_id", "play_id", "nfl_id"],
-        )
-        .withColumn("delta_frames", F.col("out_frame_id").cast("double"))
-        .na.fill(0.0, feature_cols)
-    )
-    train = with_fold(train, ["game_id", "play_id", "nfl_id"], k=3)
+    last, cols = last_frame_features(inp, feature_cols)
+    assert cols == feature_cols
+    train = training_frame(inp, outp, last, k=3)
     models = train_residual_gbt(
-        train,
-        feature_cols + ["delta_frames", "delta_t"],
-        k=3,
-        cfg=ResidualGBTConfig(max_iter=10, max_depth=4),
+        train, cols + HORIZON_COLS, k=3, cfg=ResidualGBTConfig(max_iter=10, max_depth=4)
     )
-    pred = predict_fold_mean(models, train)
-    sol = pred.select("id", F.col("target_x").alias("x"), F.col("target_y").alias("y"))
-    base = pred.select("id", F.col("baseline_x").alias("x"), F.col("baseline_y").alias("y"))
-    ens = pred.select("id", F.col("pred_x").alias("x"), F.col("pred_y").alias("y"))
-    rmse_base = score(sol, base)
-    rmse_ens = score(sol, ens)
-    assert rmse_ens < rmse_base, f"ensemble {rmse_ens} !< baseline {rmse_base}"
+    r = oof_result(predict_fold_mean(models, train, oof=False), "gbt")
+    assert r.rmse_model * 1.3 < r.rmse_baseline, (r.rmse_model, r.rmse_baseline)
 
 
 def test_fold_assignment_is_group_pure(tracking):
@@ -135,7 +111,7 @@ def test_rich_sequence_and_ewm_match_pandas(spark, tracking):
     the same frames (ewm(alpha, adjust=False), bitwise)."""
     import pandas as pd
 
-    from nfl26_bigdatabowl_prediction_spark.plans.features import (
+    from nfl26_bigdatabowl_prediction_spark.ml.features import (
         ewm_features,
         sequence_features_rich,
     )

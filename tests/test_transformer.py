@@ -105,11 +105,11 @@ def test_transformer_training_is_deterministic(spark):
 def test_transformer_beats_physics_baseline(spark, trained_encoders):
     # M9 third encoder (SURVEY §2.10): the distributed-Adam
     # spatio-temporal transformer must beat the constant-velocity
-    # baseline out-of-fold on the tracking fixture.  Measured at the
-    # default config: 2.365 vs 2.887 (the attention encoder trails
-    # the recurrent ones on this small fixture — 120 epochs already
-    # overfits to 2.645 — but clears the reference's own acceptance
-    # bar).  Trained via the session-scoped fixture so the ~110 s
+    # baseline out-of-fold on the tracking fixture.  The attention
+    # encoder trails the recurrent ones on this small fixture and more
+    # epochs overfit (MEASURED.md §"M9 third encoder: spatio-temporal
+    # transformer"), but it clears the reference's own acceptance
+    # bar.  Trained via the session-scoped fixture so the ~110 s
     # training is shared with any other consumer (round-5 verdict #5).
     r = trained_encoders["transformer"]
     assert r.rmse_model * 1.15 < r.rmse_baseline, (
