@@ -60,21 +60,16 @@ def green_rounds(root: str = _ROOT) -> dict[str, int]:
     return rounds
 
 
-# Drift slots (≤ 8, tests/test_registry.py): the names whose engine or
-# oracle code round 11 touched.
-# - streaming/source.py twin-session sharing (bench fixed-overhead cut):
-#   q_stream_tumbling / q_stream_python_source / q_stream_funnel_ttl
-#   are the three harness shapes (windowed agg, python DS resume,
-#   two-phase stateful TTL drain).
-# - plans/vectors.py semdedup-K parameterization:
-#   q_semdedup, q_semdedup_ivf.
-# - plans/text.py _minlabel_cc_sql LEFT-JOIN hardening (ADVICE round
-#   10): the three queries whose oracles it backs — q_dedup_components,
-#   q_embed_components, q_dedup_canonical.
+# Drift slots (≤ 8, tests/test_registry.py): names whose engine code
+# changed since their last green record.
+# - operators/multimodal.py: the seven real-codec queries now run one
+#   shared payload generator and one shared parser kernel.
+# - operators/ranking.py + plans/analytics.py: q_rfm's exact global
+#   rank rewrite (last fully green before it).
 _DRIFT_REVERIFY: tuple[str, ...] = (
-    "q_stream_tumbling", "q_stream_python_source", "q_stream_funnel_ttl",
-    "q_semdedup", "q_semdedup_ivf",
-    "q_dedup_components", "q_embed_components", "q_dedup_canonical",
+    "q_audio_features", "q_image_decode", "q_png_decode", "q_gif_decode",
+    "q_spectral_bins", "q_pgm_decode", "q_qoi_decode",
+    "q_rfm",
 )
 
 

@@ -1,7 +1,7 @@
 """Pure-stdlib media codecs for the multimodal column contract.
 
-The container has no PIL/ffmpeg/librosa, but three real byte formats
-are decodable with nothing beyond the standard library:
+Each of these byte formats is encoded and decoded with nothing beyond
+the standard library (no PIL/ffmpeg/librosa):
 
 * WAV  — RIFF header + 16-bit PCM payload (struct).
 * BMP  — BITMAPINFOHEADER, 24-bit uncompressed, bottom-up rows with
@@ -9,13 +9,15 @@ are decodable with nothing beyond the standard library:
 * PNG  — 8-bit grayscale, zlib-inflated IDAT with the full filter
          set (None/Sub/Up/Average/Paeth) un-filtered per row (zlib +
          struct).
+* GIF  — 87a, 8-bit grayscale palette, variable-width LZW.
+* PGM  — Netpbm grayscale, P2 plain text and P5 raw.
+* QOI  — the qoiformat.org spec, 3 channels, full op set.
 
 These are REAL codecs: the encoder output opens in any media tool,
-and the decoder accepts any conforming file of the supported subtype
-(16-bit PCM WAV; 24bpp uncompressed BMP; 8-bit grayscale
-non-interlaced PNG).  Formats that genuinely need a native library
-(JPEG, MP3, H.264) stay behind NotImplementedError — the documented
-container contract (operators/multimodal.py).
+and the decoder accepts any conforming file of the supported subtype;
+an unsupported subtype (e.g. 8-bit WAV, interlaced PNG or GIF) raises
+NotImplementedError.  Formats that genuinely need a native library
+(JPEG, MP3, H.264) are not implemented.
 
 Scale note: every function here is per-cell and stateless, so the
 Spark side wraps them in Arrow-batched ``mapInPandas`` kernels —

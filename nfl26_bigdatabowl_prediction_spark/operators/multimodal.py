@@ -2,11 +2,18 @@
 binary + typed metadata; decode/feature-extract via Arrow-batched
 pandas UDFs).
 
-The actual codecs (PIL/ffmpeg/torchaudio) are NOT in this container,
-so the decode kernel is a clearly-marked deterministic FAKE — but the
-Spark-side contract is real and tested: binary column in, Arrow batch
-iterator through ``mapInPandas``, typed struct-ish columns + a float
-feature vector out, partition-preserving (no shuffle).
+Two families share the Spark-side contract — binary column in, Arrow
+batch iterator through ``mapInPandas``, typed columns out, no shuffle
+of payload bytes:
+
+* fake plumbing (``decode_features``, ``resize_images``,
+  ``sample_frames``) over the documents' utf-8 text as payload: its
+  "decoded" values are deterministic functions of the payload bytes;
+* real codecs (stdlib WAV / BMP / PNG / GIF / PGM / QOI,
+  operators/codecs.py): ``synth_payloads`` encodes every doc id into a
+  genuine byte stream and ``parse_payloads`` decodes it back.  A format
+  is only its ``*_payload`` formula, its ``*_rows`` statistics and its
+  output schema.
 
 At 100 TB this is the right shape: decode is embarrassingly parallel,
 so it must stay scan-side (mapInPandas = per-partition batch iterator,
@@ -16,32 +23,48 @@ and `arrow.maxRecordsPerBatch` bounding peak memory per batch.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .codecs import (
+    decode_bmp,
+    decode_gif,
+    decode_pgm,
+    decode_png,
+    decode_qoi,
+    decode_wav,
+    encode_bmp,
+    encode_gif,
+    encode_pgm,
+    encode_png,
+    encode_qoi,
+    encode_wav,
+)
 
 DECODE_SCHEMA = (
     "doc_id bigint, n_bytes int, fake_width int, fake_height int, feat array<float>"
 )
 
 
-def attach_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Model step 0: treat content as an opaque binary column (the
-    multimodal storage contract).  Here the bytes come from utf-8 text
-    because the testdata has no real media; schema-wise identical."""
-    return df.withColumn("payload", F.encode(F.col(text_col), "utf-8"))
+    multimodal storage contract).  Here the bytes come from the utf-8
+    ``text`` column because the testdata has no real media;
+    schema-wise identical."""
+    return df.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
 def _fake_decode_batch(batch: pd.DataFrame) -> pd.DataFrame:
     """Deterministic FAKE decoder.
 
-    A real deployment replaces the body with e.g. PIL.Image.open /
-    librosa.load per cell — same signature, same schema.  Raising
-    NotImplementedError for real codecs is the documented contract;
-    the fake keeps the plumbing testable in this container.
+    A real deployment replaces the body with a per-cell decoder (as
+    the real-codec ``*_rows`` functions below do) — same signature,
+    same schema.
     """
     n_bytes = batch["payload"].map(len)
     # pseudo-dimensions derived from content length — stable, testable
@@ -75,25 +98,14 @@ def decode_features(df_with_payload: DataFrame) -> DataFrame:
 RESIZE_SCHEMA = "doc_id bigint, out_width int, out_height int, px_sum bigint"
 
 
-def resize_images(
-    df_with_payload: DataFrame, width: int, height: int, real: bool = False
-) -> DataFrame:
-    """Image resize plumbing: payload → fixed-size raster summary.
-
-    ``real=True`` is the documented production contract (PIL resize per
-    cell) — NotImplementedError here because the codec libraries are
-    not in this container.  The fake path is deterministic on the byte
-    content (sum of bytes of the payload = the "pixel sum" of the
-    resized raster), so the Spark-side batch shape is fully testable.
-    """
+def resize_images(df_with_payload: DataFrame, width: int, height: int) -> DataFrame:
+    """Image resize plumbing (fake raster summary): payload → fixed
+    ``width`` × ``height`` output.  Deterministic on the byte content
+    (sum of bytes of the payload = the "pixel sum" of the resized
+    raster), so the Spark-side batch shape is fully testable."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            if real:
-                raise NotImplementedError(
-                    "real image decode requires PIL; install and replace "
-                    "this branch with Image.open(BytesIO(p)).resize(...)"
-                )
             yield pd.DataFrame(
                 {
                     "doc_id": b["doc_id"],
@@ -108,9 +120,7 @@ def resize_images(
     )
 
 
-def sample_frames(
-    df: DataFrame, n_frames_col, stride: int, id_col: str = "doc_id"
-) -> DataFrame:
+def sample_frames(df: DataFrame, n_frames_col, stride: int) -> DataFrame:
     """Video frame-sampling plumbing: every ``stride``-th frame index
     of a clip with ``n_frames_col`` frames, one output row per sampled
     frame.  Pure native explode (sequence + explode stays in codegen;
@@ -118,7 +128,7 @@ def sample_frames(
     deployment feeds these (doc_id, frame_idx) pairs to a decode UDF.
     """
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.sequence(F.lit(0), n_frames_col - 1, F.lit(stride))
         ).alias("frame_idx"),
@@ -126,56 +136,77 @@ def sample_frames(
 
 
 # ---------------------------------------------------------------------------
-# REAL codec kernels (stdlib WAV / BMP / PNG — operators/codecs.py).
+# REAL codec kernels (stdlib codecs — operators/codecs.py).
 #
-# Payload synthesis and decode are SEPARATE mapInPandas kernels so the
+# Payload synthesis and decode are SEPARATE mapInPandas stages so the
 # bytes crossing between them are genuine format streams (RIFF chunks,
-# BMP row padding, zlib'd PNG scanlines) — the decode side re-derives
-# every feature by parsing, never by peeking at the generator.  The
-# chained mapInPandas stages fuse into one python-runner pass per
-# partition.  Round-11: the id feed is REPARTITIONED to the context's
-# default parallelism before the kernel (guide §2.5 "repartition
-# immediately after the read") — a single-row-group parquet scans as
-# exactly ONE split no matter the core count (maxSplitBytes ≥ the
-# file), which serialized every encode+decode kernel onto one Python
-# worker; the shuffle moves only the 8-byte ids, and the fused kernel
-# chain then runs on every core (q_gif_decode min-of-3 at sf0.1:
-# 2.81 s → 1.64 s, outputs identical).
+# BMP row padding, zlib'd PNG scanlines, ...) — the parse side
+# re-derives every feature from the bytes, never by peeking at the
+# generator.  The chained stages fuse into one python-runner pass per
+# partition.  The id feed is REPARTITIONED to the context's default
+# parallelism before the generator: a single-row-group parquet scans as
+# exactly ONE split no matter the core count, which would serialize
+# every encode+decode onto one Python worker; the shuffle moves only
+# the 8-byte ids.
+#
+# Every payload formula is a fixed integer recurrence of the doc id,
+# so each query's SQL oracle re-derives the decoded statistics exactly.
 # ---------------------------------------------------------------------------
 
-AUDIO_RATE = 8000
+PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 
 
-def _spread_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """Project to the id column and spread it across the cluster's
+def _spread_ids(df: DataFrame) -> DataFrame:
+    """Project to ``doc_id`` and spread it across the cluster's
     default parallelism — the scale-adaptive scan fix for CPU-heavy
     per-row kernels over few/small input files."""
-    return df.select(id_col).repartition(
+    return df.select("doc_id").repartition(
         df.sparkSession.sparkContext.defaultParallelism
     )
 
 
-def synth_wav_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """doc_id → real 16-bit PCM WAV bytes.  Samples are a fixed integer
-    recurrence of (doc_id, i) so a SQL oracle can re-derive the decoded
-    features exactly: n = 200 + id%100, s_i = ((id*7349 + i*40503) %
-    65536) - 32768."""
-    from .codecs import encode_wav
+def synth_payloads(df: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """doc_id → (doc_id, payload = ``make(doc_id)``), one row per id."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            payloads = []
-            for doc_id in b[id_col]:
-                n = int(200 + doc_id % 100)
-                samples = [
-                    ((int(doc_id) * 7349 + i * 40503) % 65536) - 32768
-                    for i in range(n)
-                ]
-                payloads.append(encode_wav(samples, AUDIO_RATE))
-            yield pd.DataFrame({id_col: b[id_col], "payload": payloads})
+            yield pd.DataFrame(
+                {"doc_id": b["doc_id"], "payload": [make(int(d)) for d in b["doc_id"]]}
+            )
 
-    return _spread_ids(df, id_col).mapInPandas(
-        gen, f"{id_col} bigint, payload binary"
+    return _spread_ids(df).mapInPandas(gen, PAYLOAD_SCHEMA)
+
+
+def parse_payloads(
+    df_payload: DataFrame, schema: str, rows: Callable[[int, bytes], list[tuple]]
+) -> DataFrame:
+    """(doc_id, payload) → the rows ``rows(doc_id, payload)`` returns,
+    laid out as ``schema`` (a flat ``"name type, ..."`` string)."""
+    cols = [field.split()[0] for field in schema.split(",")]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            yield pd.DataFrame.from_records(
+                [
+                    r
+                    for doc_id, p in zip(b["doc_id"], b["payload"])
+                    for r in rows(int(doc_id), bytes(p))
+                ],
+                columns=cols,
+            )
+
+    return df_payload.mapInPandas(gen, schema)
+
+
+AUDIO_RATE = 8000
+
+
+def wav_payload(d: int) -> bytes:
+    """16-bit PCM WAV: n = 200 + id%100 samples,
+    s_i = ((id*7349 + i*40503) % 65536) - 32768."""
+    n = 200 + d % 100
+    return encode_wav(
+        [((d * 7349 + i * 40503) % 65536) - 32768 for i in range(n)], AUDIO_RATE
     )
 
 
@@ -185,60 +216,53 @@ WAV_FEATURES_SCHEMA = (
 )
 
 
-def wav_features(df_payload: DataFrame) -> DataFrame:
-    """Parse WAV payload bytes (RIFF chunk walk, 16-bit PCM unpack) and
-    emit integer signal features — all exact, so the oracle matches
-    bitwise."""
-    import numpy as np
-
-    from .codecs import decode_wav
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in (
-                "doc_id", "n_samples", "sample_rate", "peak", "sum_abs",
-                "n_zero_cross",
-            )}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                _, rate, samples = decode_wav(bytes(p))
-                a = np.asarray(samples, dtype=np.int64)
-                out["doc_id"].append(int(doc_id))
-                out["n_samples"].append(len(a))
-                out["sample_rate"].append(rate)
-                out["peak"].append(int(np.abs(a).max()) if len(a) else 0)
-                out["sum_abs"].append(int(np.abs(a).sum()))
-                out["n_zero_cross"].append(
-                    int(((a[1:] >= 0) != (a[:-1] >= 0)).sum())
-                )
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, WAV_FEATURES_SCHEMA)
+def wav_rows(d: int, p: bytes) -> list[tuple]:
+    """RIFF chunk walk + 16-bit PCM unpack → integer signal features
+    (all exact, so the oracle matches bitwise)."""
+    _, rate, samples = decode_wav(p)
+    a = np.asarray(samples, dtype=np.int64)
+    return [(
+        d,
+        len(a),
+        rate,
+        int(np.abs(a).max()) if len(a) else 0,
+        int(np.abs(a).sum()),
+        int(((a[1:] >= 0) != (a[:-1] >= 0)).sum()),
+    )]
 
 
-def synth_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """doc_id → real 24bpp BMP bytes: w = 8 + id%9, h = 8 + id%7,
+WAV_WALSH_SCHEMA = "doc_id bigint, k bigint, corr bigint, corr_abs bigint"
+WALSH_KS = (1, 2, 4, 8)
+
+
+def walsh_rows(d: int, p: bytes) -> list[tuple]:
+    """Square-wave (Walsh/Rademacher) spectral bins over decoded PCM,
+    one row per k in WALSH_KS: for k cycles across the clip,
+    s_k(i) = +1 where ((2·k·i) // n) is even, −1 otherwise, and the bin
+    statistic is Σ vᵢ·s_k(i) — the integer-exact sequency-domain analog
+    of a DFT bin (used by cheap audio fingerprinters precisely because
+    it needs no trig).  Stays int64 end-to-end, so the SQL oracle
+    reproduces it bitwise — a true-DFT bin would hit the cross-engine
+    libm cos/sin ulp gap."""
+    _, _, samples = decode_wav(p)
+    a = np.asarray(samples, dtype=np.int64)
+    n = len(a)
+    i = np.arange(n, dtype=np.int64)
+    out = []
+    for k in WALSH_KS:
+        c = int((a * (1 - 2 * (((2 * k * i) // n) % 2))).sum()) if n else 0
+        out.append((d, k, c, abs(c)))
+    return out
+
+
+def bmp_payload(d: int) -> bytes:
+    """24bpp BMP: w = 8 + id%9, h = 8 + id%7,
     pixel(x, y) = ((x+y+id)%256, (2x+y+id)%256, (x+3y+id)%256)."""
-    from .codecs import encode_bmp
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for doc_id in b[id_col]:
-                d = int(doc_id)
-                w, h = 8 + d % 9, 8 + d % 7
-                rows = [
-                    [
-                        ((x + y + d) % 256, (2 * x + y + d) % 256, (x + 3 * y + d) % 256)
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(encode_bmp(w, h, rows))
-            yield pd.DataFrame({id_col: b[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        gen, f"{id_col} bigint, payload binary"
-    )
+    w, h = 8 + d % 9, 8 + d % 7
+    return encode_bmp(w, h, [
+        [((x + y + d) % 256, (2 * x + y + d) % 256, (x + 3 * y + d) % 256) for x in range(w)]
+        for y in range(h)
+    ])
 
 
 BMP_FEATURES_SCHEMA = (
@@ -246,47 +270,21 @@ BMP_FEATURES_SCHEMA = (
 )
 
 
-def bmp_features(df_payload: DataFrame) -> DataFrame:
-    """Parse BMP payloads (header, bottom-up rows, 4-byte padding) and
-    emit integer raster features."""
-    from .codecs import decode_bmp
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "r_sum")}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                w, h, rows = decode_bmp(bytes(p))
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(r + g + bb for row in rows for r, g, bb in row))
-                out["r_sum"].append(sum(r for row in rows for r, _, _ in row))
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, BMP_FEATURES_SCHEMA)
+def bmp_rows(d: int, p: bytes) -> list[tuple]:
+    """Header, bottom-up rows, 4-byte padding → integer raster features."""
+    w, h, rows = decode_bmp(p)
+    return [(
+        d, w, h,
+        sum(r + g + bb for row in rows for r, g, bb in row),
+        sum(r for row in rows for r, _, _ in row),
+    )]
 
 
-def synth_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """doc_id → real 8-bit grayscale PNG bytes (zlib IDAT; rows cycle
-    all five filter types): w = 16 + id%17, h = 5 + id%11,
-    gray(x, y) = (3x + 5y + id) % 256."""
-    from .codecs import encode_png
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for doc_id in b[id_col]:
-                d = int(doc_id)
-                w, h = 16 + d % 17, 5 + d % 11
-                rows = [
-                    [(3 * x + 5 * y + d) % 256 for x in range(w)] for y in range(h)
-                ]
-                payloads.append(encode_png(w, h, rows))
-            yield pd.DataFrame({id_col: b[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        gen, f"{id_col} bigint, payload binary"
-    )
+def png_payload(d: int) -> bytes:
+    """8-bit grayscale PNG (zlib IDAT; rows cycle all five filter
+    types): w = 16 + id%17, h = 5 + id%11, gray(x, y) = (3x + 5y + id) % 256."""
+    w, h = 16 + d % 17, 5 + d % 11
+    return encode_png(w, h, [[(3 * x + 5 * y + d) % 256 for x in range(w)] for y in range(h)])
 
 
 PNG_FEATURES_SCHEMA = (
@@ -294,47 +292,19 @@ PNG_FEATURES_SCHEMA = (
 )
 
 
-def png_features(df_payload: DataFrame) -> DataFrame:
-    """Inflate + un-filter PNG payloads (all five filter types) and
-    emit integer raster features."""
-    from .codecs import decode_png
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "px_max")}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                w, h, rows = decode_png(bytes(p))
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(v for row in rows for v in row))
-                out["px_max"].append(max(v for row in rows for v in row))
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, PNG_FEATURES_SCHEMA)
+def png_rows(d: int, p: bytes) -> list[tuple]:
+    """Inflate + un-filter (all five filter types) → integer raster features."""
+    w, h, rows = decode_png(p)
+    return [(
+        d, w, h, sum(v for row in rows for v in row), max(v for row in rows for v in row)
+    )]
 
 
-def synth_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """doc_id → real GIF87a bytes (grayscale palette, true GIF-LZW):
-    w = 12 + id%13, h = 4 + id%9, gray(x, y) = (7x + 11y + id) % 256."""
-    from .codecs import encode_gif
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for doc_id in b[id_col]:
-                d = int(doc_id)
-                w, h = 12 + d % 13, 4 + d % 9
-                rows = [
-                    [(7 * x + 11 * y + d) % 256 for x in range(w)]
-                    for y in range(h)
-                ]
-                payloads.append(encode_gif(w, h, rows))
-            yield pd.DataFrame({id_col: b[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        gen, f"{id_col} bigint, payload binary"
-    )
+def gif_payload(d: int) -> bytes:
+    """GIF87a (grayscale palette, true GIF-LZW): w = 12 + id%13,
+    h = 4 + id%9, gray(x, y) = (7x + 11y + id) % 256."""
+    w, h = 12 + d % 13, 4 + d % 9
+    return encode_gif(w, h, [[(7 * x + 11 * y + d) % 256 for x in range(w)] for y in range(h)])
 
 
 GIF_FEATURES_SCHEMA = (
@@ -342,81 +312,22 @@ GIF_FEATURES_SCHEMA = (
 )
 
 
-def gif_features(df_payload: DataFrame) -> DataFrame:
-    """LZW-decode GIF payloads and emit integer raster features."""
-    from .codecs import decode_gif
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "px_min")}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                w, h, rows = decode_gif(bytes(p))
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(v for row in rows for v in row))
-                out["px_min"].append(min(v for row in rows for v in row))
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, GIF_FEATURES_SCHEMA)
+def gif_rows(d: int, p: bytes) -> list[tuple]:
+    """LZW decode → integer raster features."""
+    w, h, rows = decode_gif(p)
+    return [(
+        d, w, h, sum(v for row in rows for v in row), min(v for row in rows for v in row)
+    )]
 
 
-WAV_WALSH_SCHEMA = "doc_id bigint, k bigint, corr bigint, corr_abs bigint"
-
-
-def wav_walsh_bins(df_payload: DataFrame, ks: tuple[int, ...] = (1, 2, 4, 8)) -> DataFrame:
-    """Square-wave (Walsh/Rademacher) spectral bins over decoded PCM:
-    for k cycles across the clip, s_k(i) = +1 where ((2·k·i) // n) is
-    even, −1 otherwise, and the bin statistic is Σ vᵢ·s_k(i) — the
-    integer-exact sequency-domain analog of a DFT bin (used by cheap
-    audio fingerprinters precisely because it needs no trig).  Stays
-    int64 end-to-end, so the SQL oracle reproduces it bitwise —
-    a true-DFT bin would hit the cross-engine libm cos/sin ulp gap.
-    One mapInPandas pass over the payloads: scan-side, zero shuffle."""
-    import numpy as np
-
-    from .codecs import decode_wav
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {"doc_id": [], "k": [], "corr": [], "corr_abs": []}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                _, _, samples = decode_wav(bytes(p))
-                a = np.asarray(samples, dtype=np.int64)
-                n = len(a)
-                i = np.arange(n, dtype=np.int64)
-                for k in ks:
-                    s = 1 - 2 * (((2 * k * i) // n) % 2)
-                    c = int((a * s).sum()) if n else 0
-                    out["doc_id"].append(int(doc_id))
-                    out["k"].append(int(k))
-                    out["corr"].append(c)
-                    out["corr_abs"].append(abs(c))
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, WAV_WALSH_SCHEMA)
-
-
-def synth_pgm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """doc_id → real Netpbm PGM bytes, alternating P5 raw (even id)
-    and P2 plain ASCII (odd id) so both parser paths run on every
-    batch: w = 10 + id%19, h = 3 + id%7, gray(x, y) = (5x + 7y + id) % 256."""
-    from .codecs import encode_pgm
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for doc_id in b[id_col]:
-                d = int(doc_id)
-                w, h = 10 + d % 19, 3 + d % 7
-                rows = [
-                    [(5 * x + 7 * y + d) % 256 for x in range(w)] for y in range(h)
-                ]
-                payloads.append(encode_pgm(w, h, rows, plain=bool(d % 2)))
-            yield pd.DataFrame({id_col: b[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        gen, f"{id_col} bigint, payload binary"
+def pgm_payload(d: int) -> bytes:
+    """Netpbm PGM, alternating P5 raw (even id) and P2 plain ASCII (odd
+    id) so both parser paths run on every batch: w = 10 + id%19,
+    h = 3 + id%7, gray(x, y) = (5x + 7y + id) % 256."""
+    w, h = 10 + d % 19, 3 + d % 7
+    return encode_pgm(
+        w, h, [[(5 * x + 7 * y + d) % 256 for x in range(w)] for y in range(h)],
+        plain=bool(d % 2),
     )
 
 
@@ -425,57 +336,33 @@ PGM_FEATURES_SCHEMA = (
 )
 
 
-def pgm_features(df_payload: DataFrame) -> DataFrame:
-    """Parse P2/P5 PGM payloads and emit integer raster features."""
-    from .codecs import decode_pgm
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "px_max")}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                w, h, rows = decode_pgm(bytes(p))
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(sum(v for row in rows for v in row))
-                out["px_max"].append(max(v for row in rows for v in row))
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, PGM_FEATURES_SCHEMA)
+def pgm_rows(d: int, p: bytes) -> list[tuple]:
+    """P2/P5 token/raster parse → integer raster features."""
+    w, h, rows = decode_pgm(p)
+    return [(
+        d, w, h, sum(v for row in rows for v in row), max(v for row in rows for v in row)
+    )]
 
 
-def synth_qoi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """doc_id → real QOI bytes (channels=3): w = 8 + id%21,
-    h = 3 + id%8, rgb(x, y) = ((2x+3y+id)%256, (3x+5y+id)%256,
-    (5x+7y+id)%256) with every 4th row flattened to a constant so the
+def qoi_payload(d: int) -> bytes:
+    """QOI (channels=3): w = 8 + id%21, h = 3 + id%8,
+    rgb(x, y) = ((2x+3y+id)%256, (3x+5y+id)%256, (5x+7y+id)%256) with
+    every 4th row flattened to a constant (id%7, id%7, id%7) so the
     RUN/INDEX ops exercise alongside DIFF/LUMA/RGB."""
-    from .codecs import encode_qoi
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            payloads = []
-            for doc_id in b[id_col]:
-                d = int(doc_id)
-                w, h = 8 + d % 21, 3 + d % 8
-                rows = [
-                    [
-                        ((d % 7,) * 3)
-                        if y % 4 == 3
-                        else (
-                            (2 * x + 3 * y + d) % 256,
-                            (3 * x + 5 * y + d) % 256,
-                            (5 * x + 7 * y + d) % 256,
-                        )
-                        for x in range(w)
-                    ]
-                    for y in range(h)
-                ]
-                payloads.append(encode_qoi(w, h, rows))
-            yield pd.DataFrame({id_col: b[id_col], "payload": payloads})
-
-    return _spread_ids(df, id_col).mapInPandas(
-        gen, f"{id_col} bigint, payload binary"
-    )
+    w, h = 8 + d % 21, 3 + d % 8
+    return encode_qoi(w, h, [
+        [
+            ((d % 7,) * 3)
+            if y % 4 == 3
+            else (
+                (2 * x + 3 * y + d) % 256,
+                (3 * x + 5 * y + d) % 256,
+                (5 * x + 7 * y + d) % 256,
+            )
+            for x in range(w)
+        ]
+        for y in range(h)
+    ])
 
 
 QOI_FEATURES_SCHEMA = (
@@ -483,22 +370,11 @@ QOI_FEATURES_SCHEMA = (
 )
 
 
-def qoi_features(df_payload: DataFrame) -> DataFrame:
-    """Decode QOI payloads and emit integer raster features."""
-    from .codecs import decode_qoi
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "px_sum", "g_sum")}
-            for doc_id, p in zip(b["doc_id"], b["payload"]):
-                w, h, rows = decode_qoi(bytes(p))
-                out["doc_id"].append(int(doc_id))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["px_sum"].append(
-                    sum(r + g + bb for row in rows for r, g, bb in row)
-                )
-                out["g_sum"].append(sum(g for row in rows for _, g, _ in row))
-            yield pd.DataFrame(out)
-
-    return df_payload.mapInPandas(gen, QOI_FEATURES_SCHEMA)
+def qoi_rows(d: int, p: bytes) -> list[tuple]:
+    """QOI decode → integer raster features."""
+    w, h, rows = decode_qoi(p)
+    return [(
+        d, w, h,
+        sum(r + g + bb for row in rows for r, g, bb in row),
+        sum(g for row in rows for _, g, _ in row),
+    )]

@@ -15,11 +15,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import multimodal as M
 from ..operators.multimodal import (
     attach_binary_payload,
     decode_features,
+    parse_payloads,
     resize_images,
     sample_frames,
+    synth_payloads,
 )
 from ..sources.io import table
 from .registry import registrar
@@ -107,14 +110,15 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# REAL-codec queries (round 3): WAV / BMP / PNG payloads are genuine
-# byte streams (operators/codecs.py — stdlib struct/zlib), synthesized
-# in one mapInPandas kernel and PARSED back in a second; because the
-# synthesis is a fixed integer recurrence of doc_id, DuckDB can
-# re-derive every decoded feature exactly → full value-hash oracles
-# for the whole decode path (these three retire the "multimodal is
-# rows-only" caveat; JPEG/MP3/H.264 remain NotImplementedError by the
-# documented container contract).
+# REAL-codec queries: WAV / BMP / PNG / GIF / PGM / QOI payloads are
+# genuine byte streams (operators/codecs.py — stdlib struct/zlib),
+# synthesized by one mapInPandas kernel (operators/multimodal.
+# synth_payloads) and PARSED back by a second (parse_payloads); each
+# query only names its format's payload formula, row statistics and
+# schema.  Because every payload is a fixed integer recurrence of
+# doc_id, DuckDB re-derives every decoded feature exactly → full
+# value-hash oracles for the whole decode path.  The oracle SQL below
+# is written independently of the Python formulas on purpose.
 # ---------------------------------------------------------------------------
 
 
@@ -149,10 +153,10 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real 16-bit PCM WAV payloads → RIFF/PCM parse →
     integer signal features (peak, abs-sum, zero crossings).  Two
     chained mapInPandas kernels, scan-side, zero shuffles."""
-    from ..operators.multimodal import synth_wav_payloads, wav_features
-
     d = table(spark, sf_dir, "documents")
-    return wav_features(synth_wav_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.wav_payload), M.WAV_FEATURES_SCHEMA, M.wav_rows
+    )
 
 
 @q(
@@ -180,10 +184,10 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real 24bpp BMP payloads (bottom-up rows, 4-byte row
     padding) → header+raster parse → integer pixel features."""
-    from ..operators.multimodal import bmp_features, synth_bmp_payloads
-
     d = table(spark, sf_dir, "documents")
-    return bmp_features(synth_bmp_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.bmp_payload), M.BMP_FEATURES_SCHEMA, M.bmp_rows
+    )
 
 
 @q(
@@ -210,10 +214,10 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real 8-bit grayscale PNG payloads (zlib IDAT, rows
     cycling ALL five PNG filter types) → chunk parse + inflate +
     un-filter → integer raster features."""
-    from ..operators.multimodal import png_features, synth_png_payloads
-
     d = table(spark, sf_dir, "documents")
-    return png_features(synth_png_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.png_payload), M.PNG_FEATURES_SCHEMA, M.png_rows
+    )
 
 
 @q(
@@ -243,10 +247,10 @@ def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel pair as the PNG/BMP/WAV codecs; the decoder is verified
     against tool-written files (tests/test_codecs.py's CPython-icon
     conformance vector)."""
-    from ..operators.multimodal import gif_features, synth_gif_payloads
-
     d = table(spark, sf_dir, "documents")
-    return gif_features(synth_gif_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.gif_payload), M.GIF_FEATURES_SCHEMA, M.gif_rows
+    )
 
 
 @q(
@@ -274,14 +278,14 @@ def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real WAV payloads → Walsh/square-wave spectral bins
     (k = 1, 2, 4, 8 cycles per clip).  The integer-exact stand-in for
-    per-bin DFT energy — see operators/multimodal.wav_walsh_bins for
+    per-bin DFT energy — see operators/multimodal.walsh_rows for
     why square waves instead of cos/sin (cross-engine libm ulp).
     Chained mapInPandas kernels, scan-side, zero shuffles — the same
     embarrassingly-parallel shape as q_audio_features."""
-    from ..operators.multimodal import synth_wav_payloads, wav_walsh_bins
-
     d = table(spark, sf_dir, "documents")
-    return wav_walsh_bins(synth_wav_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.wav_payload), M.WAV_WALSH_SCHEMA, M.walsh_rows
+    )
 
 
 @q(
@@ -310,10 +314,10 @@ def q_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     every batch) → token/raster parse → integer features.  Same
     scan-side zero-shuffle mapInPandas kernel pair as the other
     codecs (operators/codecs.encode_pgm/decode_pgm)."""
-    from ..operators.multimodal import pgm_features, synth_pgm_payloads
-
     d = table(spark, sf_dir, "documents")
-    return pgm_features(synth_pgm_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.pgm_payload), M.PGM_FEATURES_SCHEMA, M.pgm_rows
+    )
 
 
 @q(
@@ -351,7 +355,7 @@ def q_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     → decode → integer raster features.  Same scan-side zero-shuffle
     mapInPandas kernel pair as the other codecs
     (operators/codecs.encode_qoi/decode_qoi)."""
-    from ..operators.multimodal import qoi_features, synth_qoi_payloads
-
     d = table(spark, sf_dir, "documents")
-    return qoi_features(synth_qoi_payloads(d))
+    return parse_payloads(
+        synth_payloads(d, M.qoi_payload), M.QOI_FEATURES_SCHEMA, M.qoi_rows
+    )

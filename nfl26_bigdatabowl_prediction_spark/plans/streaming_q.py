@@ -451,6 +451,7 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by construction (the driver itself re-runs the bench at a
     # lower core count), and the stream pins its own count in the
     # checkpoint at drain 1 regardless.
+    from ..streaming.run import _await_drain
     from ..streaming.source import STREAM_SHUFFLE_PARTITIONS
 
     ensure_python_sources(spark)
@@ -490,7 +491,7 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .start()
                 )
                 try:
-                    query.awaitTermination(120)
+                    _await_drain(query, "python stream source")
                 except StreamingQueryException as ex:
                     if (
                         "failed to connect back" in str(ex)
@@ -499,9 +500,6 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                         continue
                     raise
                 break
-            if query.isActive:  # pragma: no cover - defensive
-                query.stop()
-                raise TimeoutError("python stream source did not drain")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     return spark.table(name).select(

@@ -22,12 +22,21 @@ from pyspark.sql import functions as F
 
 from ..scratch import scratch_dir
 
+DRAIN_TIMEOUT_S = 300
+# run_two_phase's phase-2 rows: event_id % DELAYED_MOD == DELAYED_REM
+DELAYED_MOD, DELAYED_REM = 10, 3
 
-def run_available_now(
-    sdf: DataFrame,
-    output_mode: str = "append",
-    timeout_sec: int = 300,
-) -> DataFrame:
+
+def _await_drain(query, what: str) -> None:
+    """Block until an AvailableNow ``query`` has drained its source;
+    stop it and raise if it is still running after DRAIN_TIMEOUT_S."""
+    query.awaitTermination(DRAIN_TIMEOUT_S)
+    if query.isActive:  # pragma: no cover - defensive
+        query.stop()
+        raise TimeoutError(f"{what} did not drain in {DRAIN_TIMEOUT_S}s")
+
+
+def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
     """Execute a streaming DataFrame until the source is drained;
     return the accumulated result as a batch DataFrame.
 
@@ -47,20 +56,15 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
-    if query.isActive:  # pragma: no cover - defensive
-        query.stop()
-        raise TimeoutError(f"streaming query {name} did not drain in {timeout_sec}s")
+    _await_drain(query, f"streaming query {name}")
     return sdf.sparkSession.table(name)
 
 
-def _two_phase_parts(
-    spark: SparkSession, sf_dir: str, delayed_mod: int, delayed_rem: int
-) -> tuple[str, object]:
+def _two_phase_parts(spark: SparkSession, sf_dir: str) -> tuple[str, object]:
     """Pristine (parts dir, schema) of the two phase files.
 
     The split is a pure function of the events file and ``event_id %
-    delayed_mod == delayed_rem``, but building it costs two Spark write
+    DELAYED_MOD == DELAYED_REM``, but building it costs two Spark write
     jobs + a footer probe (~1 s) and the bench calls each
     two-phase query 4x, so it goes through the metadata memo.  The
     pristine files are never mutated (each run HARDLINKS them into its
@@ -72,7 +76,7 @@ def _two_phase_parts(
     def build() -> tuple[str, object]:
         base = table(spark, sf_dir, "events")  # ts normalized to int64 micros
         parts_dir = scratch_dir("spark_twophase_parts_")
-        delayed = (F.col("event_id") % delayed_mod) == delayed_rem
+        delayed = (F.col("event_id") % DELAYED_MOD) == DELAYED_REM
         for phase, pred in ((1, ~delayed), (2, delayed)):
             stage = os.path.join(parts_dir, f"stage{phase}")
             base.filter(pred).coalesce(1).write.mode("overwrite").parquet(stage)
@@ -86,7 +90,7 @@ def _two_phase_parts(
 
     return _memo(
         [f"{sf_dir}/events.parquet"],
-        ("two_phase", delayed_mod, delayed_rem),
+        ("two_phase", DELAYED_MOD, DELAYED_REM),
         build,
     )
 
@@ -96,13 +100,10 @@ def run_two_phase(
     sf_dir: str,
     build: Callable[[DataFrame], DataFrame],
     output_mode: str = "append",
-    delayed_mod: int = 10,
-    delayed_rem: int = 3,
-    timeout_sec: int = 300,
 ) -> DataFrame:
     """Late-data harness: drain the events table in TWO AvailableNow
     runs sharing one checkpoint — an on-time file first (phase 1),
-    then a delayed file (``event_id % delayed_mod == delayed_rem``,
+    then a delayed file (``event_id % DELAYED_MOD == DELAYED_REM``,
     phase 2) whose rows mostly lie BEHIND the event-time watermark the
     checkpoint carried over from phase 1.
 
@@ -117,9 +118,7 @@ def run_two_phase(
     update mode that is the per-phase CHANGELOG, the thing a
     downstream upsert sink would consume.
     """
-    parts_dir, schema = _two_phase_parts(
-        spark, sf_dir, delayed_mod, delayed_rem
-    )
+    parts_dir, schema = _two_phase_parts(spark, sf_dir)
     root = scratch_dir("spark_twophase_")
     src = os.path.join(root, "src")
     out = os.path.join(root, "out")
@@ -166,8 +165,5 @@ def run_two_phase(
             .trigger(availableNow=True)
             .start()
         )
-        query.awaitTermination(timeout_sec)
-        if query.isActive:  # pragma: no cover - defensive
-            query.stop()
-            raise TimeoutError(f"two-phase drain {phase} did not finish")
+        _await_drain(query, f"two-phase drain {phase}")
     return spark.read.parquet(out)

@@ -24,6 +24,7 @@ Scale/fault-tolerance design:
 from __future__ import annotations
 
 from ..scratch import scratch_dir
+from .run import _await_drain
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,9 +54,7 @@ def write_hourly_partials(batch_df: DataFrame, batch_id: int, path: str) -> None
     )
 
 
-def incremental_hourly_rollup(
-    events: DataFrame, path: str, timeout_sec: int = 300
-) -> None:
+def incremental_hourly_rollup(events: DataFrame, path: str) -> None:
     """Drain the events stream into the partial-aggregate delta log at
     ``path`` (Trigger.AvailableNow)."""
     ckpt = scratch_dir("spark_ckpt_mv_")
@@ -67,10 +66,7 @@ def incremental_hourly_rollup(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
-    if query.isActive:  # pragma: no cover - defensive
-        query.stop()
-        raise TimeoutError(f"incremental rollup did not drain in {timeout_sec}s")
+    _await_drain(query, "incremental rollup")
 
 
 def read_hourly_rollup(spark: SparkSession, path: str) -> DataFrame:
@@ -151,9 +147,7 @@ def write_key_upserts(batch_df: DataFrame, batch_id: int, path: str) -> None:
     )
 
 
-def incremental_cdc_table(
-    events: DataFrame, path: str, timeout_sec: int = 300
-) -> None:
+def incremental_cdc_table(events: DataFrame, path: str) -> None:
     """Drain the events stream into the per-key upsert delta log at
     ``path`` (Trigger.AvailableNow) — the streaming MERGE INTO."""
     ckpt = scratch_dir("spark_ckpt_cdc_")
@@ -165,10 +159,7 @@ def incremental_cdc_table(
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_sec)
-    if query.isActive:  # pragma: no cover - defensive
-        query.stop()
-        raise TimeoutError(f"incremental CDC table did not drain in {timeout_sec}s")
+    _await_drain(query, "incremental CDC table")
 
 
 def read_cdc_table(spark: SparkSession, path: str) -> DataFrame:

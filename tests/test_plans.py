@@ -429,10 +429,14 @@ def test_real_codec_queries_shuffle_only_the_id_feed(spark):
     # split (operators/multimodal._spread_ids) — so the contract is
     # now: exactly one exchange, it is RoundRobin, and it sits BELOW
     # the first python kernel (only ids cross it, never payloads).
-    for name in ("q_audio_features", "q_image_decode", "q_png_decode"):
+    for name in (
+        "q_audio_features", "q_image_decode", "q_png_decode", "q_gif_decode",
+        "q_spectral_bins", "q_pgm_decode", "q_qoi_decode",
+    ):
         plan = _plan(spark, name)
         ops = _ops(plan)
         assert ops.count("Exchange") == 1, f"{name}: {plan}"
+        assert ops.count("MapInPandas") == 2, f"{name}: {plan}"
         assert "roundrobin" in plan.lower(), f"{name}: {plan}"
         assert "hashpartitioning" not in plan.lower(), f"{name}: {plan}"
         # the exchange must feed the kernel chain, not consume its
