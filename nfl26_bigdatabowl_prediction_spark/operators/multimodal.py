@@ -16,9 +16,11 @@ of payload bytes:
   output schema.
 
 At 100 TB this is the right shape: decode is embarrassingly parallel,
-so it must stay scan-side (mapInPandas = per-partition batch iterator,
-no exchange), with `spark.sql.files.maxPartitionBytes` sizing batches
-and `arrow.maxRecordsPerBatch` bounding peak memory per batch.
+so it stays executor-side (mapInPandas = per-partition batch iterator),
+with `spark.sql.files.maxPartitionBytes` sizing batches and
+`arrow.maxRecordsPerBatch` bounding peak memory per batch.  The real
+codecs' one exchange is a RoundRobin repartition of the 8-byte doc ids
+below the generator (``_spread_ids``); the payload bytes never shuffle.
 """
 
 from __future__ import annotations

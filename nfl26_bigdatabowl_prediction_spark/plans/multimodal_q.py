@@ -152,7 +152,8 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real 16-bit PCM WAV payloads → RIFF/PCM parse →
     integer signal features (peak, abs-sum, zero crossings).  Two
-    chained mapInPandas kernels, scan-side, zero shuffles."""
+    chained mapInPandas kernels over one RoundRobin exchange of the
+    doc ids; the payload bytes never shuffle."""
     d = table(spark, sf_dir, "documents")
     return parse_payloads(
         synth_payloads(d, M.wav_payload), M.WAV_FEATURES_SCHEMA, M.wav_rows
@@ -243,8 +244,9 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real GIF87a payloads (grayscale palette, genuine
     variable-width GIF-LZW with dict resets) → header parse + LZW
-    decode → integer raster features.  Same scan-side zero-shuffle
-    kernel pair as the PNG/BMP/WAV codecs; the decoder is verified
+    decode → integer raster features.  Same kernel pair over one
+    doc-id RoundRobin exchange as the PNG/BMP/WAV codecs (the payload
+    bytes never shuffle); the decoder is verified
     against tool-written files (tests/test_codecs.py's CPython-icon
     conformance vector)."""
     d = table(spark, sf_dir, "documents")
@@ -280,8 +282,9 @@ def q_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k = 1, 2, 4, 8 cycles per clip).  The integer-exact stand-in for
     per-bin DFT energy — see operators/multimodal.walsh_rows for
     why square waves instead of cos/sin (cross-engine libm ulp).
-    Chained mapInPandas kernels, scan-side, zero shuffles — the same
-    embarrassingly-parallel shape as q_audio_features."""
+    Chained mapInPandas kernels over one RoundRobin exchange of the
+    doc ids — the same embarrassingly-parallel shape as
+    q_audio_features."""
     d = table(spark, sf_dir, "documents")
     return parse_payloads(
         synth_payloads(d, M.wav_payload), M.WAV_WALSH_SCHEMA, M.walsh_rows
@@ -312,8 +315,8 @@ def q_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real Netpbm PGM payloads (P5 raw for even ids, P2
     plain ASCII with header comments for odd ids — both parser paths
     every batch) → token/raster parse → integer features.  Same
-    scan-side zero-shuffle mapInPandas kernel pair as the other
-    codecs (operators/codecs.encode_pgm/decode_pgm)."""
+    mapInPandas kernel pair over one doc-id RoundRobin exchange as the
+    other codecs (operators/codecs.encode_pgm/decode_pgm)."""
     d = table(spark, sf_dir, "documents")
     return parse_payloads(
         synth_payloads(d, M.pgm_payload), M.PGM_FEATURES_SCHEMA, M.pgm_rows
@@ -352,8 +355,8 @@ def q_pgm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → real QOI payloads (qoiformat.org; the full op set —
     gradient rows drive DIFF/LUMA/RGB, constant rows drive RUN/INDEX)
-    → decode → integer raster features.  Same scan-side zero-shuffle
-    mapInPandas kernel pair as the other codecs
+    → decode → integer raster features.  Same mapInPandas kernel pair
+    over one doc-id RoundRobin exchange as the other codecs
     (operators/codecs.encode_qoi/decode_qoi)."""
     d = table(spark, sf_dir, "documents")
     return parse_payloads(

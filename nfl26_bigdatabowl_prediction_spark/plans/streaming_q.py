@@ -29,15 +29,13 @@ from ..streaming import (
     streaming_ewm,
     tumbling_counts,
 )
+from ..streaming.pipelines import GAP_US, HORIZON_US, SLIDE_US, WM_US
 from ..streaming.stateful import _FUNNEL_GAP_US
 from .registry import registrar
 
 QUERIES: dict = {}
 ORACLES: dict = {}
 q = registrar(QUERIES, ORACLES)
-
-
-GAP_US = 30 * 60 * 1_000_000  # 30-minute session gap in micros
 
 
 # --------------------------------------------------------------------------
@@ -90,7 +88,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
-    return run_available_now(session_windows(ev, gap="30 minutes"), output_mode="complete")
+    return run_available_now(session_windows(ev), output_mode="complete")
 
 
 # --------------------------------------------------------------------------
@@ -118,7 +116,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_ewm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
-    return run_available_now(streaming_ewm(ev, alpha=0.3), output_mode="append")
+    return run_available_now(streaming_ewm(ev), output_mode="append")
 
 
 # --------------------------------------------------------------------------
@@ -127,9 +125,6 @@ def q_stream_ewm(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Oracle: explode each event to its two window starts and group —
 # the deterministic batch meaning of a slide.
 # --------------------------------------------------------------------------
-SLIDE_US = 30 * 60 * 1_000_000
-
-
 @q(
     "q_stream_sliding",
     f"""
@@ -152,10 +147,7 @@ SLIDE_US = 30 * 60 * 1_000_000
 )
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
-    return run_available_now(
-        sliding_value_stats(ev, width="1 hour", slide="30 minutes"),
-        output_mode="complete",
-    )
+    return run_available_now(sliding_value_stats(ev), output_mode="complete")
 
 
 # --------------------------------------------------------------------------
@@ -174,7 +166,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import dedup_within_watermark
 
     ev = events_stream(spark, sf_dir)
-    deduped = dedup_within_watermark(ev, keys=["user_id", "event_type"])
+    deduped = dedup_within_watermark(ev)
     return run_available_now(
         deduped.select("user_id", "event_type"), output_mode="append"
     )
@@ -188,9 +180,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # State is bounded: the time-range join condition + both watermarks
 # let each side evict rows the other side can no longer match.
 # --------------------------------------------------------------------------
-HORIZON_US = 60 * 60 * 1_000_000
-
-
 @q(
     "q_stream_join",
     f"""
@@ -212,12 +201,10 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # identical (oracle-checked) and removes a full plan+state+commit
     # cycle.  The left-outer twin below MUST keep the default: its
     # eviction batch is what emits the null-padded rows.  Round-11
-    # interleaved A/B (3 reps, min per arm): 2.96 s -> 2.25 s.
+    # interleaved A/B (3 reps, min per arm): 2.96 s -> 2.25 s.  The
+    # batch count is pinned by tests/test_streaming.py.
     ev = events_stream(spark, sf_dir, no_data_batches=False)
-    joined = stream_stream_interval_join(
-        ev, left_type="click", right_type="purchase", horizon="1 hour"
-    )
-    return run_available_now(joined, output_mode="append")
+    return run_available_now(stream_stream_interval_join(ev), output_mode="append")
 
 
 # --------------------------------------------------------------------------
@@ -333,9 +320,6 @@ def q_stream_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # answer is deliberately NOT the batch answer — it value-hashes the
 # watermark semantics themselves.
 # --------------------------------------------------------------------------
-WM_US = 2 * 3600 * 1_000_000  # the '2 hours' watermark delay in micros
-
-
 @q(
     "q_stream_join_left",
     f"""
@@ -358,15 +342,9 @@ WM_US = 2 * 3600 * 1_000_000  # the '2 hours' watermark delay in micros
 )
 def q_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_stream(spark, sf_dir)
-    joined = stream_stream_interval_join(
-        ev,
-        left_type="click",
-        right_type="purchase",
-        horizon="1 hour",
-        watermark="2 hours",
-        join_type="leftOuter",
+    return run_available_now(
+        stream_stream_interval_join(ev, join_type="leftOuter"), output_mode="append"
     )
-    return run_available_now(joined, output_mode="append")
 
 
 # --------------------------------------------------------------------------
@@ -450,14 +428,16 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every registered query's output is partition-count invariant
     # by construction (the driver itself re-runs the bench at a
     # lower core count), and the stream pins its own count in the
-    # checkpoint at drain 1 regardless.
-    from ..streaming.run import _await_drain
+    # checkpoint at drain 1 regardless.  It pays at local[32]: without
+    # it the query's median over 5 interleaved bench runs went 5.39 s
+    # -> 7.73 s on 4 cores (the A/B is in CHANGES.md).
+    from ..streaming.run import _drain
     from ..streaming.source import STREAM_SHUFFLE_PARTITIONS
 
     ensure_python_sources(spark)
     name = "s" + uuid.uuid4().hex[:12]
     ckpt = scratch_dir("spark_ckpt_pysrc_")
-    agg = (
+    writer = (
         spark.readStream.format("synth_stream")
         .load()
         .groupBy("bucket")
@@ -465,6 +445,9 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("payload").cast("bigint").alias("payload_sum"),
         )
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
     )
     saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -482,21 +465,10 @@ def q_stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             # class as a shuffle-fetch failure, so it gets the same
             # treatment: a bounded retry.  Anything else re-raises.
             for attempt in range(3):
-                query = (
-                    agg.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode("complete")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
                 try:
-                    _await_drain(query, "python stream source")
+                    _drain(writer, ckpt)
                 except StreamingQueryException as ex:
-                    if (
-                        "failed to connect back" in str(ex)
-                        and attempt < 2
-                    ):
+                    if "failed to connect back" in str(ex) and attempt < 2:
                         continue
                     raise
                 break

@@ -43,28 +43,3 @@ from .sink import (
     write_hourly_partials,
 )
 
-__all__ = [
-    "events_stream",
-    "tumbling_counts",
-    "tumbling_totals",
-    "sliding_value_stats",
-    "session_windows",
-    "session_windows_dynamic",
-    "dedup_within_watermark",
-    "stream_stream_interval_join",
-    "stream_static_enrich",
-    "streaming_ewm",
-    "streaming_funnel",
-    "streaming_funnel_late",
-    "streaming_funnel_ttl",
-    "streaming_running_stats",
-    "run_available_now",
-    "run_two_phase",
-    "compact_rollup",
-    "incremental_cdc_table",
-    "incremental_hourly_rollup",
-    "read_cdc_table",
-    "read_hourly_rollup",
-    "write_key_upserts",
-    "write_hourly_partials",
-]

@@ -19,41 +19,58 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import cents as _cents
 
+# The window constants, each interval string next to its value in
+# micros (the oracle SQL in plans/streaming_q.py reads the micros).
+_MIN_US = 60 * 1_000_000
+WATERMARK = "1 hour"  # every watermarked window, dedup and funnel
+SESSION_GAP, GAP_US = "30 minutes", 30 * _MIN_US
+SLIDE, SLIDE_US = "30 minutes", 30 * _MIN_US
+HORIZON, HORIZON_US = "1 hour", 60 * _MIN_US  # interval-join bound
+JOIN_WATERMARK, WM_US = "2 hours", 120 * _MIN_US
+DEDUP_KEYS = ["user_id", "event_type"]
 
-def tumbling_totals(
-    events: DataFrame, width: str = "2 hours", watermark: str = "1 hour"
+
+def _windowed(
+    events: DataFrame, window: Column, keys: list[str], start: str, *extra: Column
 ) -> DataFrame:
-    """Window-only tumbling totals (no secondary key) — the late-data
-    probe shape: with a 2 h window and a 1 h watermark delay there
-    exist rows that are BEHIND the watermark yet belong to a window
-    still open (window_end > watermark), and Spark keeps exactly
+    """The one windowed aggregate: watermark → group by (window, keys)
+    → count + exact cents sum (+ ``extra`` aggregates), with the
+    window start in micros as ``start``.  Columns: ``start``, keys,
+    n_events, value_sum, extras."""
+    agged = (
+        events.withWatermark("event_time", WATERMARK)
+        .groupBy(window.alias("win"), *keys)
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            (F.sum(_cents(F.col("value"))) / 100.0).alias("value_sum"),
+            *extra,
+        )
+    )
+    return agged.select(
+        F.unix_micros(F.col("win.start")).alias(start), *agged.columns[1:]
+    )
+
+
+def tumbling_totals(events: DataFrame) -> DataFrame:
+    """Window-only 2 h tumbling totals (no secondary key) — the
+    late-data probe shape: with a 2 h window and a 1 h watermark delay
+    there exist rows that are BEHIND the watermark yet belong to a
+    window still open (window_end > watermark), and Spark keeps exactly
     those (measured: a windowed-agg row is dropped iff its
     window END is at-or-below the watermark; row ts is irrelevant).
     Emitted counts are cumulative per window (update-mode changelog).
     """
-    agged = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", width).alias("win"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            (F.sum(_cents(F.col("value"))) / 100.0).alias("value_sum"),
-        )
-    )
-    return agged.select(
-        F.unix_micros(F.col("win.start")).alias("window_start_us"),
-        "n_events",
-        "value_sum",
+    return _windowed(
+        events, F.window("event_time", "2 hours"), [], "window_start_us"
     )
 
 
-def tumbling_counts(
-    events: DataFrame, width: str = "1 hour", watermark: str = "1 hour"
-) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Per-(hour, event_type) counts + exact value sums over a
     tumbling event-time window.
 
@@ -61,54 +78,34 @@ def tumbling_counts(
     tumbling windows align to the epoch, so window.start IS the
     truncated hour.
     """
-    agged = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", width).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents(F.col("value"))) / 100.0).alias("value_sum"),
-        )
-    )
-    return agged.select(
-        F.unix_micros(F.col("win.start")).alias("window_start_us"),
-        "event_type",
-        "n_events",
-        "value_sum",
+    return _windowed(
+        events, F.window("event_time", "1 hour"), ["event_type"], "window_start_us"
     )
 
 
-def sliding_value_stats(
-    events: DataFrame,
-    width: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def sliding_value_stats(events: DataFrame) -> DataFrame:
     """Sliding-window value stats: each event lands in
-    width/slide overlapping windows (here 2)."""
-    agged = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", width, slide).alias("win"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents(F.col("value"))) / 100.0).alias("value_sum"),
-            F.min("value").alias("value_min"),
-            F.max("value").alias("value_max"),
-        )
-    )
-    return agged.select(
-        F.unix_micros(F.col("win.start")).alias("window_start_us"),
-        "n_events",
-        "value_sum",
-        "value_min",
-        "value_max",
+    width/slide overlapping windows (here 1 h / 30 min = 2)."""
+    return _windowed(
+        events,
+        F.window("event_time", "1 hour", SLIDE),
+        [],
+        "window_start_us",
+        F.min("value").alias("value_min"),
+        F.max("value").alias("value_max"),
     )
 
 
-def session_windows(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
+def _sessions(events: DataFrame, gap: str | Column) -> DataFrame:
+    """Per-user session totals; session rows lead with ``user_id``."""
+    return _windowed(
+        events, F.session_window("event_time", gap), ["user_id"], "sess_start_us"
+    ).select("user_id", "sess_start_us", "n_events", "value_sum")
+
+
+def session_windows(events: DataFrame) -> DataFrame:
     """Per-user session windows: a session extends while successive
-    events arrive strictly less than ``gap`` apart; a gap ≥ ``gap``
+    events arrive strictly less than SESSION_GAP apart; a larger gap
     starts a new session.
 
     Batch twin (and DuckDB oracle): the classic lag-flag-cumsum
@@ -117,25 +114,10 @@ def session_windows(
     the session, so ``sess_start_us`` identifies sessions engine-
     independently (session ordinals don't need to match).
     """
-    agged = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", gap).alias("win"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents(F.col("value"))) / 100.0).alias("value_sum"),
-        )
-    )
-    return agged.select(
-        "user_id",
-        F.unix_micros(F.col("win.start")).alias("sess_start_us"),
-        "n_events",
-        "value_sum",
-    )
+    return _sessions(events, SESSION_GAP)
 
 
-def session_windows_dynamic(
-    events: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+def session_windows_dynamic(events: DataFrame) -> DataFrame:
     """Per-user session windows with a PER-EVENT gap — the dynamic-gap
     face of ``session_window`` (Spark 3.2+): a purchase keeps the
     session alive for 2 h, anything else for 30 min.  Each event
@@ -150,46 +132,29 @@ def session_windows_dynamic(
     # session_window requires CalendarIntervalType for a dynamic gap;
     # ANSI INTERVAL literals are DayTimeIntervalType, so build the
     # gaps with make_interval
-    gap = F.expr(
-        "CASE WHEN event_type = 'purchase' THEN make_interval(0,0,0,0,2,0,0) "
-        "ELSE make_interval(0,0,0,0,0,30,0) END"
-    )
-    agged = (
-        events.withWatermark("event_time", watermark)
-        .groupBy(F.session_window("event_time", gap).alias("win"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents(F.col("value"))) / 100.0).alias("value_sum"),
-        )
-    )
-    return agged.select(
-        "user_id",
-        F.unix_micros(F.col("win.start")).alias("sess_start_us"),
-        "n_events",
-        "value_sum",
+    return _sessions(
+        events,
+        F.expr(
+            "CASE WHEN event_type = 'purchase' THEN make_interval(0,0,0,0,2,0,0) "
+            "ELSE make_interval(0,0,0,0,0,30,0) END"
+        ),
     )
 
 
 def stream_stream_interval_join(
-    events: DataFrame,
-    left_type: str = "click",
-    right_type: str = "purchase",
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-    join_type: str = "inner",
+    events: DataFrame, join_type: str = "inner"
 ) -> DataFrame:
-    """Watermarked stream-stream interval join: each ``left_type``
-    event pairs with the same user's ``right_type`` events that land
-    strictly after it and within ``horizon`` (the conversion-funnel
-    join).
+    """Watermarked stream-stream interval join: each click pairs with
+    the same user's purchases that land strictly after it and within
+    HORIZON (the conversion-funnel join).
 
-    Both sides carry a watermark and the join condition bounds the
-    event-time distance, so each side's state store evicts rows once
-    the other side's watermark passes ``ts + horizon`` — bounded state
-    on an unbounded stream.  Inner joins emit each match the moment
-    both rows have arrived (append mode), so draining a finite source
-    yields exactly the batch join.  ``join_type='leftOuter'`` also
-    emits null-padded rows for left events that found no match — but
+    Both sides carry a JOIN_WATERMARK and the join condition bounds
+    the event-time distance, so each side's state store evicts rows
+    once the other side's watermark passes ``ts + horizon`` — bounded
+    state on an unbounded stream.  Inner joins emit each match the
+    moment both rows have arrived (append mode), so draining a finite
+    source yields exactly the batch join.  ``join_type='leftOuter'``
+    also emits null-padded rows for clicks that found no match — but
     only once the watermark has passed ``left_time + horizon`` (state
     eviction is what proves no match can still arrive), so on a
     drained source the tail's unmatched rows stay withheld: the
@@ -198,31 +163,27 @@ def stream_stream_interval_join(
     watermark delay) evicted them.  q_stream_join_left's oracle
     encodes exactly that cutoff.
     """
-    clicks = (
-        events.filter(F.col("event_type") == left_type)
+    clicks, buys = (
+        events.filter(F.col("event_type") == event_type)
         .select(
-            F.col("event_id").alias("left_id"),
-            F.col("user_id").alias("left_user"),
-            F.col("ts").alias("left_ts"),
-            F.col("event_time").alias("left_time"),
+            *(
+                F.col(c).alias(f"{side}_{suffix}")
+                for c, suffix in (
+                    ("event_id", "id"),
+                    ("user_id", "user"),
+                    ("ts", "ts"),
+                    ("event_time", "time"),
+                )
+            )
         )
-        .withWatermark("left_time", watermark)
-    )
-    buys = (
-        events.filter(F.col("event_type") == right_type)
-        .select(
-            F.col("event_id").alias("right_id"),
-            F.col("user_id").alias("right_user"),
-            F.col("ts").alias("right_ts"),
-            F.col("event_time").alias("right_time"),
-        )
-        .withWatermark("right_time", watermark)
+        .withWatermark(f"{side}_time", JOIN_WATERMARK)
+        for side, event_type in (("left", "click"), ("right", "purchase"))
     )
     joined = clicks.join(
         buys,
         (F.col("left_user") == F.col("right_user"))
         & (F.col("right_time") > F.col("left_time"))
-        & (F.col("right_time") <= F.col("left_time") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("right_time") <= F.col("left_time") + F.expr(f"INTERVAL {HORIZON}")),
         join_type,
     )
     return joined.select(
@@ -253,13 +214,10 @@ def stream_static_enrich(events: DataFrame, user_stats: DataFrame) -> DataFrame:
     )
 
 
-def dedup_within_watermark(
-    events: DataFrame, keys: list[str] | None = None, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming exact dedup on ``keys`` with bounded state: a key's
+def dedup_within_watermark(events: DataFrame) -> DataFrame:
+    """Streaming exact dedup on DEDUP_KEYS with bounded state: a key's
     fingerprint is retained only within the watermark horizon.
     First-seen row wins (per micro-batch arrival order)."""
-    keys = keys or ["event_id"]
-    return events.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
-        keys
+    return events.withWatermark("event_time", WATERMARK).dropDuplicatesWithinWatermark(
+        DEDUP_KEYS
     )

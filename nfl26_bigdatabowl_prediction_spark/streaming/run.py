@@ -19,6 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..scratch import scratch_dir
 
@@ -27,13 +28,20 @@ DRAIN_TIMEOUT_S = 300
 DELAYED_MOD, DELAYED_REM = 10, 3
 
 
-def _await_drain(query, what: str) -> None:
-    """Block until an AvailableNow ``query`` has drained its source;
-    stop it and raise if it is still running after DRAIN_TIMEOUT_S."""
+def _drain(writer: DataStreamWriter, ckpt: str) -> None:
+    """Start ``writer`` as an AvailableNow query on checkpoint ``ckpt``
+    and block until it has drained its source; stop it and raise if it
+    is still running after DRAIN_TIMEOUT_S.  Every stream in the
+    package starts here."""
+    query = (
+        writer.option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     query.awaitTermination(DRAIN_TIMEOUT_S)
     if query.isActive:  # pragma: no cover - defensive
         query.stop()
-        raise TimeoutError(f"{what} did not drain in {DRAIN_TIMEOUT_S}s")
+        raise TimeoutError(f"stream on {ckpt} did not drain in {DRAIN_TIMEOUT_S}s")
 
 
 def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
@@ -47,16 +55,10 @@ def run_available_now(sdf: DataFrame, output_mode: str = "append") -> DataFrame:
     drained finite source never advances the watermark further).
     """
     name = "s" + uuid.uuid4().hex[:12]
-    ckpt = scratch_dir("spark_ckpt_")
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        scratch_dir("spark_ckpt_"),
     )
-    _await_drain(query, f"streaming query {name}")
     return sdf.sparkSession.table(name)
 
 
@@ -151,19 +153,16 @@ def run_two_phase(
             .parquet(src)
             .withColumn("event_time", F.timestamp_micros(F.col("ts")))
         )
-        sdf = build(stream)
-
-        def sink(bdf: DataFrame, _bid: int, _p: int = phase) -> None:
-            bdf.withColumn("phase", F.lit(_p).cast("long")).write.mode(
-                "append"
-            ).parquet(out)
-
-        query = (
-            sdf.writeStream.foreachBatch(sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        # the sink runs inside this phase's drain, so it reads this
+        # iteration's ``phase``
+        _drain(
+            build(stream)
+            .writeStream.foreachBatch(
+                lambda bdf, _bid: bdf.withColumn(
+                    "phase", F.lit(phase).cast("long")
+                ).write.mode("append").parquet(out)
+            )
+            .outputMode(output_mode),
+            ckpt,
         )
-        _await_drain(query, f"two-phase drain {phase}")
     return spark.read.parquet(out)

@@ -24,7 +24,7 @@ Scale/fault-tolerance design:
 from __future__ import annotations
 
 from ..scratch import scratch_dir
-from .run import _await_drain
+from .run import _drain
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,16 +57,12 @@ def write_hourly_partials(batch_df: DataFrame, batch_id: int, path: str) -> None
 def incremental_hourly_rollup(events: DataFrame, path: str) -> None:
     """Drain the events stream into the partial-aggregate delta log at
     ``path`` (Trigger.AvailableNow)."""
-    ckpt = scratch_dir("spark_ckpt_mv_")
-    query = (
+    _drain(
         events.writeStream.foreachBatch(
             lambda bdf, bid: write_hourly_partials(bdf, bid, path)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        scratch_dir("spark_ckpt_mv_"),
     )
-    _await_drain(query, "incremental rollup")
 
 
 def read_hourly_rollup(spark: SparkSession, path: str) -> DataFrame:
@@ -150,16 +146,12 @@ def write_key_upserts(batch_df: DataFrame, batch_id: int, path: str) -> None:
 def incremental_cdc_table(events: DataFrame, path: str) -> None:
     """Drain the events stream into the per-key upsert delta log at
     ``path`` (Trigger.AvailableNow) — the streaming MERGE INTO."""
-    ckpt = scratch_dir("spark_ckpt_cdc_")
-    query = (
+    _drain(
         events.writeStream.foreachBatch(
             lambda bdf, bid: write_key_upserts(bdf, bid, path)
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        scratch_dir("spark_ckpt_cdc_"),
     )
-    _await_drain(query, "incremental CDC table")
 
 
 def read_cdc_table(spark: SparkSession, path: str) -> DataFrame:

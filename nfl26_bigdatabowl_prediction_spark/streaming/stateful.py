@@ -1,5 +1,6 @@
-"""Custom stateful streaming operator: per-key EWM
-(``applyInPandasWithState``).
+"""Per-user stateful streaming operators (``applyInPandasWithState``):
+EWM, running stats and three funnel machines, each one state call
+through ``_per_user``.
 
 The reference's EWM (main_mps.py:233-240, ``ewm(alpha,
 adjust=False)``) is a per-trajectory recurrence y_t = α·x_t +
@@ -23,11 +24,14 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .pipelines import WATERMARK
 
 EWM_OUTPUT_SCHEMA = T.StructType(
     [
@@ -46,54 +50,70 @@ EWM_STATE_SCHEMA = T.StructType(
 )
 
 
-def _make_ewm_fn(alpha: float):
-    one_minus = 1.0 - alpha
-
-    def ewm_fn(
-        key: Any, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        last: float | None
-        n: int
-        if state.exists:
-            last, n = state.get
-        else:
-            last, n = None, 0
-        # Drain the WHOLE group before sorting: a group whose rows span
-        # an Arrow record-batch boundary arrives as multiple chunks in
-        # shuffle (arbitrary) order, so per-chunk sorting silently
-        # processes out of event-time order.  Found by the round-8
-        # 8x-scale differential — at sf0.01 no group ever split, at 8x
-        # ~1-in-150 groups did.  Memory stays bounded by one KEY's
-        # micro-batch rows, the same bound the recurrence itself needs.
-        chunks = [p for p in pdf_iter if len(p)]
-        for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
-            pdf = pdf.sort_values(["ts", "event_id"])
-            out = []
-            for v in pdf["value"]:
-                v = float(v)
-                last = v if last is None else alpha * v + one_minus * last
-                out.append(last)
-                n += 1
-            pdf = pdf.assign(ewm03=out)
-            yield pdf[["user_id", "event_id", "value", "ewm03"]]
-        if last is not None:
-            state.update((last, n))
-
-    return ewm_fn
+EWM_ALPHA = 0.3  # the oracle's 0.3 / 0.7 literals
+_EWM_ONE_MINUS = 1.0 - EWM_ALPHA
 
 
-def streaming_ewm(events: DataFrame, alpha: float = 0.3) -> DataFrame:
-    """Per-user streaming EWM.  Works on both streaming and batch
-    DataFrames (applyInPandasWithState requires a stream; batch
-    callers use the batch q_ewm instead)."""
-    return events.select("user_id", "event_id", "ts", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _make_ewm_fn(alpha),
-        outputStructType=EWM_OUTPUT_SCHEMA,
-        stateStructType=EWM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+def _per_user(
+    events: DataFrame,
+    cols: tuple[str, ...],
+    fn,
+    output: T.StructType,
+    state: T.StructType,
+    mode: str = "append",
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """The one per-user state call every operator here makes:
+    project ``cols``, group by user_id, run ``fn`` with managed state."""
+    return events.select(*cols).groupBy("user_id").applyInPandasWithState(
+        fn,
+        outputStructType=output,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
+def _ewm_fn(
+    key: Any, pdf_iter: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    last: float | None
+    n: int
+    if state.exists:
+        last, n = state.get
+    else:
+        last, n = None, 0
+    # Drain the WHOLE group before sorting: a group whose rows span
+    # an Arrow record-batch boundary arrives as multiple chunks in
+    # shuffle (arbitrary) order, so per-chunk sorting silently
+    # processes out of event-time order.  Found by the round-8
+    # 8x-scale differential — at sf0.01 no group ever split, at 8x
+    # ~1-in-150 groups did.  Memory stays bounded by one KEY's
+    # micro-batch rows, the same bound the recurrence itself needs.
+    chunks = [p for p in pdf_iter if len(p)]
+    for pdf in ([pd.concat(chunks, ignore_index=True)] if chunks else []):
+        pdf = pdf.sort_values(["ts", "event_id"])
+        out = []
+        for v in pdf["value"]:
+            v = float(v)
+            last = v if last is None else EWM_ALPHA * v + _EWM_ONE_MINUS * last
+            out.append(last)
+            n += 1
+        pdf = pdf.assign(ewm03=out)
+        yield pdf[["user_id", "event_id", "value", "ewm03"]]
+    if last is not None:
+        state.update((last, n))
+
+
+def streaming_ewm(events: DataFrame) -> DataFrame:
+    """Per-user streaming EWM (alpha EWM_ALPHA).  applyInPandasWithState
+    requires a stream; batch callers use the batch q_ewm instead."""
+    return _per_user(
+        events,
+        ("user_id", "event_id", "ts", "value"),
+        _ewm_fn,
+        EWM_OUTPUT_SCHEMA,
+        EWM_STATE_SCHEMA,
     )
 
 
@@ -131,7 +151,10 @@ def _running_stats_fn(
         if len(pdf):
             bmax = float(pdf["value"].max())
             vmax = bmax if vmax is None else max(vmax, bmax)
-        cents += int(pdf["value"].mul(100).round(0).astype("int64").sum())
+        # round half away from zero, as Spark's round and the oracle's
+        # do (pandas' round is half-to-even)
+        c = pdf["value"].to_numpy() * 100
+        cents += int(np.copysign(np.floor(np.abs(c) + 0.5), c).astype("int64").sum())
     state.update((n, vmax, cents))
     yield pd.DataFrame(
         {
@@ -146,13 +169,13 @@ def _running_stats_fn(
 def streaming_running_stats(events: DataFrame) -> DataFrame:
     """Per-user running (count, max, exact-cents sum) through
     ``applyInPandasWithState``."""
-    keyed = events.select("user_id", "value").groupBy("user_id")
-    return keyed.applyInPandasWithState(
+    return _per_user(
+        events,
+        ("user_id", "value"),
         _running_stats_fn,
-        outputStructType=RUNNING_STATS_OUTPUT_SCHEMA,
-        stateStructType=_RUNNING_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        RUNNING_STATS_OUTPUT_SCHEMA,
+        _RUNNING_STATE_SCHEMA,
+        mode="update",
     )
 
 
@@ -185,7 +208,7 @@ def _funnel_advance(
     1 h].  Returns the group's advance rows (no frame for an empty
     group) and the new (t1, t2, t3)."""
     # Whole-group drain before sorting: Arrow batch-boundary splits
-    # deliver a group as multiple arbitrary-order chunks (see ewm_fn;
+    # deliver a group as multiple arbitrary-order chunks (see _ewm_fn;
     # found by the round-8 8x differential).
     chunks = [p for p in pdf_iter if len(p)]
     if not chunks:
@@ -241,16 +264,27 @@ def _funnel_fn(
     state.update(t)
 
 
+_FUNNEL_COLS = ("user_id", "event_id", "ts", "event_type")
+
+
 def streaming_funnel(events: DataFrame) -> DataFrame:
     """Per-user stateful funnel over the event stream."""
-    return events.select("user_id", "event_id", "ts", "event_type").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _funnel_fn,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_user(
+        events, _FUNNEL_COLS, _funnel_fn, FUNNEL_OUTPUT_SCHEMA, FUNNEL_STATE_SCHEMA
+    )
+
+
+def _watermarked_funnel(events: DataFrame, fn, timeout: str) -> DataFrame:
+    """A funnel machine behind the 1 h event-time watermark.
+    ``event_time`` must survive the projection or the watermark filter
+    is lost."""
+    return _per_user(
+        events.withWatermark("event_time", WATERMARK),
+        (*_FUNNEL_COLS, "event_time"),
+        fn,
+        FUNNEL_OUTPUT_SCHEMA,
+        FUNNEL_STATE_SCHEMA,
+        timeout=timeout,
     )
 
 
@@ -260,17 +294,8 @@ def streaming_funnel_late(events: DataFrame) -> DataFrame:
     them (measured boundary on Spark 4.1: a row survives iff
     ts_us > watermark_ms * 1000, strictly).  State itself is never
     evicted (NoTimeout) — this is the late-DATA axis; see
-    streaming_funnel_ttl for state eviction.  ``event_time`` must
-    survive the projection or the watermark filter is lost."""
-    return events.withWatermark("event_time", "1 hour").select(
-        "user_id", "event_id", "ts", "event_type", "event_time"
-    ).groupBy("user_id").applyInPandasWithState(
-        _funnel_fn,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    streaming_funnel_ttl for state eviction."""
+    return _watermarked_funnel(events, _funnel_fn, GroupStateTimeout.NoTimeout)
 
 
 def _funnel_ttl_fn(
@@ -325,12 +350,6 @@ def _funnel_ttl_fn(
 
 def streaming_funnel_ttl(events: DataFrame) -> DataFrame:
     """Funnel with event-time TTL eviction (1 h watermark)."""
-    return events.withWatermark("event_time", "1 hour").select(
-        "user_id", "event_id", "ts", "event_type", "event_time"
-    ).groupBy("user_id").applyInPandasWithState(
-        _funnel_ttl_fn,
-        outputStructType=FUNNEL_OUTPUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _watermarked_funnel(
+        events, _funnel_ttl_fn, GroupStateTimeout.EventTimeTimeout
     )

@@ -65,9 +65,7 @@ def test_sliding_stream_matches_batch(spark):
 
 def test_dedup_within_watermark_drops_dupes(spark):
     deduped = run_available_now(
-        dedup_within_watermark(
-            events_stream(spark, SF_DIR), keys=["user_id", "event_type"]
-        ),
+        dedup_within_watermark(events_stream(spark, SF_DIR)),
         output_mode="append",
     )
     got = deduped.select("user_id", "event_type").toPandas()
@@ -181,8 +179,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
         _time.sleep(1.1)  # file-source batch order = mtime order
 
     sdf = tumbling_counts(
-        events_stream(spark, str(src), max_files_per_trigger=1, glob="chunk*.parquet"),
-        watermark="1 hour",
+        events_stream(spark, str(src), max_files_per_trigger=1, glob="chunk*.parquet")
     )
     name = "late" + uuid.uuid4().hex[:8]
     q = (
@@ -646,10 +643,7 @@ def test_stateful_kernels_tolerate_arrow_chunk_splits(spark, tmp_path):
     try:
         got = (
             run_available_now(
-                streaming_ewm(
-                    events_stream(spark, str(src), glob="chunk*.parquet"),
-                    alpha=0.3,
-                ),
+                streaming_ewm(events_stream(spark, str(src), glob="chunk*.parquet")),
                 output_mode="append",
             )
             .toPandas()
@@ -743,3 +737,91 @@ def test_funnel_advance_hop_bounds(state, event_type, ts, advances):
         assert after == state
         assert out.empty
     assert _funnel_advance(iter([]), *state) == ([], state)
+
+
+class _StubState:
+    exists = False
+
+    def update(self, value):
+        self.value = value
+
+
+@pytest.mark.parametrize("value, cents", [(1.125, 113), (-1.125, -113)])
+def test_running_stats_cents_round_half_away_from_zero(value, cents):
+    # Spark-free: 1.125 * 100 is exactly 112.5, which Spark's round and
+    # the DuckDB oracle both take away from zero (pandas' round gives
+    # the even neighbour, 112).
+    from nfl26_bigdatabowl_prediction_spark.streaming.stateful import (
+        _running_stats_fn,
+    )
+
+    state = _StubState()
+    (out,) = _running_stats_fn((7,), iter([pd.DataFrame({"value": [value]})]), state)
+    assert state.value == (1, value, cents)
+    assert out["value_sum"].tolist() == [cents / 100.0]
+
+
+def test_stream_join_skips_the_no_data_batch(spark):
+    """q_stream_join runs on the no-data-batch-off twin: its inner join
+    cannot emit on a watermark-only batch, so the drain is one
+    micro-batch.  The left-outer twin keeps the trailing batch whose
+    eviction emits the null-padded rows.  Neither output shows the
+    batch count, so it is pinned here."""
+    import threading
+    import time as _time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from nfl26_bigdatabowl_prediction_spark.plans.streaming_q import QUERIES
+    from nfl26_bigdatabowl_prediction_spark.streaming.source import (
+        stream_exec_session,
+    )
+
+    lock = threading.Lock()
+    batches: dict[str, set[int]] = {}
+    done: set[str] = set()
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            with lock:
+                batches.setdefault(str(event.runId), set())
+
+        def onQueryProgress(self, event):
+            with lock:
+                batches.setdefault(str(event.progress.runId), set()).add(
+                    event.progress.batchId
+                )
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            with lock:
+                done.add(str(event.runId))
+
+    def drained_batches(name: str) -> int:
+        with lock:
+            batches.clear()
+            done.clear()
+        QUERIES[name](spark, SF_DIR)
+        deadline = _time.time() + 30
+        while _time.time() < deadline:
+            with lock:
+                if batches and set(batches) <= done:
+                    break
+            _time.sleep(0.1)
+        _time.sleep(2)  # a progress event can trail the termination event
+        with lock:
+            (run,) = batches.values()  # one drain per query
+            return len(run)
+
+    listener = Listener()
+    twins = [stream_exec_session(spark, no_data_batches=b) for b in (False, True)]
+    for twin in twins:
+        twin.streams.addListener(listener)
+    try:
+        assert drained_batches("q_stream_join") == 1
+        assert drained_batches("q_stream_join_left") > 1
+    finally:
+        for twin in twins:
+            twin.streams.removeListener(listener)
