@@ -13,7 +13,10 @@ Named queries run alone, and only a full-registry run appends its
 full line to BENCH_HISTORY.jsonl.
 
 Each query is forced end-to-end with the noop sink (full physical
-execution, no driver-side collect cost).
+execution, no driver-side collect cost).  No plan leaves an
+intermediate in the session cache, so a measured pass reads nothing an
+earlier pass or query computed: every per-query min pays the query's
+whole cost (tests/test_materialization.py pins that).
 
 --eventlog runs the session with a Spark event log in a temp dir and,
 before the JSON lines, prints one row per query averaged over the

@@ -71,43 +71,49 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Triangle count per node — the clustering-coefficient numerator.
-# Enumeration on the ordered graph: wedge join (e1.dst = e2.src keeps
-# a<b<c wedges only) then a closing-edge semi-check; each triangle is
-# found exactly once and credits all three corners.
-# --------------------------------------------------------------------------
-@q(
-    "q_triangle_count",
-    f"""
-    WITH e AS ({_EDGE_SQL}),
-    tri AS (
+# The graph building blocks, each once in Spark and once in oracle SQL:
+# the symmetric adjacency, the degree table, the ordered-wedge triangle
+# enumeration and the label-propagation rounds.
+def _adj_sql(adj: str = "adj", e: str = "e") -> str:
+    return (
+        f"{adj} AS (SELECT src AS part, dst AS nbr FROM {e}\n"
+        f"{' ' * (len(adj) + 9)}UNION ALL SELECT dst, src FROM {e})"
+    )
+
+
+_DEG_SQL = "deg AS (SELECT part, COUNT(*) AS deg FROM adj GROUP BY part)"
+_TRI_SQL = """tri AS (
         SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
         FROM e e1
         JOIN e e2 ON e1.dst = e2.src
         JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst
-    ),
-    corners AS (
-        SELECT a AS part FROM tri
-        UNION ALL SELECT b FROM tri
-        UNION ALL SELECT c FROM tri
+    )"""
+
+
+def _adjacency(e: DataFrame) -> DataFrame:
+    """(part, nbr): every undirected edge in both directions."""
+    return e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
+        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
     )
-    SELECT part, COUNT(*) AS n_triangles
-    FROM corners GROUP BY part
-    """,
-)
-def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir).cache()
-    # The support-pruned edge list is usually broadcast-sized (17.5 K
-    # rows at sf0.1); broadcasting BOTH join arms makes the whole
-    # enumeration map-side — the only shuffle left is the corner
-    # count.  Past the gate (edge lists that genuinely exceed
-    # executor memory) fall back to shuffled hash joins — the same
-    # two-strategy pattern as operators/components.py.  Measured
-    # min-of-3 at sf0.1: 3.7 s → 2.0 s (the remaining cost is the
-    # corner-count aggregation over the enumerated triangles).
-    n_e = e.count()
-    b = F.broadcast if n_e <= 5_000_000 else (lambda d: d)
+
+
+def _degrees(adj: DataFrame) -> DataFrame:
+    """(part, deg) over a symmetric adjacency."""
+    return adj.groupBy("part").agg(F.count(F.lit(1)).alias("deg"))
+
+
+def _triangles(e: DataFrame):
+    """Every triangle a<b<c of the materialized ordered edge list ``e``
+    once, as (a, b, c): the wedge join e1.dst = e2.src keeps a<b<c
+    wedges only, then a closing-edge check.  The support-pruned edge
+    list is usually broadcast-sized (17.5 K rows at sf0.1), so both
+    join arms broadcast and the enumeration is map-side; past the gate
+    (edge lists that genuinely exceed executor memory) it falls back
+    to shuffled hash joins, the two-strategy pattern of
+    operators/components.py.  Returns (triangles, the gate's broadcast
+    function) so a caller joining another edge-sized table follows the
+    same gate."""
+    b = F.broadcast if e.count() <= 5_000_000 else (lambda d: d)
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
         e1.join(b(e2), F.col("e1.dst") == F.col("e2.src"))
@@ -122,6 +128,95 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e2.dst").alias("c"),
         )
     )
+    return tri, b
+
+
+# Label propagation (community detection): synchronized rounds of the
+# classic LPA update (Raghavan et al. 2007): every node adopts the most
+# frequent label among its neighbors, ties broken by the smallest label
+# (the deterministic variant; vanilla LPA's random tie-break can't be
+# oracle-checked).  Each round is one join of the adjacency against the
+# node-sized label table (broadcast), one (part, label) aggregation and
+# one per-node arg-max window; localCheckpoint truncates the per-round
+# lineage.
+def _lp_rounds_sql(rounds: int) -> str:
+    """The oracle's edge, adjacency and lab0..lab{rounds} CTEs."""
+    head = f"""
+    WITH e AS ({_EDGE_SQL}),
+    {_adj_sql()},
+    lab0 AS (SELECT DISTINCT part, part AS label FROM adj)
+    """
+    body = ""
+    for i in range(1, rounds + 1):
+        body += f""",
+    cnt{i} AS (
+        SELECT adj.part, l.label, COUNT(*) AS cnt
+        FROM adj JOIN lab{i - 1} l ON l.part = adj.nbr
+        GROUP BY adj.part, l.label
+    ),
+    lab{i} AS (
+        SELECT part, label FROM (
+            SELECT part, label,
+                   ROW_NUMBER() OVER (PARTITION BY part
+                                      ORDER BY cnt DESC, label ASC) AS rn
+            FROM cnt{i}
+        ) WHERE rn = 1
+    )"""
+    return head + body
+
+
+def _label_rounds(adj: DataFrame, rounds: int) -> DataFrame:
+    """(part, label) after ``rounds`` LPA rounds over a materialized
+    adjacency."""
+    from pyspark.sql.window import Window as W
+
+    lab = adj.select("part").distinct().select("part", F.col("part").alias("label"))
+    rn = F.row_number().over(
+        W.partitionBy("part").orderBy(F.col("cnt").desc(), F.col("label").asc())
+    )
+    for _ in range(rounds):
+        nbr_lab = lab.select(F.col("part").alias("nbr"), "label")
+        lab = (
+            adj.join(F.broadcast(nbr_lab), "nbr")
+            # one exchange per round: hash(part) serves both the
+            # (part, label) count and the per-part window (a checkpoint
+            # does not carry a partitioning into the next round)
+            .repartition("part")
+            .groupBy("part", "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .withColumn("rn", rn)
+            .filter(F.col("rn") == 1)
+            .select("part", "label")
+            .localCheckpoint(eager=False)
+        )
+    return lab
+
+
+# --------------------------------------------------------------------------
+# Triangle count per node — the clustering-coefficient numerator.
+# Enumeration on the ordered graph: wedge join (e1.dst = e2.src keeps
+# a<b<c wedges only) then a closing-edge semi-check; each triangle is
+# found exactly once and credits all three corners.
+# --------------------------------------------------------------------------
+@q(
+    "q_triangle_count",
+    f"""
+    WITH e AS ({_EDGE_SQL}),
+    {_TRI_SQL},
+    corners AS (
+        SELECT a AS part FROM tri
+        UNION ALL SELECT b FROM tri
+        UNION ALL SELECT c FROM tri
+    )
+    SELECT part, COUNT(*) AS n_triangles
+    FROM corners GROUP BY part
+    """,
+)
+def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the edge list feeds all three arms of the enumeration: the only
+    # shuffle left is the corner count (measured min-of-3 at sf0.1 with
+    # both arms broadcast: 3.7 s → 2.0 s)
+    tri, _ = _triangles(_edges(spark, sf_dir).localCheckpoint(eager=False))
     corners = (
         tri.select(F.col("a").alias("part"))
         .unionAll(tri.select(F.col("b").alias("part")))
@@ -142,9 +237,8 @@ def _pr_oracle() -> str:
     everywhere — DuckDB widens integer SUM to HUGEINT."""
     head = f"""
     WITH e AS ({_EDGE_SQL}),
-    adj AS (SELECT src AS part, dst AS nbr FROM e
-            UNION ALL SELECT dst, src FROM e),
-    deg AS (SELECT part, COUNT(*) AS deg FROM adj GROUP BY part),
+    {_adj_sql()},
+    {_DEG_SQL},
     nodes AS (SELECT part FROM deg),
     nn AS (SELECT COUNT(*) AS n FROM nodes),
     pr0 AS (SELECT part, (SELECT 1000000 // n FROM nn) AS pr_u FROM nodes)
@@ -169,26 +263,19 @@ def _pr_oracle() -> str:
 
 @q("q_pagerank", _pr_oracle())
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
     # Symmetric adjacency with the DESTINATION's own degree baked in
-    # once before the loop (one join, cached): each iteration is then
-    # exactly one broadcast of the node-sized rank table plus one
-    # per-node aggregation — no in-loop joins.  Every node has
-    # degree ≥ 1, so the contribution agg covers the full node set
-    # and no completion outer-join is needed.
-    adj = e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
-    )
-    deg = adj.groupBy("part").agg(F.count(F.lit(1)).alias("deg"))
+    # once before the loop (one join, materialized): each iteration is
+    # then one broadcast of the node-sized rank table plus one per-node
+    # aggregation (one shuffle of the adjacency's contributions) — no
+    # in-loop joins.  Every node has degree ≥ 1, so the contribution
+    # agg covers the full node set and no completion outer-join is
+    # needed.
+    adj = _adjacency(_edges(spark, sf_dir))
+    deg = _degrees(adj)
     # each sharer divides by its OWN degree (carried on the rank
     # table); adj carries the receiving part's degree so the next
     # iteration's rank table stays self-contained.
-    # Pre-partition the cached adjacency on the aggregation key: the
-    # HashPartitioning(part) output satisfies every iteration's
-    # groupBy("part") ClusteredDistribution, so the 3 contribution
-    # aggregations run with ZERO further exchanges — the loop's only
-    # per-iteration wire cost is the node-sized rank broadcast.
-    adj = adj.join(F.broadcast(deg), "part").repartition("part").cache()
+    adj = adj.join(F.broadcast(deg), "part").localCheckpoint(eager=False)
     n = deg.count()  # node count: one tiny job, drives the teleport literal
     teleport = 150000 // n
     pr = deg.select("part", "deg", F.lit(1000000 // n).cast("long").alias("pr_u"))
@@ -224,19 +311,14 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_degree_dist",
     f"""
     WITH e AS ({_EDGE_SQL}),
-    adj AS (SELECT src AS part, dst AS nbr FROM e
-            UNION ALL SELECT dst, src FROM e),
-    deg AS (SELECT part, COUNT(*) AS deg FROM adj GROUP BY part)
+    {_adj_sql()},
+    {_DEG_SQL}
     SELECT CAST(deg AS BIGINT) AS degree, CAST(COUNT(*) AS BIGINT) AS n_parts
     FROM deg GROUP BY 1
     """,
 )
 def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    adj = e.select(F.col("src").alias("part")).unionAll(
-        e.select(F.col("dst").alias("part"))
-    )
-    deg = adj.groupBy("part").agg(F.count(F.lit(1)).alias("deg"))
+    deg = _degrees(_adjacency(_edges(spark, sf_dir)))
     return deg.groupBy(F.col("deg").cast("bigint").alias("degree")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_parts")
     )
@@ -257,15 +339,9 @@ def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_link_predict",
     f"""
     WITH e AS ({_EDGE_SQL}),
-    adj AS (SELECT src AS part, dst AS nbr FROM e
-            UNION ALL SELECT dst, src FROM e),
-    deg AS (SELECT part, COUNT(*) AS deg FROM adj GROUP BY part),
-    tri AS (
-        SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-        FROM e e1
-        JOIN e e2 ON e1.dst = e2.src
-        JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst
-    ),
+    {_adj_sql()},
+    {_DEG_SQL},
+    {_TRI_SQL},
     pair_cn AS (
         SELECT src, dst, CAST(COUNT(*) AS BIGINT) AS cn FROM (
             SELECT a AS src, b AS dst FROM tri
@@ -284,23 +360,8 @@ def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir).cache()
-    n_e = e.count()
-    b = F.broadcast if n_e <= 5_000_000 else (lambda d: d)
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(b(e2), F.col("e1.dst") == F.col("e2.src"))
-        .join(
-            b(e3),
-            (F.col("e3.src") == F.col("e1.src"))
-            & (F.col("e3.dst") == F.col("e2.dst")),
-        )
-        .select(
-            F.col("e1.src").alias("a"),
-            F.col("e1.dst").alias("b"),
-            F.col("e2.dst").alias("c"),
-        )
-    )
+    e = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    tri, b = _triangles(e)
     pair_cn = (
         tri.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(tri.select(F.col("a").alias("src"), F.col("c").alias("dst")))
@@ -308,10 +369,7 @@ def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cn"))
     )
-    adj = e.select(F.col("src").alias("part")).unionAll(
-        e.select(F.col("dst").alias("part"))
-    )
-    deg = adj.groupBy("part").agg(F.count(F.lit(1)).alias("deg"))
+    deg = _degrees(_adjacency(e))
     cn = F.coalesce(F.col("cn"), F.lit(0))
     return (
         e.join(b(pair_cn), ["src", "dst"], "left")
@@ -351,8 +409,7 @@ def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_bfs_levels",
     f"""
     WITH RECURSIVE e AS ({_EDGE_SQL}),
-    adj AS (SELECT src AS part, dst AS nbr FROM e
-            UNION ALL SELECT dst, src FROM e),
+    {_adj_sql()},
     seed AS (SELECT MIN(part) AS s FROM adj),
     bfs AS (
         SELECT (SELECT s FROM seed) AS part, 0 AS lvl
@@ -366,10 +423,7 @@ def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    adj = e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
-    ).cache()
+    adj = _adjacency(_edges(spark, sf_dir)).localCheckpoint(eager=False)
     seed = adj.agg(F.min("part")).first()[0]  # 1-row driver fetch, like q_pagerank's n
     visited = (
         adj.sparkSession.createDataFrame([(seed, 0)], "part bigint, level int")
@@ -495,79 +549,26 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Label propagation (community detection) — 3 synchronized rounds of
-# the classic LPA update (Raghavan et al. 2007): every node adopts
-# the most frequent label among its neighbors, ties broken by the
-# smallest label (the deterministic variant — vanilla LPA's random
-# tie-break can't be oracle-checked).  Distinct from the components
-# pointer-jumping in operators/components.py: min-convergence finds
-# connectivity, frequency-convergence finds dense communities.
-# Scale: each round is one join of the cached pre-partitioned
-# adjacency against the node-sized label table (broadcast) + one
-# (part, label) aggregation + one per-node arg-max window — all keyed
-# by part, so the repartition("part") adjacency satisfies every
-# round's distribution with zero further fact exchanges, the same
-# zero-exchange loop as q_pagerank.  localCheckpoint truncates the
-# per-round lineage.
+# Label propagation — 3 rounds of _label_rounds, then per-community
+# size and key range.  Distinct from the components pointer-jumping in
+# operators/components.py: min-convergence finds connectivity,
+# frequency-convergence finds dense communities.
 # --------------------------------------------------------------------------
-def _lp_oracle() -> str:
-    head = f"""
-    WITH e AS ({_EDGE_SQL}),
-    adj AS (SELECT src AS part, dst AS nbr FROM e
-            UNION ALL SELECT dst, src FROM e),
-    lab0 AS (SELECT DISTINCT part, part AS label FROM adj)
-    """
-    body = ""
-    for i in range(1, 4):
-        body += f""",
-    cnt{i} AS (
-        SELECT adj.part, l.label, COUNT(*) AS cnt
-        FROM adj JOIN lab{i - 1} l ON l.part = adj.nbr
-        GROUP BY adj.part, l.label
-    ),
-    lab{i} AS (
-        SELECT part, label FROM (
-            SELECT part, label,
-                   ROW_NUMBER() OVER (PARTITION BY part
-                                      ORDER BY cnt DESC, label ASC) AS rn
-            FROM cnt{i}
-        ) WHERE rn = 1
-    )"""
-    tail = """
+@q(
+    "q_label_propagation",
+    _lp_rounds_sql(3)
+    + """
     SELECT l.label AS community, CAST(COUNT(*) AS BIGINT) AS n_members,
            MIN(l.part) AS min_part, MAX(l.part) AS max_part
     FROM lab3 l
     GROUP BY l.label
-    """
-    return head + body + tail
-
-
-@q("q_label_propagation", _lp_oracle())
+    """,
+)
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    e = _edges(spark, sf_dir)
-    adj = e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
-    )
-    adj = adj.repartition("part").cache()
-    lab = adj.select("part").distinct().select("part", F.col("part").alias("label"))
-    rn = F.row_number().over(
-        W.partitionBy("part").orderBy(F.col("cnt").desc(), F.col("label").asc())
-    )
-    for _ in range(3):
-        nbr_lab = lab.select(F.col("part").alias("nbr"), "label")
-        lab = (
-            adj.join(F.broadcast(nbr_lab), "nbr")
-            .groupBy("part", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("rn", rn)
-            .filter(F.col("rn") == 1)
-            .select("part", "label")
-            .localCheckpoint(eager=False)
-        )
+    adj = _adjacency(_edges(spark, sf_dir)).localCheckpoint(eager=False)
     return (
-        lab.groupBy(F.col("label").alias("community"))
+        _label_rounds(adj, 3)
+        .groupBy(F.col("label").alias("community"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
             F.min("part").alias("min_part"),
@@ -594,8 +595,7 @@ _KCORE_K = 3
 def _kcore_oracle() -> str:
     head = f"""
     WITH e0 AS ({_EDGE_SQL}),
-    adj0 AS (SELECT src AS part, dst AS nbr FROM e0
-             UNION ALL SELECT dst, src FROM e0)
+    {_adj_sql("adj0", "e0")}
     """
     body = ""
     for i in range(1, 4):
@@ -618,20 +618,9 @@ def _kcore_oracle() -> str:
 
 @q("q_kcore", _kcore_oracle())
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    adj = e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
-    )
-    # one partitioning serves every round's degree groupBy and the
-    # part-side semi-join
-    adj = adj.repartition("part").localCheckpoint(eager=False)
+    adj = _adjacency(_edges(spark, sf_dir)).localCheckpoint(eager=False)
     for _ in range(3):
-        keep = (
-            adj.groupBy("part")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= _KCORE_K)
-            .select("part")
-        )
+        keep = _degrees(adj).filter(F.col("deg") >= _KCORE_K).select("part")
         adj = (
             adj.join(F.broadcast(keep), "part")
             .join(
@@ -764,28 +753,6 @@ def q_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # m is a 1-row broadcast.
 # --------------------------------------------------------------------------
 def _modularity_oracle() -> str:
-    head = f"""
-    WITH e AS ({_EDGE_SQL}),
-    adj AS (SELECT src AS part, dst AS nbr FROM e
-            UNION ALL SELECT dst, src FROM e),
-    lab0 AS (SELECT DISTINCT part, part AS label FROM adj)
-    """
-    body = ""
-    for i in range(1, 3):
-        body += f""",
-    cnt{i} AS (
-        SELECT adj.part, l.label, COUNT(*) AS cnt
-        FROM adj JOIN lab{i - 1} l ON l.part = adj.nbr
-        GROUP BY adj.part, l.label
-    ),
-    lab{i} AS (
-        SELECT part, label FROM (
-            SELECT part, label,
-                   ROW_NUMBER() OVER (PARTITION BY part
-                                      ORDER BY cnt DESC, label ASC) AS rn
-            FROM cnt{i}
-        ) WHERE rn = 1
-    )"""
     tail = """,
     m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM e),
     deg AS (SELECT part, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY part),
@@ -814,41 +781,21 @@ def _modularity_oracle() -> str:
     LEFT JOIN intra i ON i.community = c.community
     CROSS JOIN m
     """
-    return head + body + tail
+    return _lp_rounds_sql(2) + tail
 
 
 @q("q_modularity", _modularity_oracle())
 def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    e = _edges(spark, sf_dir).cache()
-    adj = e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
-    )
-    adj = adj.repartition("part").cache()
-    lab = adj.select("part").distinct().select("part", F.col("part").alias("label"))
-    rn = F.row_number().over(
-        W.partitionBy("part").orderBy(F.col("cnt").desc(), F.col("label").asc())
-    )
-    for _ in range(2):
-        nbr_lab = lab.select(F.col("part").alias("nbr"), "label")
-        lab = (
-            adj.join(F.broadcast(nbr_lab), "nbr")
-            .groupBy("part", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .withColumn("rn", rn)
-            .filter(F.col("rn") == 1)
-            .select("part", "label")
-            .localCheckpoint(eager=False)
-        )
+    e = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    adj = _adjacency(e).localCheckpoint(eager=False)
+    lab = _label_rounds(adj, 2)
     m = e.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
-    deg = adj.groupBy("part").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     comm = (
-        lab.join(deg, "part")
+        lab.join(_degrees(adj), "part")
         .groupBy(F.col("label").alias("community"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
-            F.sum("d").cast("bigint").alias("deg_sum"),
+            F.sum("deg").cast("bigint").alias("deg_sum"),
         )
     )
     ls = lab.select(F.col("part").alias("src"), F.col("label").alias("l_src"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..scratch import checkpoint_parquet
 from ..sources.io import table
 from .registry import registrar
 
@@ -387,8 +388,6 @@ _MV_KEY_DUCK = "strftime(date_trunc('month', o_orderdate), '%Y-%m-%d')"
     """,
 )
 def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..scratch import scratch_dir
-
     cutoff = "2001-01-01"
     key = F.date_format(F.date_trunc("month", F.col("o_orderdate")), "yyyy-MM-dd")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
@@ -408,11 +407,10 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders")
     # "stored" MV: aggregate the base partition once, persist, read back
     # — the refresh below never touches base facts again.
-    mv_path = scratch_dir("mv_base_")
-    agg(o.filter(F.col("o_orderdate") < F.lit(cutoff).cast("timestamp"))).write.mode(
-        "overwrite"
-    ).parquet(mv_path)
-    mv = spark.read.parquet(mv_path).alias("b")
+    mv = checkpoint_parquet(
+        agg(o.filter(F.col("o_orderdate") < F.lit(cutoff).cast("timestamp"))),
+        "mv_base_",
+    ).alias("b")
     delta = agg(
         o.filter(F.col("o_orderdate") >= F.lit(cutoff).cast("timestamp"))
     ).alias("d")

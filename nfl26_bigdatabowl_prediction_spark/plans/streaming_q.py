@@ -154,7 +154,9 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming exact dedup with bounded state: distinct (user_id,
 # event_type) keys via dropDuplicatesWithinWatermark.  Only the key
 # columns are returned — first-seen-wins payloads depend on arrival
-# order, the key set itself does not.
+# order, the key set itself does not.  Append-mode dedup emits only on
+# data arrival, so the drain skips the trailing no-data batch (as
+# q_stream_join does; pinned by tests/test_streaming.py).
 # --------------------------------------------------------------------------
 @q(
     "q_stream_dedup",
@@ -165,7 +167,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import dedup_within_watermark
 
-    ev = events_stream(spark, sf_dir)
+    ev = events_stream(spark, sf_dir, no_data_batches=False)
     deduped = dedup_within_watermark(ev)
     return run_available_now(
         deduped.select("user_id", "event_type"), output_mode="append"

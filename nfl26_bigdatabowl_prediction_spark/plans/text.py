@@ -31,6 +31,7 @@ from ..functions.portable import (
     portable_hash_sql_duckdb,
     portable_hash_sql_spark,
 )
+from ..scratch import checkpoint_parquet
 from ..sources.io import spread_scan, table
 from .registry import registrar
 
@@ -2086,8 +2087,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from nfl26_bigdatabowl_prediction_spark.scratch import scratch_dir
-
     d = table(spark, sf_dir, "documents")
     shingled = (
         _with_words(d, "doc_id")
@@ -2095,25 +2094,16 @@ def q_setsim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.expr(_SHINGLES_FROM_WORDS).alias("els"))
         .select("doc_id", "els", F.size("els").alias("sz"))
     )
-    # Checkpoint the shingle projection to a per-invocation temp
-    # parquet: CollapseProject would otherwise inline the transform()
-    # into the downstream Generate, where it is re-evaluated per
-    # EMITTED element (O(|els|²) per doc — measured 13.7 s vs 0.3 s
-    # for the explode alone at sf0.1), and the plan consumes `els`
-    # three times (token explode + both verify arms).  A parquet
-    # checkpoint pays ONE columnar write and streams three scans —
-    # unlike the previous `.cache()` + eager `count()`, it holds
-    # nothing corpus-sized in executor storage, so the shape survives
-    # 100 TB (the write is parallel and the three readers get
-    # column-pruned scans: the token explode reads only doc_id/els,
-    # the verify arms read the full row).  scratch_dir ties the
-    # checkpoint's lifetime to the process (atexit rmtree): the
-    # returned DataFrame reads it lazily, so deletion inside this
-    # function would break the caller, but repeated bench/driver runs
-    # must not accumulate /tmp copies.
-    ckpt = scratch_dir("setsim_shingles_")
-    shingled.write.mode("overwrite").parquet(ckpt)
-    sized = spark.read.parquet(ckpt)
+    # Checkpoint the shingle projection to scratch parquet:
+    # CollapseProject would otherwise inline the transform() into the
+    # downstream Generate, where it is re-evaluated per EMITTED element
+    # (O(|els|²) per doc — measured 13.7 s vs 0.3 s for the explode
+    # alone at sf0.1), and the plan consumes `els` three times (token
+    # explode + both verify arms).  The checkpoint pays ONE columnar
+    # write and streams three column-pruned scans (the token explode
+    # reads only doc_id/els, the verify arms the full row), and holds
+    # nothing corpus-sized in executor storage.
+    sized = checkpoint_parquet(shingled, "setsim_shingles_")
     tok = sized.select("doc_id", "sz", F.explode("els").alias("t"))
     df_tab = tok.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
     ranked = tok.join(df_tab, "t").withColumn(
@@ -2683,8 +2673,8 @@ def q_udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: each WORD is polynomial-hashed once (O(total chars),
 # scan-side) and a bigram's bucket combines the two word hashes
 # arithmetically — never re-hashing bigram strings.  The per-doc
-# (bucket, c) rollup is checkpointed to process-scoped parquet
-# (scratch_dir, the q_setsim_join pattern) because FOUR consumers
+# (bucket, c) rollup is checkpointed to scratch parquet
+# (scratch.checkpoint_parquet) because FOUR consumers
 # read it (source model, target model, totals, final scorer) and
 # Spark physical plans do not share subtrees — without the
 # checkpoint the explode runs four times.  Bucket models and the
@@ -2747,8 +2737,6 @@ _DSIR_ORACLE = f"""
 
 @q("q_dsir_weights", _DSIR_ORACLE)
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..scratch import scratch_dir
-
     # per-character hash fold over every word of every doc — the
     # heavy-scan-side shape spread_scan exists for (no-op at scale)
     d = spread_scan(table(spark, sf_dir, "documents"))
@@ -2777,12 +2765,10 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bucket"),
     )
-    rolled = bk.groupBy("doc_id", "lang", "bucket").agg(
-        F.count(F.lit(1)).alias("c")
+    cnt = checkpoint_parquet(
+        bk.groupBy("doc_id", "lang", "bucket").agg(F.count(F.lit(1)).alias("c")),
+        "dsir_cnt_",
     )
-    ckpt = scratch_dir("dsir_cnt_")
-    rolled.write.mode("overwrite").parquet(ckpt)
-    cnt = spark.read.parquet(ckpt)
     src = cnt.groupBy("bucket").agg(F.sum("c").alias("s_cnt"))
     tgt = (
         cnt.filter(F.col("lang") == "en")
@@ -3003,8 +2989,6 @@ def _bpe_merge_rounds(spark: SparkSession, sf_dir: str, carry_word: bool = False
     final segmentation's symbol frequencies; q_bpe_encode passes
     ``carry_word=True`` so the final segmentation stays keyed by the
     surface word (the tokenizer's word→pieces cache)."""
-    from ..scratch import scratch_dir
-
     d = table(spark, sf_dir, "documents")
     keep = ("word",) if carry_word else ()
     vocab0 = (
@@ -3022,9 +3006,7 @@ def _bpe_merge_rounds(spark: SparkSession, sf_dir: str, carry_word: bool = False
             "cnt",
         )
     )
-    ckpt = scratch_dir("bpe_vocab_")
-    vocab0.write.mode("overwrite").parquet(ckpt)
-    vocab = spark.read.parquet(ckpt)
+    vocab = checkpoint_parquet(vocab0, "bpe_vocab_")
 
     merge_fold = (
         "aggregate(slice(syms, 2, size(syms) - 1), element_at(syms, 1), "
@@ -3293,7 +3275,7 @@ def q_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pair table feeds three aggregates + the final join: materialize
     # it once (pair-vocabulary-sized, Zipf-bounded — NOT corpus-sized)
-    pairs = pairs.cache()
+    pairs = pairs.localCheckpoint(eager=False)
     cx = pairs.groupBy("center").agg(F.sum("c_xy").cast("bigint").alias("c_x"))
     cy = pairs.groupBy("context").agg(F.sum("c_xy").cast("bigint").alias("c_y"))
     nn = pairs.agg(F.sum("c_xy").cast("bigint").alias("n"))
@@ -3400,9 +3382,9 @@ def q_keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast(size(split(phrase, ' ')) as bigint)").alias("plen"),
         )
     )
-    # phrase vocabulary feeds word stats AND the score join — cache the
-    # vocab-sized (not corpus-sized) table once.
-    pc = pc.cache()
+    # phrase vocabulary feeds word stats AND the score join —
+    # materialize the vocab-sized (not corpus-sized) table once.
+    pc = pc.localCheckpoint(eager=False)
     pw = pc.select(
         "phrase", "cnt", "plen", F.explode(F.split("phrase", " ")).alias("w")
     )
@@ -3524,6 +3506,8 @@ def _shingle_counts_duck() -> str:
 
 
 def _shingle_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(sh, cnt, h) per distinct shingle, materialized once: every
+    sketch reads it at least twice (the sketch and its exact truth)."""
     d = table(spark, sf_dir, "documents")
     return (
         _with_words(d)
@@ -3538,6 +3522,7 @@ def _shingle_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 knuth_fold_sql(portable_hash_sql_spark("sh"), _SK_MOD32)
             ).alias("h"),
         )
+        .localCheckpoint(eager=False)
     )
 
 
@@ -3574,7 +3559,7 @@ def _shingle_counts_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wc = _shingle_counts_spark(spark, sf_dir).cache()
+    wc = _shingle_counts_spark(spark, sf_dir)
     js = F.explode(F.array(*[F.lit(j) for j in range(_CMS_D)])).alias("j")
     bucket = F.expr(
         f"((h + j * 40503) * 40503) % {_SK_MOD32} % {_CMS_W}"
@@ -3648,7 +3633,7 @@ def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wc = _shingle_counts_spark(spark, sf_dir).cache()
+    wc = _shingle_counts_spark(spark, sf_dir)
     rho = F.expr(
         "CASE WHEN h div 64 = 0 THEN 27 "
         "ELSE 27 - length(bin(h div 64)) END"
@@ -3712,7 +3697,7 @@ _BLOOM_M, _BLOOM_K = 4096, 3
     """,
 )
 def q_bloom_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    wc = _shingle_counts_spark(spark, sf_dir).cache()
+    wc = _shingle_counts_spark(spark, sf_dir)
     js = F.explode(F.array(*[F.lit(j) for j in range(_BLOOM_K)])).alias("j")
     bit = F.expr(f"((h + j * 40503) * 40503) % {_SK_MOD32} % {_BLOOM_M}")
     bits = wc.select("h", js).select(bit.alias("bit")).distinct()

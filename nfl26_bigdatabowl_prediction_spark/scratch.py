@@ -1,7 +1,22 @@
-"""Process-scoped scratch directories for checkpoint-style temp data.
+"""Process-scoped scratch directories for checkpoint-style temp data,
+and the plan layer's one materialization policy.
 
-Queries that materialize an intermediate (e.g. q_setsim_join's
-shingle projection, q_schema_evolution's two parquet versions) return
+An intermediate that several consumers of ONE query read is
+materialized for that query only:
+
+* ``DataFrame.localCheckpoint(eager=False)`` for a node- or
+  vocabulary-sized table (executor storage, gone with the query's
+  DataFrame);
+* ``checkpoint_parquet`` below for one that must spill to columnar
+  storage (corpus-sized, or a stored view the plan re-reads).
+
+Plans never ``.cache()`` / ``.persist()``: Spark's cache manager lives
+as long as the session and matches a later query's subtree by its plan
+alone, not by the files behind it, so a cached intermediate would be
+reused after its input changed on disk.
+
+Queries that materialize to scratch (e.g. q_setsim_join's shingle
+projection, q_schema_evolution's two parquet versions) return
 DataFrames that LAZILY read the materialized files, so the directory
 must outlive the query function — it cannot be deleted inside it.
 Allocating every such directory under one per-process root and
@@ -38,15 +53,16 @@ def scratch_dir(prefix: str) -> str:
 def checkpoint_parquet(df, prefix: str):
     """Materialize ``df`` to scratch parquet and return the re-read frame.
 
-    The house pattern for a subtree with ≥2 consumers: an
-    unmaterialized DataFrame RE-EVALUATES per consumer (Spark reuses
-    Exchanges only within one action), so e.g. a K·n scoring pass or a
-    corpus scan would run once per downstream branch.  A parquet
-    round-trip through the atexit-cleaned scratch root caps that at
-    exactly one evaluation and gives every consumer a column-pruned,
-    stats-backed scan — the same reasoning as ``RDD.checkpoint`` but
-    spill-to-columnar, which is what a 1000-executor job would do with
-    a staging table.
+    The spill-to-disk arm of the policy above, for a subtree with ≥2
+    consumers: an unmaterialized DataFrame RE-EVALUATES per consumer
+    (Spark reuses Exchanges only within one action), so e.g. a K·n
+    scoring pass or a corpus scan would run once per downstream
+    branch.  A parquet round-trip through the atexit-cleaned scratch
+    root caps that at exactly one evaluation and gives every consumer
+    a column-pruned, stats-backed scan — the same reasoning as
+    ``RDD.checkpoint`` but spill-to-columnar, which is what a
+    1000-executor job would do with a staging table.  Every call writes
+    a fresh directory, so nothing is reused across queries.
     """
     path = scratch_dir(prefix) + "/data"
     df.write.mode("overwrite").parquet(path)

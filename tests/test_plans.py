@@ -827,12 +827,9 @@ def test_label_propagation_and_kcore_loop_shape(spark):
     of each loop built from the same adjacency derivation."""
     from pyspark.sql import functions as F
 
-    from nfl26_bigdatabowl_prediction_spark.plans.graph import _edges
+    from nfl26_bigdatabowl_prediction_spark.plans.graph import _adjacency, _edges
 
-    e = _edges(spark, SF_DIR)
-    adj = e.select(F.col("src").alias("part"), F.col("dst").alias("nbr")).unionAll(
-        e.select(F.col("dst").alias("part"), F.col("src").alias("nbr"))
-    ).repartition("part")
+    adj = _adjacency(_edges(spark, SF_DIR))
     # materialize the edge derivation (its lineitem self-join is a
     # legitimate fact SMJ) so the explained plan is the round body only
     adj = adj.localCheckpoint()

@@ -762,11 +762,12 @@ def test_running_stats_cents_round_half_away_from_zero(value, cents):
 
 
 def test_stream_join_skips_the_no_data_batch(spark):
-    """q_stream_join runs on the no-data-batch-off twin: its inner join
-    cannot emit on a watermark-only batch, so the drain is one
-    micro-batch.  The left-outer twin keeps the trailing batch whose
-    eviction emits the null-padded rows.  Neither output shows the
-    batch count, so it is pinned here."""
+    """q_stream_join and q_stream_dedup run on the no-data-batch-off
+    twin: an inner join and an append-mode dedup cannot emit on a
+    watermark-only batch, so the drain is one micro-batch.  The
+    left-outer twin keeps the trailing batch whose eviction emits the
+    null-padded rows.  No output shows the batch count, so it is
+    pinned here."""
     import threading
     import time as _time
 
@@ -822,6 +823,7 @@ def test_stream_join_skips_the_no_data_batch(spark):
     try:
         assert drained_batches("q_stream_join") == 1
         assert drained_batches("q_stream_join_left") > 1
+        assert drained_batches("q_stream_dedup") == 1
     finally:
         for twin in twins:
             twin.streams.removeListener(listener)
